@@ -41,11 +41,17 @@ sampled variant is what the engine ships and oracle-checks.
 from __future__ import annotations
 
 import hashlib
+import re
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dissertation_data_pipeline_spark.session import pin_spread
+
+#: Column names the lsh_bucket SQL fast path may splice in backticks.
+#: Anything else (``a.field`` struct access, names with backticks) goes
+#: through ``F.col``, which resolves them as the caller meant.
+_SIMPLE_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
 def _c(col: Column | str) -> Column:
@@ -121,20 +127,20 @@ def hyperplanes(num_planes: int = 8, dim: int = 64) -> list[list[float]]:
 def lsh_bucket(vec: Column | str, planes: list[list[float]]) -> Column:
     """Sign-of-projection bucket id: bit j = (vec . plane_j) > 0.
 
-    Built as ONE server-side SQL parse when ``vec`` is a plain column
-    name and every coefficient is finite — the per-plane Column build
-    costs ~10 py4j round trips per plane (zip_with + fold + CASE +
-    accumulate), and a banded detector calls this per band: the banded
-    recall verify leg measured 3.0 s of its 4.5 s wall in driver
-    plan-build time alone.  The parsed tree is node-identical to the
-    Column build (same literal doubles via shortest-repr, same cast/
-    multiply/left-fold/CASE nodes), so bucket values are bit-identical
-    — pinned by test_lsh_bucket_expr_parity.  Column inputs and
-    non-finite coefficients keep the slow-but-general path (the
-    ``_lit_doubles`` contract)."""
+    Built as ONE server-side SQL parse when ``vec`` is a simple
+    identifier (``_SIMPLE_IDENT``) and every coefficient is finite —
+    the per-plane Column build costs ~10 py4j round trips per plane
+    (zip_with + fold + CASE + accumulate), and a banded detector calls
+    this per band: the banded recall verify leg measured 3.0 s of its
+    4.5 s wall in Python-side plan-build time alone.  The parsed tree is
+    node-identical to the Column build (same literal doubles via
+    shortest-repr, same cast/multiply/left-fold/CASE nodes), so bucket
+    values are bit-identical — pinned by test_lsh_bucket_expr_parity.
+    Column inputs, other names and non-finite coefficients keep the
+    slow-but-general path (the ``_lit_doubles`` contract)."""
     import math
 
-    if isinstance(vec, str) and all(
+    if isinstance(vec, str) and _SIMPLE_IDENT.fullmatch(vec) and all(
         math.isfinite(float(c)) for plane in planes for c in plane
     ):
         terms = []

@@ -54,292 +54,14 @@ def register(name: str, sql: str | None):
     return deco
 
 
-#: Names the external correctness gate should check FIRST.  The gate
-#: walks ``queries()`` in dict order with a bounded budget (round 1
-#: covered exactly the first 50 entries), so ordering is coverage
-#: policy: queries whose gate status must change this round (fixed
-#: hash/canon bugs, newly added oracles) come first, then queries the
-#: gate has never checked; queries with green recorded rows from a
-#: prior round sort last.  Populated by ``_driver_priority()``.
-DRIVER_PRIORITY: list[str] = []
-
-#: Queries with a green (hash_match) row in CORRECTNESS_r01/r02.json — the
-#: gate has already hard-verified these, so under a bounded budget they
-#: sort LAST and the budget buys rows for never-checked queries instead.
-GREEN_PRIOR_ROUNDS: frozenset[str] = frozenset(
-    {
-        "flagship_corpus_rollup", "a1_frequency_status", "a2_orders_summary",
-        "a7_duplicate_groups", "a8_conflict_report", "p4_filter_project",
-        "j1_left_join", "j2_dim_rollup", "j3_anti_join", "j6_multikey_join",
-        "u1_union_conform", "u3_distinct", "w1_dedup_priority",
-        "w2_latest_per_key", "w5_flag_both_sources", "a9_coalesce_fill",
-        "o2_top_k_frequency", "fs1_normalize_bill_number",
-        "fs3_normalize_status", "fs12_normalize_text_plain", "fs14_word_count",
-        "fs13_doc_id_from_url", "j4_make_bill_id", "fd2_parse_date_multi",
-        "fd1_lenient_year_rollup", "fd3_year_from_prefix", "p9_keyword_filter",
-        "fj3_base64_roundtrip", "p6_p7_predicates", "ext_dedup_exact",
-        "ext_dedup_tokenset", "ext_minhash_lsh_pairs", "ext_simhash_pairs",
-        "ext_near_dup_components", "ext_blocked_jaccard_pairs",
-        "ext_ann_brute_topk", "ext_ann_lsh_topk", "ext_ann_ivf_topk",
-        "ext_embedding_quantize", "ext_vector_stats", "ext_langid",
-        "ext_langid_confusion", "ext_quality_features",
-        # round 2 (47)
-        "a4_a6_conditional_counts", "fs2_bill_number_variants",
-        "fa3_matched_keywords", "fa1_theme_tags", "w3_fj2_nested_arrays",
-        "ext_simhash_values", "ext_ann_ivf_trained_topk",
-        "ext_embedding_near_dup", "ext_approx_count_distinct",
-        "ext_merge_upsert", "ext_cdc_apply", "ext_incremental_agg",
-        "ext_pmi_collocations", "ext_late_data_report",
-        "ext_source_overlap_sketch", "ext_bpe_pair_counts",
-        "ext_udaf_label_medians", "ext_asof_nearest",
-        "p1_p2_conform_contract", "p3_p5_value_and_length_filters",
-        "p8_needs_enrichment", "p10_o4_deterministic_head",
-        "a3_a5_minmax_mean", "a10_completeness_histogram",
-        "u2_except_uncovered_nations", "w4_format_preference",
-        "fa4_is_amendment", "fj1_flatten_structs", "fs4_status_decode",
-        "fs6_fs7_fs15_string_normalize", "fs9_state_code",
-        "fs11_fa2_concat_fields", "ext_quality_score", "ext_token_counts",
-        "ext_doc_fingerprint", "ext_gopher_quality_gate",
-        "ext_stratified_sample", "ext_domain_resample", "ext_decontamination",
-        "ext_corpus_top_bigrams", "ext_scrub_text", "ext_multimodal_features",
-        "ext_salted_skew_join", "ext_salted_two_phase_agg",
-        "ext_key_skew_report", "ext_asof_join", "ext_interval_join",
-        # round 3 (49, CORRECTNESS_r03.json)
-        "ext_weighted_median", "ext_repetition_profile", "ext_pack_sequences",
-        "s_json_props", "fs5_title_case", "fs10_safe_filename",
-        "o1_o5_sorted_frequency", "s7_bulk_datasets_fixture",
-        "s2_excel_fixture", "uf2_pdf_fixture", "s_tumbling_window",
-        "s_session_window", "s_dedup_in_window", "ext_dedup_incremental",
-        "ext_semantic_dedup", "ext_dup_ngram_fraction", "ext_containment_pairs",
-        "ext_winnowing_fingerprints", "ext_chunk_documents",
-        "ext_chunk_dedup_clean", "ext_entity_resolution", "ext_ann_pq_codes",
-        "ext_ann_pq_adc_topk", "ext_ann_pq_rerank", "ext_label_centroid_sim",
-        "ext_pii_redaction", "ext_token_freq_quality", "ext_bigram_lm_score",
-        "ext_weighted_sample", "ext_train_split", "ext_negative_sampling",
-        "ext_feature_hashing", "ext_target_encoding", "ext_sessionize_batch",
-        "ext_time_rollup", "ext_time_gap_fill", "ext_event_percentiles",
-        "ext_pivot_wide", "ext_unpivot_melt", "ext_cube_totals",
-        "ext_grouping_sets", "ext_window_suite", "ext_funnel_stages",
-        "ext_cohort_retention", "ext_running_distinct_users",
-        "ext_triangle_count", "ext_pagerank_transitions",
-        "ext_curation_pipeline", "tpch_q1_pricing_summary",
-        # round 4 (50, CORRECTNESS_r04.json)
-        "ext_scd2_history", "ext_ann_ivf_partitioned_topk",
-        "ext_cdc_scd2_pipeline", "ext_hll_distinct", "s_stateful_profile",
-        "ext_shard_assignment", "ext_classifier_quality_filter",
-        "ext_temperature_mixture", "ext_unicode_nfc", "ext_ann_recall_at_10",
-        "ext_ann_ivfpq_rerank", "ext_url_canonicalize",
-        "ext_ann_lsh_multiprobe_topk", "ext_containment_pairs",
-        "ext_capped_jaccard_pairs", "ext_stop_shingle_report",
-        "ext_ccnet_buckets", "ext_rolling_features", "ext_count_min_hitters",
-        "s_sliding_window", "ext_histogram_equiwidth", "ext_pct_of_total",
-        "ext_mad_outliers", "ext_event_transitions",
-        "ext_multimodal_frame_sample", "ext_multimodal_audio",
-        "ext_range_window_hour", "ext_approx_percentile_bounded",
-        "ext_fuzzy_levenshtein_pairs", "ext_tfidf_top_terms", "ext_bm25_rank",
-        "ext_intersect_segments", "ext_dq_checks", "ext_rule_classifier",
-        "ext_snapshot_diff", "ext_histogram_equidepth", "ext_group_linreg",
-        "ext_zorder_values", "ext_corr_matrix", "ext_k_anonymity",
-        "ext_table_profile", "ext_sql_surface", "ext_zscore_scaler",
-        "ext_attribution_last_touch", "ext_repeated_substring_spans",
-        "tpch_q9_product_profit", "tpch_q13_customer_distribution",
-        "tpch_q15_top_supplier", "tpch_q21_waiting_suppliers",
-        "tpch_q2_min_cost_supplier",
-        # round 5 (45 green of 50 checked, CORRECTNESS_r05.json — the 5
-        # reds stay out and lead round 6's DRIVER_PRIORITY instead)
-        "tpch_q3_shipping_priority", "tpch_q4_order_priority",
-        "tpch_q5_region_volume", "tpch_q6_forecast_revenue",
-        "tpch_q7_nation_volume", "tpch_q8_market_share",
-        "tpch_q10_returned_items", "tpch_q11_important_stock",
-        "tpch_q12_late_lines_by_status", "tpch_q14_promo_effect",
-        "tpch_q16_part_supplier_variety", "tpch_q17_small_qty_revenue",
-        "tpch_q18_large_volume_customers", "tpch_q19_disc_revenue_or",
-        "tpch_q20_potential_promotion", "tpch_q22_idle_customers",
-        "ext_ann_ivf_build", "ext_dedup_pair_recall",
-        "ext_dedup_pair_recall_b6r2", "i1_i3_state_protocol",
-        "s1_csv_fixture", "s4_jsonl_fixture", "s5_zip_fixture",
-        "s9_textdir_fixture", "k2_parquet_roundtrip",
-        "k3_excel_roundtrip", "s_stream_stream_left_outer",
-        "s_stream_stream_full_outer",
-    }
-)
-
-
-def set_driver_priority(names: list[str]) -> None:
-    DRIVER_PRIORITY[:] = names
-
-
-#: Round in which a query's implementing code last changed in a way
-#: that could alter its gate output (semantics, plan shape, oracle).
-#: Maintained alongside such changes; compared against the last green
-#: driver round derived from CORRECTNESS_r*.json so rows whose code
-#: changed AFTER their most recent green sort ahead of fresh greens
-#: (the driver's bounded sample then re-verifies them first).
-CODE_CHANGED_ROUND: dict[str, int] = {
-    # round 6, commit 4a72304 (temporal/merge/clusters review fixes
-    # landed after these rows' last driver green):
-    "ext_asof_join": 6, "ext_interval_join": 6, "ext_merge_upsert": 6,
-    "ext_sessionize_batch": 6, "ext_scd2_history": 6,
-    "ext_cdc_scd2_pipeline": 6, "ext_near_dup_components": 6,
-    # round 6 parity-changed semantics (driver rows predate them):
-    "fa4_is_amendment": 6, "fs4_status_decode": 6,
-    # round 7: prefix-strip guard applied to bill_number_variants and
-    # divergence documentation in normalize_bill_number:
-    "fs1_normalize_bill_number": 7, "fs2_bill_number_variants": 7,
-    # round 7: html_to_text fallback now decodes entities (bs4 parity):
-    "uf1_html_fixture": 7,
-    # round 8: MinHash banding is threshold-adaptive (6x2 at the
-    # default 12/0.5 — candidate geometry changed for every row that
-    # inherits the default, oracles re-rendered from the same rule):
-    "ext_minhash_lsh_pairs": 8, "ext_dedup_incremental": 8,
-    "ext_dedup_pair_recall": 8,
-    # round 8: oracle predicate tightened (glob-faithful draft_* skip)
-    # and curation oracle refactored into the shared _curation_sql
-    # (SQL text verified byte-identical; re-verified anyway):
-    "p11_skip_list_scan": 8, "ext_curation_pipeline": 8,
-    # round 8: drain state partitions sized to staged rows (results
-    # partition-count independent; re-verified):
-    "s_stateful_profile": 8,
-    # round 9: oracles refactored into shared SQL-rendering helpers
-    # (_entity_resolution_sql/_semdedup_sql/_blocked_jaccard_sql) for
-    # the new fixed-block twins; rendered corpus SQL is byte-identical
-    # except a redundant self-alias in the entity join; semantics
-    # unchanged, re-verify anyway:
-    "ext_entity_resolution": 9, "ext_semantic_dedup": 9,
-    "ext_blocked_jaccard_pairs": 9,
-    # round 9 optimization wave (results verified identical at
-    # sf0.001/0.01/0.1; plan shape changed): recall verify legs spread
-    # across cores (wider bucket grid + explicit repartition), messy-
-    # date and corr-matrix scans spread before their CPU-heavy
-    # projections, q11 per-part aggregate materialized once, pagerank
-    # lineage cut every 3rd round:
-    "ext_simhash_pair_recall": 9, "ext_simhash_pair_recall_h3": 9,
-    "ext_embedding_near_dup_recall": 9,
-    "ext_embedding_near_dup_recall_single": 9,
-    "fd1_lenient_year_rollup": 9, "fd2_parse_date_multi": 9,
-    "ext_corr_matrix": 9, "tpch_q11_important_stock": 9,
-    "ext_pagerank_transitions": 9,
-    # round 9 optimization wave 2 (same bar — results verified
-    # identical, plan shape changed): posting checkpoint moved after
-    # the spread/cap in _blocked_intersections (ext_blocked_jaccard_
-    # pairs already stamped 9 above), q2's region-filtered bridge
-    # materialized once:
-    "tpch_q2_min_cost_supplier": 9,
-    "ext_capped_jaccard_pairs": 9, "ext_containment_pairs": 9,
-}
-
-
-def _green(row: dict) -> bool:
-    return (
-        row.get("err") is None
-        and bool(row.get("rows_match"))
-        and row.get("schema_match") is not False
-        and row.get("hash_match") is not False
-    )
-
-
-_LAST_GREEN_CACHE: dict[str, int] | None = None
-
-
-def last_green_rounds() -> dict[str, int]:
-    """query name -> latest round with a green driver CORRECTNESS row,
-    read from the CORRECTNESS_r*.json files at the repo root.  A query
-    whose LATEST recorded row is red is excluded entirely (its stale
-    green must not shield a known failure from the sample).  Falls
-    back to GREEN_PRIOR_ROUNDS (round unknown -> 0) if none are
-    readable (e.g. the package is imported outside the repo)."""
-    global _LAST_GREEN_CACHE
-    if _LAST_GREEN_CACHE is not None:
-        return _LAST_GREEN_CACHE
-    import json
-    import re
-    from pathlib import Path
-
-    greens: dict[str, int] = {}
-    last_any: dict[str, int] = {}
-    repo = Path(__file__).resolve().parents[2]
-    for p in sorted(repo.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", p.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            last_any[name] = max(last_any.get(name, 0), rnd)
-            if _green(row):
-                greens[name] = max(greens.get(name, 0), rnd)
-    # demote red-after-green: only keep a green that is the query's
-    # most recent recorded outcome
-    out = {n: g for n, g in greens.items() if last_any.get(n, g) <= g}
-    if not out and not last_any:
-        out = {n: 0 for n in GREEN_PRIOR_ROUNDS}
-    _LAST_GREEN_CACHE = out
-    return out
-
-
-def _changed_rounds() -> dict[str, int]:
-    """Per-query round of the most recent code change that could alter
-    gate output: the max of the hand-maintained CODE_CHANGED_ROUND
-    (semantic changes, documented) and the MECHANICAL fingerprint
-    stamp (plans/gate_fingerprints.json — registration-site or
-    engine-dep-closure drift; round 9 wires it in so a deep operator
-    edit rotates every dependent query without a manual entry)."""
-    try:
-        from dissertation_data_pipeline_spark.plans.fingerprints import (
-            recorded_fingerprints,
-        )
-
-        mech = {
-            n: e.get("round", 0) for n, e in recorded_fingerprints().items()
-        }
-    except Exception:
-        mech = {}
-    out = dict(mech)
-    for n, r in CODE_CHANGED_ROUND.items():
-        out[n] = max(out.get(n, 0), r)
-    return out
-
-
-def _ordered_names() -> list[str]:
-    pri = [n for n in DRIVER_PRIORITY if n in QUERIES]
-    seen = set(pri)
-    lg = last_green_rounds()
-    changed = _changed_rounds()
-    # >= not >: at round granularity a change landing in the SAME round
-    # as the green may have landed after it — treat same-round as stale
-    # (costs one conservative re-check; a later green clears it)
-    stale = [
-        n for n in QUERIES
-        if n not in seen
-        and n in lg
-        and changed.get(n, 0) >= lg[n]
-    ]
-    seen |= set(stale)
-    never = [n for n in QUERIES if n not in seen and n not in lg]
-    seen |= set(never)
-    # oldest green first, so the bounded sample rotates through the
-    # registry instead of re-checking the same fresh greens each round
-    green = sorted(
-        (n for n in QUERIES if n not in seen), key=lambda n: (lg[n], n)
-    )
-    return pri + stale + never + green
-
-
 def query_fns() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: QUERIES[name].fn for name in _ordered_names()}
+    """Every registered query, in registration order."""
+    return {n: q.fn for n, q in QUERIES.items()}
 
 
 def oracle_sqls() -> dict[str, str]:
-    return {
-        name: QUERIES[name].sql
-        for name in _ordered_names()
-        if QUERIES[name].sql is not None
-    }
+    """DuckDB oracle SQL for every query that has one, in registration order."""
+    return {n: q.sql for n, q in QUERIES.items() if q.sql is not None}
 
 
 def _dec(col) -> F.Column:
@@ -857,38 +579,3 @@ from dissertation_data_pipeline_spark.plans import queries_wave9  # noqa: E402,F
 from dissertation_data_pipeline_spark.plans import queries_fixtures  # noqa: E402,F401
 from dissertation_data_pipeline_spark.plans import queries_state  # noqa: E402,F401
 from dissertation_data_pipeline_spark.plans import queries_coverage3  # noqa: E402,F401
-
-# Gate-coverage policy for ROUND 9 (see DRIVER_PRIORITY docstring).
-# Cumulative driver-green after r8: all 239 then-registered queries.
-# The 7 newcomers lead (fixed-block twins + the four recall rows),
-# then the three refactored-oracle corpus rows and the dedup family
-# the epsilon-slack prefilter touched; the ~90 queries the new
-# dep-closure fingerprints restamped (engine modules dedup_ext/
-# similarity changed this round) follow mechanically via
-# _changed_rounds and rotate across rounds 9-10 under the budget.
-set_driver_priority(
-    [
-        # new this round: fixed-block oracle twins for the three
-        # remaining naive-oracle families (r8 verdict #3)...
-        "ext_blocked_jaccard_block_pairs",
-        "ext_semantic_dedup_block",
-        "ext_entity_resolution_block",
-        # ...and the measured-recall rows for SimHash and embedding
-        # near-dup, derived-cutoff + legacy-lever pairs (r8 verdict #4)
-        "ext_simhash_pair_recall",
-        "ext_simhash_pair_recall_h3",
-        "ext_embedding_near_dup_recall",
-        "ext_embedding_near_dup_recall_single",
-        # ...and the registered approx-percentile sketch path
-        "ext_approx_percentiles",
-        # changed this round (oracle refactors + epsilon-slack size
-        # prefilter; also in CODE_CHANGED_ROUND, listed to pin order)
-        "ext_entity_resolution",
-        "ext_semantic_dedup",
-        "ext_blocked_jaccard_pairs",
-        "ext_minhash_lsh_pairs",
-        "ext_dedup_incremental",
-        "ext_simhash_pairs",
-        "ext_near_dup_components",
-    ]
-)

@@ -154,20 +154,9 @@ def drop_blocks(spark: SparkSession) -> None:
 def pin_spread(df, *cols):
     """The pair-generating repartition, pinned: ``df.repartition(
     pinned_partitions(df), *cols)``.  Every output-exploding join in
-    the engine spreads through this one helper so the deliberate
-    AQE-coalescing defeat (see :func:`pinned_partitions`) can be
-    A/B-measured: with the session conf ``spark.graft.unpinnedAB=true``
-    (set only by tools/bench_pinned_ab.py) the call reverts to the
-    pre-pin shape — hash repartition by ``cols`` without an explicit
-    count (AQE-coalescible), or no repartition at all when the spread
-    was purely round-robin."""
-    unpin = "false"
-    try:
-        unpin = df.sparkSession.conf.get("spark.graft.unpinnedAB", "false")
-    except Exception:
-        pass
-    if str(unpin).lower() == "true":
-        return df.repartition(*cols) if cols else df
+    the engine spreads through this one helper, so the deliberate
+    AQE-coalescing defeat (see :func:`pinned_partitions`) lives in one
+    place."""
     return df.repartition(pinned_partitions(df), *cols)
 
 
@@ -192,10 +181,8 @@ def spread_small_scan(df) -> DataFrame:
     ext_corr_matrix 0.64x when spread before its 15-long contraction
     — the r9 regression this signature exists to prevent).
 
-    Lives in session.py deliberately: this module is excluded from the
-    plans dep-closure fingerprints by design, so result-invariant
-    execution helpers can be shared by operators and plans without
-    restamping every consumer on unrelated edits (r9 ADVICE)."""
+    Lives in session.py beside the other result-invariant execution
+    helpers, which operators and plans both import."""
     sc = df.sparkSession.sparkContext
     try:
         size = int(
@@ -226,9 +213,3 @@ def pinned_partitions(df) -> int:
     conf, so cluster deployments scale every site with one setting."""
     return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
-
-def tune_session(spark: SparkSession, **confs: str) -> SparkSession:
-    """Set runtime-mutable confs on an existing session (fluent helper)."""
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    return spark

@@ -295,32 +295,40 @@ def test_runtime_bloom_filter_injects(spark):
                 spark.conf.set(k, v)
 
 
-def test_pin_spread_ab_toggle_same_results(spark):
-    """spark.graft.unpinnedAB=true must change only the physical spread
-    (A/B attribution for the bench), never the rows."""
-    from dissertation_data_pipeline_spark.plans.registry import QUERIES
-
-    fn = QUERIES["ext_minhash_lsh_pairs"].fn
-    sf = "/root/testdata/sf0.001"
-    try:
-        spark.conf.set("spark.graft.unpinnedAB", "false")
-        pinned = {tuple(r) for r in fn(spark, sf).collect()}
-        spark.conf.set("spark.graft.unpinnedAB", "true")
-        unpinned = {tuple(r) for r in fn(spark, sf).collect()}
-    finally:
-        spark.conf.set("spark.graft.unpinnedAB", "false")
-    assert pinned == unpinned
-
-
-def test_pin_spread_unpinned_identity_without_cols(spark):
+def test_pin_spread_without_cols_uses_shuffle_partitions(spark):
     from dissertation_data_pipeline_spark.session import pin_spread
 
-    df = spark.range(10)
-    try:
-        spark.conf.set("spark.graft.unpinnedAB", "true")
-        assert pin_spread(df) is df  # pure round-robin spread -> no-op
-    finally:
-        spark.conf.set("spark.graft.unpinnedAB", "false")
-    out = pin_spread(df)
+    out = pin_spread(spark.range(10))
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert out.rdd.getNumPartitions() == n
+
+
+def test_entry_contract_is_registry_order(tmp_path, monkeypatch):
+    """An external harness loads __spark_entry__.py by path from its own
+    cwd; both dicts come back in registration order, no JVM needed."""
+    import importlib.util
+    from pathlib import Path
+
+    monkeypatch.chdir(tmp_path)
+    path = Path(__file__).resolve().parents[1] / "__spark_entry__.py"
+    spec = importlib.util.spec_from_file_location("__spark_entry__", path)
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
+
+    names = list(entry.queries())
+    assert names == list(QUERIES)
+    assert list(entry.oracle_sql()) == [
+        n for n in names if QUERIES[n].sql is not None
+    ]
+    assert len(names) == len(entry.oracle_sql()) == 247
+
+
+def test_entry_contract_value_types():
+    """queries() maps names to query builders and oracle_sql() maps
+    names to DuckDB SQL text — the types the harness calls and parses."""
+    from __spark_entry__ import oracle_sql, queries
+
+    assert all(fn is QUERIES[n].fn for n, fn in queries().items())
+    sqls = oracle_sql()
+    assert all(isinstance(s, str) and s.strip() for s in sqls.values())
+    assert all(sqls[n] == QUERIES[n].sql for n in sqls)

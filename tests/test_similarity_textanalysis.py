@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from dissertation_data_pipeline_spark.operators import similarity as sim
@@ -265,6 +266,48 @@ def test_lsh_bucket_expr_parity(spark, sf_dir):
     old = lsh_bucket(F.col("embedding"), planes)  # Column -> legacy path
     assert (
         emb.select(new.alias("a"), old.alias("b")).filter("a <> b").count()
+        == 0
+    )
+    # a dotted struct-field name is not a plain column: it must take the
+    # Column path and resolve as struct access, not as one quoted name
+    nested = emb.select(F.struct("embedding").alias("s"))
+    dotted = lsh_bucket("s.embedding", planes)
+    via_col = lsh_bucket(F.col("s.embedding"), planes)
+    assert (
+        nested.select(dotted.alias("a"), via_col.alias("b"))
+        .filter("a <> b")
+        .count()
+        == 0
+    )
+
+
+@pytest.mark.parametrize(
+    "ref",
+    ["EMBEDDING", "s.embedding", "`s`.embedding", "s.`embedding`",
+     "`odd name`", "`a.b`"],
+)
+def test_lsh_bucket_name_forms_resolve_like_col(spark, sf_dir, ref):
+    """Every column-reference string F.col accepts names the same vector
+    in lsh_bucket: its buckets equal the plain-name SQL path's.  Only
+    simple identifiers may be spliced into the one-parse SQL; quoted,
+    dotted or spaced names would break it or resolve a different column."""
+    from dissertation_data_pipeline_spark.operators.similarity import (
+        hyperplanes,
+        lsh_bucket,
+    )
+    from dissertation_data_pipeline_spark.tables import load_table
+
+    planes = hyperplanes(8, 64)
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "embedding",
+        F.struct("embedding").alias("s"),
+        F.col("embedding").alias("odd name"),
+        F.col("embedding").alias("a.b"),
+    )
+    got = lsh_bucket(ref, planes)
+    want = lsh_bucket("embedding", planes)
+    assert (
+        emb.select(got.alias("a"), want.alias("b")).filter("a <> b").count()
         == 0
     )
 

@@ -1,36 +1,47 @@
-"""Capture `.explain("formatted")` for named queries to plans/r10/.
+"""Capture `.explain("formatted")` for named queries to plans/<round>/.
 
 Usage:
-    python tools/dump_plan_r10.py before|after <name> [<name> ...]
+    python tools/dump_plan_round.py <round> before|after <name> [<name> ...]
 
-Writes plans/r10/<name>_<tag>.txt — the judge-checkable evidence for
-every plan claim in OPTIMIZATION_r10.md. Uses sf0.001 (plan shapes are
-size-independent modulo AQE's runtime picks, and several queries
-execute eagerly while building — small SF keeps capture cheap).
+Writes plans/<round>/<name>_<tag>.txt (e.g. round ``r10``) — the
+checkable evidence for every plan claim in OPTIMIZATION_<round>.md.
+Uses sf0.001 (plan shapes are size-independent modulo AQE's runtime
+picks, and several queries execute eagerly while building — small SF
+keeps capture cheap).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
+USAGE = (
+    "usage: python tools/dump_plan_round.py <round> before|after "
+    "<name> [<name> ...]  (round like r10)"
+)
 
-def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
-    assert tag in ("before", "after"), "first arg must be before|after"
+
+def main(argv: list[str]) -> None:
+    if (
+        len(argv) < 3
+        or not re.fullmatch(r"r\d+", argv[0])
+        or argv[1] not in ("before", "after")
+    ):
+        sys.exit(USAGE)  # before Spark starts: nothing written
+    rnd, tag, names = argv[0], argv[1], argv[2:]
 
     from dissertation_data_pipeline_spark.plans.registry import QUERIES
     from dissertation_data_pipeline_spark.session import drop_blocks, get_spark
 
-    spark = get_spark("ddp-dump-plan-r10")
+    spark = get_spark(f"ddp-dump-plan-{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    outdir = os.path.join(here, "plans", "r10")
+    outdir = os.path.join(here, "plans", rnd)
     os.makedirs(outdir, exist_ok=True)
 
     for name in names:
@@ -50,4 +61,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
