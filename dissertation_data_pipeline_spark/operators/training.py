@@ -57,6 +57,13 @@ __all__ = [
 STOPWORDS = ("the", "a", "and", "of", "to")
 
 
+def _space_tokens(text: Column) -> Column:
+    """The training operators' tokenizer: ``text`` split on single
+    spaces, case and punctuation kept (the oracles'
+    ``string_split(text, ' ')``)."""
+    return F.split(text, " ")
+
+
 def token_long_form(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -67,7 +74,7 @@ def token_long_form(
     """
     return df.select(
         F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok"),
+        F.posexplode(_space_tokens(F.col(text_col))).alias("pos", "tok"),
     )
 
 
@@ -87,7 +94,7 @@ def bigram_long_form(
     the window's exchange used to, and is a no-op cost at scale where
     the scan already arrives in thousands of splits."""
     nparts = df.sparkSession.sparkContext.defaultParallelism
-    tk = F.split(F.col(text_col), " ")
+    tk = _space_tokens(F.col(text_col))
     pre = df.repartition(nparts).select(
         F.col(id_col), tk.alias("_tk"), F.size(tk).alias("_n")
     )
@@ -165,7 +172,7 @@ def gopher_quality_gate(
     stopword probe is word-boundary `contains` on a space-padded copy.
     """
     text = F.col(text_col)
-    n_tokens = F.size(F.split(text, " "))
+    n_tokens = F.size(_space_tokens(text))
     # rounded BEFORE the keep-predicate so the emitted value and the
     # bounds test can never disagree (and the oracle applies the same
     # round-then-compare order)
@@ -214,7 +221,7 @@ def pack_sequences(
     t = df.select(
         F.col(shard_col),
         F.col(id_col),
-        F.size(F.split(F.col(text_col), " ")).alias("n_tokens"),
+        F.size(_space_tokens(F.col(text_col))).alias("n_tokens"),
     )
     w = (
         Window.partitionBy(shard_col)
@@ -356,7 +363,7 @@ def chunk_documents(
     partitioning — at 100 TB this runs at read speed and the output is
     written partitioned the same way.
     """
-    toks = F.split(F.col(text_col), " ")
+    toks = _space_tokens(F.col(text_col))
     df = df.select(
         F.col(id_col), toks.alias("_t"), F.size(toks).alias("_n")
     )

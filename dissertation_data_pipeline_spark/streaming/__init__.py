@@ -32,7 +32,6 @@ from dissertation_data_pipeline_spark.streaming.jobs import (  # noqa: F401
     read_events_stream,
     run_available_now_to_memory,
     run_foreach_batch_upsert,
-    patched_shuffle_partitions,
     rocksdb_state_store,
 )
 from dissertation_data_pipeline_spark.streaming.joins import (  # noqa: F401

@@ -43,8 +43,9 @@ def read_events_stream(
 @contextmanager
 def patched_sql_confs(spark: SparkSession, confs: dict[str, str]):
     """Temporarily set runtime SQL confs, restoring previous values
-    (or unsetting ones that had no explicit value) on exit — the
-    drain-scoped generalization of ``patched_shuffle_partitions``."""
+    (or unsetting ones that had no value) on exit, also when the body
+    raises — a failed drain must not leave the session reconfigured for
+    every later query."""
     prev: dict[str, str | None] = {}
     for k, v in confs.items():
         try:
@@ -63,34 +64,6 @@ def patched_sql_confs(spark: SparkSession, confs: dict[str, str]):
                     pass
             else:
                 spark.conf.set(k, old)
-
-
-@contextmanager
-def patched_shuffle_partitions(spark: SparkSession, n: int | None):
-    """Temporarily set ``spark.sql.shuffle.partitions`` (no-op when
-    ``n`` is None), restoring the previous value on exit.
-
-    Why this exists: a stateful streaming query creates ONE state
-    store per shuffle partition per stateful operator, re-materialized
-    every micro-batch — so a bounded AvailableNow drain at the session
-    default (32) pays 32 state-store tasks per operator per batch even
-    when each batch carries a few thousand rows. The partition count
-    is baked into the checkpoint at first start, so a per-query patch
-    around ``.start()`` is both safe (fresh checkpoint per gate run)
-    and complete (later batches reuse the baked count). Results are
-    partition-count independent — the gate rows pin that. Production
-    streams on a real cluster should instead size this to cores ×
-    state volume; the knob is opt-in for exactly that reason."""
-    key = "spark.sql.shuffle.partitions"
-    if n is None:
-        yield
-        return
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 def run_available_now_to_memory(
@@ -113,8 +86,17 @@ def run_available_now_to_memory(
     results.
 
     ``shuffle_partitions`` (opt-in) patches the state-store partition
-    count for this drain only — see ``patched_shuffle_partitions`` for
-    the rationale and the 100 TB sizing note.
+    count for this drain only.  A stateful streaming query creates ONE
+    state store per shuffle partition per stateful operator,
+    re-materialized every micro-batch — so a bounded drain at the
+    session default (32) pays 32 state-store tasks per operator per
+    batch even when each batch carries a few thousand rows.  The count
+    is baked into the checkpoint at first start, so patching it around
+    ``.start()`` is both safe (fresh checkpoint per run) and complete
+    (later batches reuse the baked count).  Results are partition-count
+    independent — the registry's oracle rows pin that.  Production
+    streams on a real cluster should instead size this to cores × state
+    volume.
 
     ``no_data_batches=False`` (opt-in) skips the trailing empty
     micro-batch the engine otherwise runs for eager state management
@@ -217,15 +199,5 @@ def rocksdb_state_store(spark: SparkSession):
     changes. Restores the previous provider on exit, so test sessions
     are not left reconfigured."""
     key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
+    with patched_sql_confs(spark, {key: ROCKSDB_PROVIDER}):
         yield spark
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)

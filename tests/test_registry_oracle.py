@@ -19,12 +19,10 @@ builds the queries it finds unrecorded (e.g. when run on its own).
 
 from __future__ import annotations
 
-import hashlib
-import math
-
 import duckdb
 import pytest
 
+from dissertation_data_pipeline_spark.canon import table_fingerprint
 from dissertation_data_pipeline_spark.plans.registry import QUERIES
 from dissertation_data_pipeline_spark.tables import TABLE_NAMES
 
@@ -36,31 +34,6 @@ SAFE = {
     "string", "long", "integer", "short", "byte", "double", "float",
     "boolean", "date", "timestamp", "timestamp_ntz", "binary",
 }
-
-
-def canon(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.6g}"
-    if isinstance(v, bool):
-        return str(v).lower()
-    if isinstance(v, bytes):
-        return v.hex()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(canon(x) for x in v) + "]"
-    return str(v)
-
-
-def fingerprint(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i].lower())
-    h = hashlib.sha256()
-    for line in sorted("|".join(canon(r[i]) for i in order) for r in rows):
-        h.update(line.encode())
-        h.update(b"\n")
-    return h.hexdigest()
 
 
 @pytest.fixture(scope="module")
@@ -100,7 +73,7 @@ def test_query_matches_oracle(spark, duck, schemas, name):
     drows = [tuple(r) for r in rel.fetchall()]
     assert len(srows) == len(drows), f"rowcount {len(srows)} != {len(drows)}"
     assert sorted(c.lower() for c in scols) == sorted(c.lower() for c in dcols)
-    assert fingerprint(scols, srows) == fingerprint(dcols, drows)
+    assert table_fingerprint(scols, srows) == table_fingerprint(dcols, drows)
 
 
 @pytest.mark.parametrize("name", list(QUERIES))

@@ -303,25 +303,24 @@ def test_foreach_batch_upsert_latest_wins(spark, sf_dir, tmpdirs):
     assert {r["user_id"]: r["last_ts"] for r in again.collect()} == want
 
 
-def test_patched_shuffle_partitions_restores_conf(spark):
-    from dissertation_data_pipeline_spark.streaming.jobs import (
-        patched_shuffle_partitions,
-    )
+def test_patched_sql_confs_restores_conf(spark):
+    from dissertation_data_pipeline_spark.streaming.jobs import patched_sql_confs
 
     key = "spark.sql.shuffle.partitions"
+    unset = "spark.ddp.test.neverSet"  # no value and no default
     before = spark.conf.get(key)
-    with patched_shuffle_partitions(spark, 5):
+    with patched_sql_confs(spark, {key: "5", unset: "x"}):
         assert spark.conf.get(key) == "5"
+        assert spark.conf.get(unset) == "x"
     assert spark.conf.get(key) == before
+    assert unset not in spark.conf.getAll
     # restored even when the body raises (a drain timeout must not
     # leave the session reconfigured for every later batch query)
     with pytest.raises(RuntimeError):
-        with patched_shuffle_partitions(spark, 5):
+        with patched_sql_confs(spark, {key: "5", unset: "x"}):
             raise RuntimeError("drain failed")
     assert spark.conf.get(key) == before
-    # None = explicit no-op
-    with patched_shuffle_partitions(spark, None):
-        assert spark.conf.get(key) == before
+    assert unset not in spark.conf.getAll
 
 
 def test_tws_profile_parity_with_apply_in_pandas_with_state(spark, sf_dir, tmpdirs):

@@ -44,6 +44,11 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from dissertation_data_pipeline_spark.canon import (  # noqa: E402
+    canon_lines,
+    table_fingerprint,
+)
+
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])
 
@@ -51,24 +56,6 @@ ONLY = set(sys.argv[2:])
 class GateUnsafe(Exception):
     """A value the driver's pandas canonicalizer cannot hash (lists,
     ndarrays, dicts/structs) — renders as a driver ``err``."""
-
-
-def canon(v):
-    """Python-native canon (collect()/fetchall() values) — the
-    SECONDARY, value-exactness probe."""
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.6g}"
-    if isinstance(v, bool):
-        return str(bool(v)).lower()
-    if isinstance(v, bytes):
-        return v.hex()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(canon(x) for x in v) + "]"
-    return str(v)
 
 
 def canon_pd(v):
@@ -113,18 +100,6 @@ def canon_pd(v):
     if isinstance(v, bytes):
         return v.hex()
     return str(v)
-
-
-def table_fingerprint(cols, rows, canon_fn=canon):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted("|".join(canon_fn(r[i]) for i in order) for r in rows)
-    import hashlib
-
-    h = hashlib.sha256()
-    for line in lines:
-        h.update(line.encode())
-        h.update(b"\n")
-    return h.hexdigest()
 
 
 def _pdf_rows(pdf: pd.DataFrame):
@@ -207,14 +182,8 @@ def main():
                 dph = table_fingerprint(dpcols, dprows, canon_pd)
                 if sph != dph:
                     problems.append("pandas-canon hash mismatch")
-                    spset = {
-                        "|".join(canon_pd(r[i]) for i in sorted(range(len(spcols)), key=lambda i: spcols[i]))
-                        for r in sprows
-                    }
-                    dpset = {
-                        "|".join(canon_pd(r[i]) for i in sorted(range(len(dpcols)), key=lambda i: dpcols[i]))
-                        for r in dprows
-                    }
+                    spset = set(canon_lines(spcols, sprows, canon_pd))
+                    dpset = set(canon_lines(dpcols, dprows, canon_pd))
                     for x in list(spset - dpset)[:3]:
                         print(f"    spark-pd-only: {x[:200]}")
                     for x in list(dpset - spset)[:3]:
@@ -224,14 +193,8 @@ def main():
             # SECONDARY: Python-native value-exactness probe
             if table_fingerprint(scols, srows) != table_fingerprint(dcols, drows):
                 problems.append("native value-hash mismatch")
-                sset = {
-                    "|".join(canon(r[i]) for i in sorted(range(len(scols)), key=lambda i: scols[i]))
-                    for r in srows
-                }
-                dset = {
-                    "|".join(canon(r[i]) for i in sorted(range(len(dcols)), key=lambda i: dcols[i]))
-                    for r in drows
-                }
+                sset = set(canon_lines(scols, srows))
+                dset = set(canon_lines(dcols, drows))
                 for x in list(sset - dset)[:3]:
                     print(f"    spark-only: {x[:200]}")
                 for x in list(dset - sset)[:3]:
