@@ -21,7 +21,7 @@ from pyspark.sql.functions import lit, udtf
 class ChunkText:
     """Emit one row per fixed-size token chunk of the input text —
     the UDTF-prototype twin of the codegen chunker
-    (`plans/queries_wave3.ext_chunk_dedup_clean`)."""
+    (`plans/queries_dedup.ext_chunk_dedup_clean`)."""
 
     def eval(self, text: str, chunk_tokens: int):  # noqa: D102
         if text is None:

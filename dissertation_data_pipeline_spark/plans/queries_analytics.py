@@ -1,5 +1,7 @@
-"""[EXT] analytics-wave queries: pivot/unpivot, CUBE, window suite,
-funnel, fuzzy matching, TF-IDF / BM25 ranking, set intersection.
+"""[EXT] analytics queries: pivot/unpivot, CUBE, window suite,
+funnel, fuzzy matching, TF-IDF / BM25 ranking, set intersection,
+graph ranking, histograms, regression, sketches, holistic aggregates
+and behaviour reports.
 
 Cross-engine conventions (registry module docstring applies):
 - counts CAST to BIGINT in DuckDB (its integer SUM widens to HUGEINT,
@@ -15,10 +17,19 @@ Cross-engine conventions (registry module docstring applies):
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from dissertation_data_pipeline_spark.operators import analytics as an
 from dissertation_data_pipeline_spark.operators import textrank as tr
+from dissertation_data_pipeline_spark.operators.analytics import grouped_weighted_median
+from dissertation_data_pipeline_spark.operators.graphs import pagerank_int
+from dissertation_data_pipeline_spark.operators.sketches import (
+    bottomk_sketches,
+    sketch_overlap_pairs,
+)
+from dissertation_data_pipeline_spark.operators.udafs import label_dim_medians
+from dissertation_data_pipeline_spark.plans.queries_dedup import _HEXVAL
 from dissertation_data_pipeline_spark.plans.registry import register
 from dissertation_data_pipeline_spark.tables import load_table
 
@@ -556,3 +567,781 @@ def ext_rolling_features(spark, sf_dir):
     return rolling_features(
         ev, "user_id", "ts", "value", id_col="event_id", window_rows=4
     )
+
+
+# ---------------------------------------------------------------------------
+# Integer-exact PageRank, equi-depth histograms, per-group linear
+# regression. Every accumulating computation stays in integer/decimal
+# space; any final division of two exact integers is one IEEE op both
+# engines perform identically.
+# ---------------------------------------------------------------------------
+
+_PR_SCALE = 1_000_000_000
+
+
+_PR_ITER = 6
+
+
+def _pagerank_oracle() -> str:
+    """Unrolled fixed-iteration PageRank in pure integer arithmetic —
+    bit-identical to ``operators.graphs.pagerank_int`` by construction
+    (same floor divisions in the same order on exact integers)."""
+    head = f"""
+    WITH seq AS (
+      SELECT user_id, event_type,
+             lag(event_type) OVER (
+               PARTITION BY user_id ORDER BY ts, event_id
+             ) AS prev_type
+      FROM events
+    ), edges AS (
+      SELECT prev_type AS src, event_type AS dst,
+             CAST(COUNT(*) AS BIGINT) AS w
+      FROM seq WHERE prev_type IS NOT NULL GROUP BY 1, 2
+    ), nodes AS (
+      SELECT src AS node FROM edges UNION SELECT dst FROM edges
+    ), consts AS (
+      SELECT {_PR_SCALE} // COUNT(*) AS base_total,
+             (15 * ({_PR_SCALE} // COUNT(*))) // 100 AS base
+      FROM nodes
+    ), outw AS (
+      SELECT src, SUM(w) AS ow FROM edges GROUP BY 1
+    ), r0 AS (
+      SELECT node, base_total AS r FROM nodes, consts
+    )"""
+    its = []
+    for k in range(1, _PR_ITER + 1):
+        its.append(f""", r{k} AS (
+      SELECT n.node,
+             (SELECT base FROM consts) + (85 * COALESCE(c.s, 0)) // 100 AS r
+      FROM nodes n LEFT JOIN (
+        SELECT e.dst AS node, SUM((p.r * e.w) // o.ow) AS s
+        FROM edges e JOIN outw o USING (src) JOIN r{k - 1} p ON e.src = p.node
+        GROUP BY 1
+      ) c ON n.node = c.node
+    )""")
+    return (
+        head
+        + "".join(its)
+        + f"""
+    SELECT node AS event_type, CAST(r AS BIGINT) AS rank_scaled FROM r{_PR_ITER}
+    """
+    )
+
+
+@register("ext_pagerank_transitions", _pagerank_oracle())
+def ext_pagerank_transitions(spark, sf_dir):
+    """[EXT] PageRank over the event-type transition graph (edges =
+    Markov transition counts from per-user event sequences), computed
+    by ``pagerank_int`` in scaled-integer arithmetic: float PageRank is
+    partition-order dependent (float contribution sums), the integer
+    variant is bit-reproducible on any engine or partitioning — which
+    is what lets a recursive oracle verify a distributed iterative
+    algorithm value-for-value.
+
+    The node set here is small (event types), but the loop is the
+    genuine distributed shape: per iteration one join of ranks onto
+    edges on src, one map-side-combined groupBy dst, one left join onto
+    the node list, lineage cut per round. Swap the edge list for a
+    web/citation graph and the same code runs at 100 TB.
+    """
+    e = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    edges = (
+        e.select(
+            "user_id",
+            "event_type",
+            F.lag("event_type").over(w).alias("prev_type"),
+        )
+        .filter(F.col("prev_type").isNotNull())
+        .groupBy(
+            F.col("prev_type").alias("src"), F.col("event_type").alias("dst")
+        )
+        .agg(F.count(F.lit(1)).alias("w"))
+    )
+    ranks = pagerank_int(
+        edges, iterations=_PR_ITER, scale=_PR_SCALE, damping_pct=85
+    )
+    return ranks.select(
+        F.col("node").alias("event_type"), F.col("r").alias("rank_scaled")
+    )
+
+
+@register(
+    "ext_histogram_equidepth",
+    """
+    WITH cents AS (
+      SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
+      FROM orders
+    ), hist AS (
+      SELECT v, COUNT(*) AS c FROM cents GROUP BY 1
+    ), cum AS (
+      SELECT v, SUM(c) OVER (ORDER BY v) AS cum FROM hist
+    ), tot AS (
+      SELECT COUNT(*) AS n FROM cents
+    ), ks AS (
+      SELECT unnest(range(1, 10)) AS k
+    ), bounds AS (
+      SELECT k, MIN(v) AS b
+      FROM cum, tot, ks
+      WHERE cum > (k * (n - 1)) // 10
+      GROUP BY 1
+    ), blist AS (
+      SELECT list(b ORDER BY k) AS bs FROM bounds
+    )
+    SELECT CAST(len(list_filter(bs, b -> v > b)) AS BIGINT) AS bucket,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           MIN(v) AS lo_cents,
+           MAX(v) AS hi_cents
+    FROM cents, blist
+    GROUP BY 1
+    """,
+)
+def ext_histogram_equidepth(spark, sf_dir):
+    """[EXT] Equi-depth (decile) histogram of order values WITHOUT a
+    global sort: boundary k is the exact order statistic at 0-based
+    index (k*(n-1)) div 10, recovered from a cumulative count over the
+    *distinct-value* histogram — the standard exact-quantile-via-
+    histogram trick. The ordered window runs over distinct integer
+    cents (bounded by the value domain, not the row count), so there is
+    no scale-killing whole-data sort; rows then bin against the 9
+    broadcast boundaries with a pure codegen filter-count. All integer,
+    so both engines agree exactly — no percentile interpolation floats.
+    """
+    o = load_table(spark, sf_dir, "orders")
+    cents = o.select(
+        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("v")
+    )
+    hist = cents.groupBy("v").agg(F.count(F.lit(1)).alias("c"))
+    wcum = Window.orderBy("v").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    cum = hist.select("v", F.sum("c").over(wcum).alias("cum"))
+    tot = cents.agg(F.count(F.lit(1)).alias("n"))
+    ks = cum.sparkSession.range(1, 10).select(F.col("id").alias("k"))
+    bounds = (
+        cum.crossJoin(F.broadcast(tot))
+        .crossJoin(F.broadcast(ks))
+        .filter(F.col("cum") > F.expr("(k * (n - 1)) div 10"))
+        .groupBy("k")
+        .agg(F.min("v").alias("b"))
+    )
+    blist = bounds.agg(
+        F.array_sort(F.collect_list(F.struct("k", "b"))).alias("kb")
+    ).select(F.transform("kb", lambda s: s.getField("b")).alias("bs"))
+    binned = cents.crossJoin(F.broadcast(blist)).select(
+        F.size(F.filter("bs", lambda b: F.col("v") > b))
+        .cast("long")
+        .alias("bucket"),
+        "v",
+    )
+    return binned.groupBy("bucket").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("v").alias("lo_cents"),
+        F.max("v").alias("hi_cents"),
+    )
+
+
+@register(
+    "ext_group_linreg",
+    """
+    WITH pts AS (
+      SELECT event_type,
+             (CAST(ts AS DATE) - DATE '2024-01-01') * 24
+               + CAST(hour(ts) AS BIGINT) AS x,
+             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
+      FROM events
+    ), m AS (
+      SELECT event_type,
+             CAST(COUNT(*) AS BIGINT) AS n,
+             CAST(SUM(x) AS BIGINT) AS sx,
+             CAST(SUM(y) AS BIGINT) AS sy,
+             CAST(SUM(x * x) AS BIGINT) AS sxx,
+             CAST(SUM(x * y) AS BIGINT) AS sxy,
+             CAST(SUM(y * y) AS BIGINT) AS syy
+      FROM pts GROUP BY 1
+    )
+    , d AS (
+      SELECT event_type, n,
+             CAST(n AS DOUBLE) AS nd, CAST(sx AS DOUBLE) AS sxd,
+             CAST(sy AS DOUBLE) AS syd, CAST(sxx AS DOUBLE) AS sxxd,
+             CAST(sxy AS DOUBLE) AS sxyd, CAST(syy AS DOUBLE) AS syyd
+      FROM m
+    )
+    SELECT event_type, n,
+           round((nd * sxyd - sxd * syd)
+                 / (nd * sxxd - sxd * sxd), 6)
+             AS slope_cents_per_hour,
+           round((syd
+                    - (nd * sxyd - sxd * syd)
+                      / (nd * sxxd - sxd * sxd) * sxd)
+                 / nd, 6) AS intercept_cents,
+           round((nd * sxyd - sxd * syd)
+                 * (nd * sxyd - sxd * syd)
+                 / ((nd * sxxd - sxd * sxd)
+                    * (nd * syyd - syd * syd)), 6) AS r2
+    FROM d
+    """,
+)
+def ext_group_linreg(spark, sf_dir):
+    """[EXT] Per-group ordinary least squares (value-vs-time trend per
+    event type) from exact integer moment sums: x = whole hours since
+    2024-01-01 (date arithmetic — timezone-free in both engines), y =
+    integer cents. n, Sx, Sy, Sxx, Sxy, Syy accumulate as BIGINTs (one
+    distributed aggregation, map-side combined, order-invariant), then
+    slope/intercept/r² are a handful of IEEE ops on identical exact
+    integers — so a float regression result becomes value-hashable.
+    Magnitude audit: x<=720, y<2^23 keep the int64 SUMS exact through
+    ~sf100 (Syy worst ~6e17 < 2^63), but the CROSS-PRODUCTS (n*Syy,
+    Sy*Sy) overflow int64 already at sf1 (n=2e5/group -> n*Syy ~1e20;
+    found by the round-4 sf1 oracle sweep), so both engines form them
+    in IEEE double: identical operands (exact int64 sums), identical
+    op shapes -> bit-identical rounding, hash-stable at any scale.
+
+    This is the moment-sketch pattern every distributed ML system uses
+    for closed-form estimators: one pass, six numbers per group, no
+    iteration — the 100 TB plan is identical to the sf0.01 plan.
+    """
+    e = load_table(spark, sf_dir, "events")
+    pts = e.select(
+        "event_type",
+        (
+            F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
+            * 24
+            + F.hour("ts")
+        ).cast("long").alias("x"),
+        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("y"),
+    )
+    m = pts.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("x").alias("sx"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("x") * F.col("x")).alias("sxx"),
+        F.sum(F.col("x") * F.col("y")).alias("sxy"),
+        F.sum(F.col("y") * F.col("y")).alias("syy"),
+    )
+    nd, sxd, syd = (F.col(c).cast("double") for c in ("n", "sx", "sy"))
+    sxxd, sxyd, syyd = (
+        F.col(c).cast("double") for c in ("sxx", "sxy", "syy")
+    )
+    num = nd * sxyd - sxd * syd
+    den = nd * sxxd - sxd * sxd
+    deny = nd * syyd - syd * syd
+    slope = num / den
+    return m.select(
+        "event_type",
+        "n",
+        F.round(slope, 6).alias("slope_cents_per_hour"),
+        F.round(
+            (F.col("sy").cast("double") - slope * F.col("sx").cast("double"))
+            / F.col("n").cast("double"),
+            6,
+        ).alias("intercept_cents"),
+        F.round(num * num / (den * deny), 6).alias("r2"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Sketches: bottom-k overlap (Cohen & Kaplan 2007; deterministic
+# md5-derived bottom-64 sketches per source + pairwise Jaccard
+# estimates, quadratic only on sketches), count-min heavy hitters,
+# HyperLogLog distinct counts, and approx_count_distinct.
+# ---------------------------------------------------------------------------
+
+@register(
+    "ext_source_overlap_sketch",
+    rf"""
+    WITH toks AS (
+      SELECT doc_id, source,
+             string_split_regex(lower(trim(text)), '\s+') AS t
+      FROM documents
+    ),
+    sh AS (
+      SELECT doc_id, source,
+             list_distinct(CASE WHEN len(t) >= 3
+               THEN list_transform(range(1, len(t) - 1),
+                                   i -> array_to_string(t[i:i+2], ' '))
+               ELSE [array_to_string(t, ' ')] END) AS shingles
+      FROM toks
+    ),
+    post AS (SELECT DISTINCT source, unnest(shingles) AS s FROM sh),
+    hs AS (SELECT DISTINCT source, {_HEXVAL} AS h FROM post),
+    sk AS (
+      SELECT source, list_sort(list(h))[1:64] AS sketch,
+             CAST(count(*) AS BIGINT) AS n_distinct
+      FROM hs GROUP BY 1
+    ),
+    pairs AS (
+      SELECT a.source AS g_a, b.source AS g_b,
+             a.n_distinct AS n_a, b.n_distinct AS n_b,
+             list_sort(list_distinct(list_concat(a.sketch, b.sketch)))[1:64] AS B,
+             list_intersect(a.sketch, b.sketch) AS I
+      FROM sk a JOIN sk b ON a.source < b.source
+    )
+    SELECT g_a, g_b, n_a, n_b,
+           CAST(len(list_filter(B, x -> list_contains(I, x))) AS BIGINT)
+             AS n_shared_in_sample,
+           CAST(len(B) AS BIGINT) AS sample_size,
+           round(len(list_filter(B, x -> list_contains(I, x)))::DOUBLE
+                 / len(B), 6) AS jaccard_est
+    FROM pairs
+    """,
+)
+def ext_source_overlap_sketch(spark, sf_dir):
+    """[EXT] pairwise source-overlap estimation from bottom-64 shingle
+    sketches: each source reduces to its 64 smallest md5-derived
+    shingle hashes, then every source pair gets a Jaccard estimate
+    from the merged sketch — quadratic only on the |sources| sketch
+    rows (512 bytes each), never on documents. The md5 hash makes the
+    estimate itself deterministic, so the oracle reproduces it
+    exactly."""
+    sk = bottomk_sketches(
+        load_table(spark, sf_dir, "documents"),
+        "source",
+        "text",
+        id_col="doc_id",
+        k=64,
+    )
+    return sketch_overlap_pairs(sk, "source", k=64)
+
+
+_CMS_HEX = "0123456789abcdef"
+
+
+def _cms_bucket(tok_expr: str) -> str:
+    """DuckDB twin of the Spark bucket fn: first two hex digits of
+    md5(d || ':' || token) as an int in 0..255."""
+    h = f"md5(CAST(d AS VARCHAR) || ':' || {tok_expr})"
+    return (
+        f"((strpos('{_CMS_HEX}', substr({h}, 1, 1)) - 1) * 16"
+        f" + (strpos('{_CMS_HEX}', substr({h}, 2, 1)) - 1))"
+    )
+
+
+@register(
+    "ext_count_min_hitters",
+    rf"""
+    WITH toks AS (
+      SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
+      FROM documents
+    ),
+    nz AS (SELECT tok FROM toks WHERE length(tok) > 0),
+    tc AS (SELECT tok, CAST(count(*) AS BIGINT) AS true_cnt
+           FROM nz GROUP BY 1),
+    top AS (SELECT tok, true_cnt FROM tc
+            ORDER BY true_cnt DESC, tok ASC LIMIT 10),
+    posts AS (
+      SELECT tok, d, {_cms_bucket('tok')} AS b
+      FROM nz CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS d)
+    ),
+    cms AS (SELECT d, b, CAST(count(*) AS BIGINT) AS cnt
+            FROM posts GROUP BY 1, 2),
+    probe AS (
+      SELECT t.tok, t.true_cnt, dd.d, {_cms_bucket('t.tok')} AS b
+      FROM top t CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS d) dd
+    )
+    SELECT p.tok, p.true_cnt, CAST(min(c.cnt) AS BIGINT) AS est_cnt
+    FROM probe p JOIN cms c ON c.d = p.d AND c.b = p.b
+    GROUP BY 1, 2
+    """,
+)
+def ext_count_min_hitters(spark, sf_dir):
+    """[EXT] count-min sketch heavy hitters (Cormode & Muthukrishnan
+    2005): a 4x256 md5-bucketed counter matrix over the corpus token
+    stream, probed at the true top-10 tokens so the one-sided
+    estimate >= truth guarantee is gate-checked data, not prose. The
+    sketch is mergeable cell-wise — the streaming/distributed
+    heavy-hitter structure at any scale."""
+    from dissertation_data_pipeline_spark.operators.sketches import (
+        count_min_heavy_hitters,
+    )
+
+    return count_min_heavy_hitters(load_table(spark, sf_dir, "documents"))
+
+
+@register(
+    "ext_hll_distinct",
+    r"""
+    WITH toks AS (
+      SELECT source, unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
+      FROM documents
+    ),
+    dist AS (SELECT DISTINCT source, tok FROM toks WHERE length(tok) > 0),
+    hx AS (SELECT source, md5(tok) AS h FROM dist),
+    parts AS (
+      SELECT source,
+             ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 16
+              + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1)) AS j,
+             substr(h, 3, 12) AS tail,
+             length(regexp_extract(substr(h, 3, 12), '^(0*)', 1)) AS z
+      FROM hx
+    ),
+    rho AS (
+      SELECT source, j,
+             CASE WHEN z = 12 THEN 49
+                  ELSE z * 4
+                       + CASE substr(tail, z + 1, 1)
+                           WHEN '1' THEN 3
+                           WHEN '2' THEN 2 WHEN '3' THEN 2
+                           WHEN '4' THEN 1 WHEN '5' THEN 1
+                           WHEN '6' THEN 1 WHEN '7' THEN 1
+                           ELSE 0 END
+                       + 1 END AS rho
+      FROM parts
+    ),
+    regs AS (SELECT source, j, max(rho) AS r FROM rho GROUP BY 1, 2),
+    per_group AS (
+      SELECT source,
+             CAST(sum(CAST(1 AS BIGINT) << (49 - r))
+                  + (256 - count(*)) * (CAST(1 AS BIGINT) << 49)
+                  AS BIGINT) AS reg_sum,
+             CAST(256 - count(*) AS BIGINT) AS zero_regs
+      FROM regs GROUP BY 1
+    ),
+    exact AS (SELECT source, CAST(count(*) AS BIGINT) AS n_exact
+              FROM dist GROUP BY 1)
+    SELECT p.source, e.n_exact, p.reg_sum, p.zero_regs,
+           round(CASE WHEN (2.6499581405668102e+19 / CAST(p.reg_sum AS DOUBLE)) <= 640.0
+                           AND p.zero_regs > 0
+                      THEN 256.0 * ln(256.0 / CAST(p.zero_regs AS DOUBLE))
+                      ELSE 2.6499581405668102e+19 / CAST(p.reg_sum AS DOUBLE)
+                 END, 4) AS hll_est
+    FROM per_group p JOIN exact e USING (source)
+    """,
+)
+def ext_hll_distinct(spark, sf_dir):
+    """[EXT] HyperLogLog distinct-token count per source (Flajolet et
+    al. 2007) reported beside the exact distinct count: 256
+    md5-addressed registers, rho from integer/string ops only, the
+    harmonic denominator formed as an exact int64 sum so partition
+    order cannot perturb it. Mergeable by cell-wise max — the
+    distributed distinct-count structure; the register-state column
+    (reg_sum) keeps the sketch itself, not just the estimate, under
+    the gate."""
+    from dissertation_data_pipeline_spark.operators.sketches import (
+        hll_distinct_by_group,
+    )
+
+    return hll_distinct_by_group(
+        load_table(spark, sf_dir, "documents"), "source"
+    )
+
+
+@register(
+    "ext_approx_count_distinct",
+    """
+    SELECT count(DISTINCT o_custkey) AS exact_custkeys,
+           TRUE AS approx_within_5pct
+    FROM orders
+    """,
+)
+def ext_approx_count_distinct(spark, sf_dir):
+    """[EXT] approx_count_distinct (A2's 100 TB path): HLL++ sketch,
+    one pass, no exact-distinct shuffle. HLL estimates are
+    engine-specific, so the hashable contract is the part both engines
+    agree on: the exact distinct count plus a boolean asserting the
+    sketch landed within 5% of it (rsd=0.02, so 5% is a 2.5-sigma
+    bound; deterministic for a fixed dataset). The unit test bounds the
+    relative error independently."""
+    o = load_table(spark, sf_dir, "orders")
+    return o.agg(
+        F.countDistinct("o_custkey").alias("exact_custkeys"),
+        (
+            F.abs(
+                F.approx_count_distinct("o_custkey", 0.02)
+                - F.countDistinct("o_custkey")
+            )
+            <= 0.05 * F.countDistinct("o_custkey")
+        ).alias("approx_within_5pct"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Holistic aggregates Spark lacks natively: the grouped-agg pandas UDAF
+# (operators.udafs, per-label coordinate-wise embedding median, exploded
+# to long form so the gate can hash it) and the grouped weighted median
+# (operators.analytics.grouped_weighted_median, exact int64 cumulative
+# weights along a documented total order).
+# ---------------------------------------------------------------------------
+
+@register(
+    "ext_udaf_label_medians",
+    """
+    WITH long AS (
+      SELECT label, i AS dim, CAST(embedding[i] AS DOUBLE) AS v
+      FROM (
+        SELECT label, embedding,
+               unnest(range(1, len(embedding) + 1)) AS i
+        FROM embeddings
+      )
+    )
+    SELECT label, CAST(dim AS BIGINT) AS dim, round(median(v), 6) AS med
+    FROM long GROUP BY 1, 2
+    """,
+)
+def ext_udaf_label_medians(spark, sf_dir):
+    """[EXT] the GROUPED_AGG pandas-UDAF surface: per-label
+    coordinate-wise embedding median (order-statistic aggregate, no
+    Spark built-in), float32 widened to float64 before sorting so the
+    middle-pair average is bit-identical to the oracle's DOUBLE
+    median. Long-form (label, dim, med) output."""
+    return label_dim_medians(load_table(spark, sf_dir, "embeddings"))
+
+
+@register(
+    "ext_weighted_median",
+    """
+    WITH base AS (
+      SELECT event_type,
+             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+             CAST(1 + user_id % 5 AS BIGINT) AS wgt,
+             event_id
+      FROM events WHERE value IS NOT NULL
+    ),
+    scored AS (
+      SELECT event_type, cents,
+             SUM(wgt) OVER (
+               PARTITION BY event_type
+               ORDER BY cents ASC, event_id ASC
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+             ) AS cum,
+             SUM(wgt) OVER (PARTITION BY event_type) AS tot
+      FROM base
+    )
+    SELECT event_type,
+           MIN(cents) AS weighted_median,
+           CAST(MAX(tot) AS BIGINT) AS total_weight
+    FROM scored WHERE 2 * cum >= tot
+    GROUP BY 1
+    """,
+)
+def ext_weighted_median(spark, sf_dir):
+    """[EXT] per-event-type weighted (lower) median of the value in
+    exact cents, weighted by a deterministic per-user weight — int64
+    cumulative weights along the (value, event_id) total order, so the
+    crossing row is engine-independent."""
+    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    base = ev.select(
+        "event_type",
+        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
+        (1 + F.col("user_id") % 5).cast("long").alias("wgt"),
+        "event_id",
+    )
+    return grouped_weighted_median(
+        base, ["event_type"], "cents", "wgt", tiebreak_col="event_id"
+    )
+
+
+# ---------------------------------------------------------------------------
+# Distribution and behaviour reports: equi-width histogram, percent of
+# total, MAD outliers, event transitions, cohort retention.
+# ---------------------------------------------------------------------------
+
+@register(
+    "ext_histogram_equiwidth",
+    """
+    WITH mm AS (
+      SELECT min(o_totalprice) AS lo, max(o_totalprice) AS hi FROM orders
+    )
+    SELECT least(CAST(floor((o_totalprice - lo) * 10 / (hi - lo)) AS BIGINT), 9) AS bucket,
+           COUNT(*) AS n,
+           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+    FROM orders CROSS JOIN mm
+    GROUP BY 1
+    """,
+)
+def ext_histogram_equiwidth(spark, sf_dir):
+    """[EXT] 10-bin equal-width histogram of order values: global
+    min/max attach as a broadcast 1-row aggregate, binning is a codegen
+    expression, counts aggregate map-side — two passes over the scan,
+    zero driver-side math. Bin edges are the same IEEE doubles in both
+    engines, so bucket assignment is identical."""
+    o = load_table(spark, sf_dir, "orders")
+    mm = o.agg(
+        F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi")
+    )
+    bucket = F.least(
+        F.floor(
+            (F.col("o_totalprice") - F.col("lo")) * 10 / (F.col("hi") - F.col("lo"))
+        ).cast("long"),
+        F.lit(9).cast("long"),
+    )
+    return (
+        o.crossJoin(F.broadcast(mm))
+        .groupBy(bucket.alias("bucket"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("total"),
+        )
+    )
+
+
+@register(
+    "ext_pct_of_total",
+    """
+    WITH rev AS (
+      SELECT n_name,
+             SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS r
+      FROM orders
+      JOIN customer ON o_custkey = c_custkey
+      JOIN nation ON c_nationkey = n_nationkey
+      GROUP BY 1
+    )
+    SELECT n_name,
+           CAST(r AS DOUBLE) AS revenue,
+           round(CAST(r AS DOUBLE) / CAST(SUM(r) OVER () AS DOUBLE), 6) AS share
+    FROM rev
+    """,
+)
+def ext_pct_of_total(spark, sf_dir):
+    """[EXT] ratio-to-report: each nation's revenue share of the
+    corpus total via an empty-frame window sum over the (tiny)
+    aggregated frame — the denominators never touch fact-table rows.
+    Exact decimal sums on both sides of the division."""
+    from pyspark.sql.window import Window
+
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    rev = (
+        o.join(c, o.o_custkey == c.c_custkey)
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .groupBy("n_name")
+        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("r"))
+    )
+    w = Window.partitionBy()
+    return rev.select(
+        "n_name",
+        F.col("r").cast("double").alias("revenue"),
+        F.round(
+            F.col("r").cast("double") / F.sum("r").over(w).cast("double"), 6
+        ).alias("share"),
+    )
+
+
+@register(
+    "ext_mad_outliers",
+    """
+    WITH cents AS (
+      SELECT event_type,
+             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
+      FROM events
+    ), med AS (
+      SELECT event_type, quantile_cont(v, 0.5) AS m FROM cents GROUP BY 1
+    ), dev AS (
+      SELECT c.event_type, c.v, med.m, abs(c.v - med.m) AS d
+      FROM cents c JOIN med USING (event_type)
+    ), mad AS (
+      SELECT event_type, quantile_cont(d, 0.5) AS mad FROM dev GROUP BY 1
+    )
+    SELECT dev.event_type,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST(SUM(CASE WHEN dev.d > 5 * mad.mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
+    FROM dev JOIN mad USING (event_type)
+    GROUP BY 1
+    """,
+)
+def ext_mad_outliers(spark, sf_dir):
+    """[EXT] robust outlier screen: median absolute deviation per
+    event_type over integer cents (exact percentile interpolation —
+    both engines IEEE-agree), outliers = |v - median| > 5*MAD. Two
+    grouped percentile passes + one flagging aggregation; the per-type
+    medians ride broadcast joins back onto the rows."""
+    e = load_table(spark, sf_dir, "events")
+    cents = e.select(
+        "event_type",
+        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("v"),
+    )
+    med = cents.groupBy("event_type").agg(
+        F.percentile("v", F.lit(0.5)).alias("m")
+    )
+    dev = cents.join(F.broadcast(med), "event_type").select(
+        "event_type", "v", F.abs(F.col("v") - F.col("m")).alias("d")
+    )
+    mad = dev.groupBy("event_type").agg(
+        F.percentile("d", F.lit(0.5)).alias("mad")
+    )
+    return (
+        dev.join(F.broadcast(mad), "event_type")
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(
+                F.when(F.col("d") > 5 * F.col("mad"), 1).otherwise(0)
+            ).cast("long").alias("n_outliers"),
+        )
+    )
+
+
+@register(
+    "ext_event_transitions",
+    """
+    WITH seq AS (
+      SELECT user_id, event_type,
+             lag(event_type) OVER (
+               PARTITION BY user_id ORDER BY ts, event_id
+             ) AS prev_type
+      FROM events
+    )
+    SELECT prev_type, event_type AS next_type, COUNT(*) AS n
+    FROM seq WHERE prev_type IS NOT NULL
+    GROUP BY 1, 2
+    """,
+)
+def ext_event_transitions(spark, sf_dir):
+    """[EXT] first-order Markov transition counts over per-user event
+    sequences: one window shuffle on user_id (total order (ts,
+    event_id) — partition-count invariant), then a map-side-combined
+    pair count. The behavioral-analytics primitive behind funnels and
+    session models."""
+    from pyspark.sql.window import Window
+
+    e = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = e.select(
+        "user_id",
+        "event_type",
+        F.lag("event_type").over(w).alias("prev_type"),
+    )
+    return (
+        seq.filter(F.col("prev_type").isNotNull())
+        .groupBy("prev_type", F.col("event_type").alias("next_type"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+@register(
+    "ext_cohort_retention",
+    """
+    WITH firsts AS (
+      SELECT user_id, CAST(date_trunc('week', min(ts)) AS DATE) AS cohort_week
+      FROM events GROUP BY 1
+    )
+    SELECT f.cohort_week,
+           CAST(floor(date_diff('day', f.cohort_week,
+                                CAST(e.ts AS DATE)) / 7.0) AS BIGINT) AS week_offset,
+           COUNT(DISTINCT e.user_id) AS n_active
+    FROM events e JOIN firsts f USING (user_id)
+    GROUP BY 1, 2
+    """,
+)
+def ext_cohort_retention(spark, sf_dir):
+    """[EXT] cohort retention: users cohorted by the ISO week of their
+    first event; per (cohort, week-offset) distinct active users. One
+    groupBy for cohort assignment (broadcast back onto events — the
+    cohort table is |users|-sized, far under the fact table), one
+    count-distinct aggregation."""
+    e = load_table(spark, sf_dir, "events")
+    firsts = e.groupBy("user_id").agg(
+        F.date_trunc("week", F.min("ts")).cast("date").alias("cohort_week")
+    )
+    joined = e.join(F.broadcast(firsts), "user_id")
+    offset = F.floor(
+        F.datediff(F.col("ts").cast("date"), F.col("cohort_week")) / 7.0
+    ).cast("long")
+    return joined.groupBy(
+        "cohort_week", offset.alias("week_offset")
+    ).agg(F.countDistinct("user_id").alias("n_active"))

@@ -1,4 +1,7 @@
-"""[EXT] dedup queries over the documents table, with DuckDB oracles.
+"""[EXT] dedup queries over the documents table, with DuckDB oracles:
+near-duplicate detection (MinHash, SimHash, Jaccard), curation
+pipelines, chunk-level boilerplate removal, entity resolution,
+containment pairs, winnowing and repeated-substring spans.
 
 Every hash in these operators is md5-derived (see operators.dedup_ext),
 so the oracle reproduces signatures, bands, candidates, and verified
@@ -968,3 +971,398 @@ def ext_simhash_pair_recall_h3(spark, sf_dir):
     Hamming-ball definition as a similarity threshold stays measured,
     not remembered (the b4r3 pattern)."""
     return _simhash_pair_recall(spark, sf_dir, cutoff=3)
+
+
+# ---------------------------------------------------------------------------
+# Corpus boilerplate removal (cross-document chunk dedup) and entity
+# resolution. Accumulations stay in integer space, so results are
+# partition-order invariant.
+# ---------------------------------------------------------------------------
+
+_CHUNK = 8  # tokens per chunk for cross-doc chunk dedup
+
+
+@register(
+    "ext_chunk_dedup_clean",
+    f"""
+    WITH toks AS (
+      SELECT doc_id, string_split(text, ' ') AS ts FROM documents
+    ), chunks AS (
+      SELECT doc_id, i AS pos,
+             array_to_string(ts[(i*{_CHUNK}+1):(i*{_CHUNK}+{_CHUNK})], ' ') AS chunk
+      FROM toks, UNNEST(range(CAST(ceil(len(ts)/{_CHUNK}.0) AS BIGINT))) AS u(i)
+    ), freq AS (
+      SELECT chunk, COUNT(DISTINCT doc_id) AS nd FROM chunks GROUP BY 1
+    )
+    SELECT c.doc_id,
+           CAST(COUNT(*) AS BIGINT) AS n_chunks,
+           CAST(SUM(CASE WHEN f.nd = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+           COALESCE(string_agg(CASE WHEN f.nd = 1 THEN c.chunk END, ' '
+                               ORDER BY c.pos), '') AS cleaned
+    FROM chunks c JOIN freq f USING (chunk)
+    GROUP BY 1
+    """,
+)
+def ext_chunk_dedup_clean(spark, sf_dir):
+    """[EXT] Cross-document boilerplate removal at token-chunk
+    granularity (the RefinedWeb/Falcon line-dedup recipe, applied to
+    8-token chunks because this corpus has no newlines): a chunk whose
+    exact text appears in more than one document is boilerplate; each
+    document is reconstructed from its surviving chunks in order.
+
+    Plan: chunking is pure codegen (split + transform/slice — no
+    explode until the chunk table), then one groupBy on chunk text for
+    the corpus frequency, one shuffle join back (fact x pre-aggregated
+    frequency — the aggregate side carries one row per distinct chunk,
+    so a viral chunk is ONE row, not a skewed key), and one groupBy
+    doc_id to reassemble. At 100 TB this is exactly the shape used in
+    production line-dedup: hash-partition on chunk digest, join,
+    regroup by doc — three shuffles, no global sort, no driver state.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    toks = F.split(F.col("text"), " ")
+    n = F.ceil(F.size(toks) / F.lit(float(_CHUNK))).cast("int")
+    chunks = F.transform(
+        F.sequence(F.lit(0), n - 1),
+        lambda i: F.array_join(F.slice(toks, i * _CHUNK + 1, _CHUNK), " "),
+    )
+    ch = d.select("doc_id", F.posexplode(chunks).alias("pos", "chunk"))
+    freq = ch.groupBy("chunk").agg(
+        F.countDistinct("doc_id").alias("nd")
+    )
+    kept_entry = F.when(
+        F.col("nd") == 1, F.struct(F.col("pos"), F.col("chunk"))
+    )  # NULL (dropped by collect_list) when the chunk is cross-doc dup
+    return (
+        ch.join(freq, "chunk")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_chunks"),
+            F.sum(F.when(F.col("nd") == 1, 1).otherwise(0))
+            .cast("long")
+            .alias("n_kept"),
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list(kept_entry)),
+                    lambda s: s.getField("chunk"),
+                ),
+                " ",
+            ).alias("cleaned"),
+        )
+    )
+
+
+def _entity_resolution_sql(src: str) -> str:
+    """The entity-resolution oracle over an arbitrary part relation —
+    shared by the corpus-wide row and the fixed-block row."""
+    return f"""
+    WITH RECURSIVE pairs AS (
+      SELECT a.p_partkey AS id_a, b.p_partkey AS id_b
+      FROM {src} a JOIN {src} b
+        ON a.p_brand = b.p_brand AND a.p_type = b.p_type
+       AND a.p_partkey < b.p_partkey
+      WHERE abs(length(a.p_name) - length(b.p_name)) <= 2
+        AND levenshtein(a.p_name, b.p_name) <= 2
+    ),
+    edges AS (
+      SELECT id_a AS src, id_b AS dst FROM pairs
+      UNION ALL
+      SELECT id_b AS src, id_a AS dst FROM pairs
+    ),
+    reach AS (
+      SELECT DISTINCT src AS id, src AS label FROM edges
+      UNION
+      SELECT e.src AS id, r.label FROM edges e JOIN reach r ON r.id = e.dst
+    ),
+    comp AS (SELECT id, MIN(label) AS component_id FROM reach GROUP BY 1)
+    SELECT component_id,
+           CAST(COUNT(*) AS BIGINT) AS n_members,
+           arg_min(p_name, p_partkey) AS canonical_name,
+           CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE)
+             AS total_retail,
+           array_to_string(list(CAST(id AS VARCHAR) ORDER BY id), ',')
+             AS members
+    FROM comp JOIN {src} part ON comp.id = part.p_partkey
+    GROUP BY 1
+    """
+
+
+@register("ext_entity_resolution", _entity_resolution_sql("part"))
+def ext_entity_resolution(spark, sf_dir):
+    """[EXT] End-to-end entity resolution, the full composition:
+    (1) blocking + fuzzy match — ``fuzzy_resolution_edges`` within
+    (brand, type) blocks: exact-text groups collapse to min-id
+    representatives (rep->member star edges), only the DISTINCT texts
+    per block fuzzy-join (length-gap prefilter, edit distance <= 2) —
+    connectivity-equivalent to the full pair set but O(rows +
+    distinct-texts^2 per block), never quadratic in rows (the full
+    pair set grew 22x across the sf0.1 -> sf1 decade; this form is
+    ~linear);
+    (2) cluster resolution — ``connected_components`` (two-level:
+    union-find under the small-edge threshold, distributed min-label
+    propagation with pointer jumping above it);
+    (3) golden record — one aggregation per cluster: representative =
+    min id (== component_id by construction), canonical name via
+    min-struct (arg-min, deterministic since ids are unique), exact
+    decimal rollup, and the member list serialized to a sorted CSV
+    string (driver-hashable).
+
+    The oracle recomputes all three stages in SQL over the FULL
+    quadratic pair set (recursive-CTE fixpoint for the components) —
+    so the gate also value-checks the rep-edge contraction's
+    components-equivalence claim, not just each stage. Scale: the
+    quadratic term is bounded by distinct texts per block, the cluster
+    step switches to distributed propagation past 2M edges, and the
+    golden-record pass is one shuffle on component_id."""
+    return _resolve_entities(load_table(spark, sf_dir, "part"))
+
+
+def _resolve_entities(part):
+    """The three-stage resolution pipeline over an arbitrary part
+    relation — shared by the corpus-wide row and the fixed-block row."""
+    from dissertation_data_pipeline_spark.operators.analytics import (
+        fuzzy_resolution_edges,
+    )
+    from dissertation_data_pipeline_spark.operators.clusters import (
+        connected_components,
+    )
+
+    pairs = fuzzy_resolution_edges(
+        part, "p_partkey", "p_name", ["p_brand", "p_type"], max_distance=2
+    )
+    comp = connected_components(pairs)
+    return (
+        comp.join(part, comp.doc_id == part.p_partkey)
+        .groupBy("component_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_members"),
+            F.min(F.struct("p_partkey", "p_name"))
+            .getField("p_name")
+            .alias("canonical_name"),
+            F.sum(F.col("p_retailprice").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("total_retail"),
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list("doc_id")),
+                    lambda x: x.cast("string"),
+                ),
+                ",",
+            ).alias("members"),
+        )
+    )
+
+
+@register(
+    "ext_entity_resolution_block",
+    _entity_resolution_sql(
+        "(SELECT * FROM part WHERE p_partkey < 500)"
+    ),
+)
+def ext_entity_resolution_block(spark, sf_dir):
+    """[EXT] the SAME three-stage entity-resolution pipeline (same
+    fuzzy_resolution_edges blocking + edit-distance match, same
+    iterative connected_components, same golden-record aggregation)
+    with the FUZZY-MATCH SCOPE fixed to a 500-part block — the
+    fixed-block oracle protocol (``ext_curation_block_pipeline``)
+    applied to this family (r8 verdict Next #3): the oracle's
+    quadratic pair set and recursive-CTE fixpoint are block-bounded,
+    so the resolved clusters and golden records stay oracle-green at
+    sf1/sf10 where the corpus-wide oracle is execute-only."""
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_partkey") < 500)
+    return _resolve_entities(part)
+
+
+# ---------------------------------------------------------------------------
+# Shapes the Jaccard/SimHash rows lack:
+#
+# - containment pairs (Broder's resemblance/containment twin):
+#   asymmetric doc-inside-doc detection that Jaccard structurally misses;
+# - winnowing fingerprints (Schleimer et al. 2003 / MOSS): position-aware
+#   local fingerprinting with a per-window guarantee — the
+#   evidence-producing complement to SimHash/MinHash;
+# - maximal repeated-substring spans (a char-gram approximation of Lee et
+#   al. 2022's suffix-array substring dedup).
+# ---------------------------------------------------------------------------
+
+@register(
+    "ext_containment_pairs",
+    r"""
+    WITH toks AS (
+      SELECT doc_id, lang, string_split_regex(lower(trim(text)), '\s+') AS t
+      FROM documents
+    ),
+    shl AS (
+      SELECT doc_id, lang,
+             list_distinct(CASE WHEN len(t) >= 3
+               THEN list_transform(range(1, len(t) - 1),
+                                   i -> array_to_string(t[i:i+2], ' '))
+               ELSE [array_to_string(t, ' ')] END) AS shingles
+      FROM toks
+    ),
+    post AS (SELECT doc_id, lang, unnest(shingles) AS s FROM shl),
+    dfreq AS (SELECT lang, s, count(*) AS dfc FROM post GROUP BY 1, 2),
+    kept AS (
+      SELECT p.doc_id, p.lang, p.s
+      FROM post p JOIN dfreq d ON p.lang = d.lang AND p.s = d.s
+      WHERE d.dfc <= 16
+    ),
+    sizes AS (SELECT doc_id, count(*) AS n FROM kept GROUP BY 1),
+    inter AS (
+      SELECT a.lang, a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
+      FROM kept a JOIN kept b
+        ON a.lang = b.lang AND a.s = b.s AND a.doc_id < b.doc_id
+      GROUP BY 1, 2, 3
+    )
+    SELECT lang, id_a, id_b, containment_a, containment_b FROM (
+      SELECT lang, id_a, id_b,
+             round(i::DOUBLE / sa.n, 6) AS containment_a,
+             round(i::DOUBLE / sb.n, 6) AS containment_b
+      FROM inter
+      JOIN sizes sa ON sa.doc_id = id_a
+      JOIN sizes sb ON sb.doc_id = id_b
+    ) WHERE containment_a >= 0.5 OR containment_b >= 0.5
+    """,
+)
+def ext_containment_pairs(spark, sf_dir):
+    """[EXT] asymmetric shingle-containment pairs within language
+    blocks: |A∩B|/|A| and |A∩B|/|B| over the CAPPED shingle universe
+    (max_df=16), kept when either direction >= 0.5 — the
+    doc-inside-doc / quote-envelope signal Jaccard structurally misses
+    (a paragraph wholly quoted in a 10x longer page has Jaccard ~0.1
+    but containment ~1.0).
+
+    The stop-shingle cap is load-bearing here, not optional: this
+    query blocks on language ALONE (cross-source quote detection is
+    the point), so block population grows with the corpus and
+    boilerplate posting lists grow linearly — measured 453 s at sf10
+    (500k docs) uncapped vs seconds capped, the df^2 blowup the cap
+    exists to kill. A contained quote's discriminative shingles are
+    low-df, so the signal survives; dropped mass is observable via
+    ``ext_stop_shingle_report``. The oracle implements the identical
+    capped-universe rule."""
+    return dx.containment_pairs(
+        load_table(spark, sf_dir, "documents"),
+        "doc_id",
+        "text",
+        ["lang"],
+        threshold=0.5,
+        max_df=16,
+    )
+
+
+# winnowing parameters: 5-char grams, window of 4 consecutive hashes
+_WINNOW_HEXVAL = " + ".join(
+    f"(strpos('0123456789abcdef', md5(substr(s, i + 1, 5))[{k}:{k}]) - 1) "
+    f"* {16 ** (8 - k)}"
+    for k in range(1, 9)
+)
+
+
+@register(
+    "ext_winnowing_fingerprints",
+    f"""
+    WITH norm AS (
+      SELECT doc_id, lower(trim(text)) AS s FROM documents
+    ),
+    keyed AS (
+      SELECT doc_id,
+             CASE WHEN length(s) >= 5
+               THEN list_transform(range(0, length(s) - 4),
+                      i -> CAST(({_WINNOW_HEXVAL}) AS BIGINT) * 1048576
+                           + (1048575 - i))
+               ELSE CAST([] AS BIGINT[]) END AS ks
+      FROM norm
+    ),
+    sel AS (
+      SELECT doc_id, len(ks) AS n_grams,
+             CASE WHEN len(ks) = 0 THEN CAST([] AS VARCHAR[])
+               ELSE list_sort(list_distinct(list_transform(
+                 range(0, greatest(len(ks) - 3, 1)),
+                 j -> concat(
+                   CAST(1048575 - (list_min(ks[j+1 : j+least(4, len(ks))])
+                                   & 1048575) AS VARCHAR),
+                   ':',
+                   CAST(list_min(ks[j+1 : j+least(4, len(ks))]) >> 20
+                        AS VARCHAR)))))
+               END AS fps
+      FROM keyed
+    )
+    SELECT doc_id, CAST(n_grams AS BIGINT) AS n_grams,
+           CAST(len(fps) AS BIGINT) AS n_fingerprints,
+           md5(array_to_string(fps, '|')) AS fp_digest
+    FROM sel
+    """,
+)
+def ext_winnowing_fingerprints(spark, sf_dir):
+    """[EXT] winnowing document fingerprints (Schleimer, Wilkerson,
+    Aiken 2003 — MOSS): hash every 5-char gram, slide a window of 4
+    hashes, keep each window's minimum (rightmost on ties via a packed
+    position key), digest the sorted distinct selections. Guaranteed
+    >= 1 fingerprint per window, expected density 2/(w+1) — the
+    position-aware local fingerprint for plagiarism/near-dup evidence.
+
+    Per-doc expression work only (no shuffle); both engines realize
+    the rightmost-min as ONE integer ``min`` over packed
+    ``hash*2^20 + (2^20-1-pos)`` keys, so selections match
+    bit-for-bit."""
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", dx.winnowing_fingerprints("text", k=5, w=4).alias("_w")
+    )
+    # unpack in a second projection: _w is referenced three times, so
+    # CollapseProject keeps the projections apart and the fingerprint
+    # pipeline runs once per row (see operator docstring)
+    return d.select(
+        "doc_id",
+        F.col("_w.n_grams").alias("n_grams"),
+        F.col("_w.n_fingerprints").alias("n_fingerprints"),
+        F.col("_w.fp_digest").alias("fp_digest"),
+    )
+
+
+@register(
+    "ext_repeated_substring_spans",
+    r"""
+    WITH posts AS (
+      SELECT doc_id, i AS pos, substr(s, i, 15) AS g
+      FROM (SELECT doc_id, lower(trim(text)) AS s FROM documents),
+           LATERAL (SELECT unnest(range(1, greatest(length(s) - 14, 0) + 1)) AS i)
+    ),
+    freq AS (SELECT g FROM posts GROUP BY g HAVING count(*) > 1),
+    dup AS (SELECT doc_id, pos FROM posts WHERE g IN (SELECT g FROM freq)),
+    runs AS (
+      SELECT doc_id, pos,
+             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
+      FROM dup
+    )
+    SELECT doc_id, span_start, span_end, span_chars FROM (
+      SELECT doc_id,
+             CAST(min(pos) AS BIGINT) AS span_start,
+             CAST(max(pos) + 14 AS BIGINT) AS span_end,
+             CAST(max(pos) + 14 - min(pos) + 1 AS BIGINT) AS span_chars
+      FROM runs GROUP BY doc_id, grp
+    ) WHERE span_chars >= 30
+    """,
+)
+def ext_repeated_substring_spans(spark, sf_dir):
+    """[EXT] maximal repeated-substring spans (the scalable char-gram
+    approximation of Lee et al. 2022's suffix-array substring dedup):
+    every position whose 15-gram recurs anywhere in the corpus is
+    flagged, consecutive flagged positions merge into maximal spans
+    (gaps-and-islands), spans under 30 chars drop. The spans are what
+    an exact-substring dedup pass would cut from the training corpus.
+    See operators/dedup_ext.py::repeated_substring_spans for the
+    no-pairwise-work plan shape."""
+    out = dx.repeated_substring_spans(
+        load_table(spark, sf_dir, "documents"),
+        "doc_id",
+        "text",
+        gram_chars=15,
+        min_span_chars=30,
+    )
+    return out.select(
+        "doc_id",
+        F.col("span_start").cast("long").alias("span_start"),
+        F.col("span_end").cast("long").alias("span_end"),
+        F.col("span_chars").cast("long").alias("span_chars"),
+    )

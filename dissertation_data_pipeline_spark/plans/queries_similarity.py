@@ -8,6 +8,7 @@ before the 6-decimal display rounding.
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from dissertation_data_pipeline_spark.operators import similarity as sim
@@ -667,7 +668,7 @@ def ext_ann_pq_codes(spark, sf_dir):
 
 # shared PQ-ADC oracle CTE chain, ending in `scored(query_id, vec_id,
 # adc)` — reused by the top-k read and the two-stage re-rank
-# (queries_wave4). Mirrors operators.similarity.pq_adc_scores.
+# (``ext_ann_pq_rerank``). Mirrors operators.similarity.pq_adc_scores.
 PQ_ADC_SCORED_CTE = f"""
     cents AS MATERIALIZED (
       SELECT row_number() OVER (ORDER BY {_CENT_ORDER}) - 1 AS code_id,
@@ -1150,3 +1151,389 @@ def ext_embedding_near_dup_recall_single(spark, sf_dir):
     remembered (the b4r3 pattern).  Theory: p(agree/plane at cosine
     0.985) = 1 - acos(0.985)/pi = 0.945; 0.945^8 = 0.64."""
     return _embedding_pair_recall(spark, sf_dir, banded=False)
+
+
+# ---------------------------------------------------------------------------
+# Embedding near-duplicate pairs (hyperplane-LSH candidates, exact
+# cosine verification)
+# ---------------------------------------------------------------------------
+
+def _near_dup_sql() -> str:
+    from dissertation_data_pipeline_spark.operators.similarity import (
+        LSH_PLANE_STEPS,
+        LSH_PLANES_MAX,
+    )
+
+    # the identical corpus-size -> plane-count rule as
+    # similarity.adaptive_lsh_planes, as an exact-count CASE: each
+    # branch inlines that plane count's full bucket expression
+    branches = "".join(
+        f"""
+           WHEN (SELECT c FROM n) < {bound}
+             THEN {_bucket_sql('embedding', planes)}"""
+        for bound, planes in LSH_PLANE_STEPS
+    )
+    return f"""
+    WITH n AS (SELECT count(*) AS c FROM embeddings),
+    corpus AS MATERIALIZED (
+      SELECT vec_id, embedding,
+             CASE {branches}
+               ELSE {_bucket_sql('embedding', LSH_PLANES_MAX)}
+             END AS bucket
+      FROM embeddings
+    )
+    SELECT id_a, id_b, cos FROM (
+      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+             round({_cos('a.embedding', 'b.embedding')}, 6) AS cos
+      FROM corpus a JOIN corpus b
+        ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+    ) WHERE cos >= 0.3
+    """
+
+
+@register("ext_embedding_near_dup", _near_dup_sql())
+def ext_embedding_near_dup(spark, sf_dir):
+    """[EXT] embedding-cosine near-duplicate pairs: hyperplane-LSH
+    buckets generate candidates, exact cosine >= threshold verifies.
+    The vector analog of minhash_lsh_pairs. The oracle reproduces the
+    md5-derived hyperplane buckets and the strict-left-fold cosine
+    bit-for-bit (same helpers as ext_ann_lsh_topk). The testdata
+    embeddings are near-orthogonal random vectors (max pair cosine
+    ~0.5), so the registered query uses threshold 0.3 to push real
+    pairs through the candidate->verify path instead of vacuously
+    matching on an empty set; production near-dup would use ~0.99.
+
+    The plane count is SIZE-ADAPTIVE (adaptive_lsh_planes; the exact
+    same row-count rule in the oracle's CASE): fixed 8 planes means
+    256 buckets forever, so random (non-similar) collisions grow
+    quadratically with the corpus — measured 372 s at sf10 (200k
+    vectors) with 8 planes vs seconds with the rule's 16. Unchanged
+    at every gate scale (sf0.001-0.1 are all < 20k vectors -> 8
+    planes, bit-identical to the fixed-plane formulation). Norms are
+    precomputed per vector (cosine_pre): re-folding them per pair
+    multiplied the HOF work by pairs/vectors."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    planes = sim.hyperplanes(sim.adaptive_lsh_planes(emb.count()), 64)
+    b = (
+        emb.withColumn("_bucket", sim.lsh_bucket("embedding", planes))
+        .withColumn("_n", sim.l2_norm("embedding"))
+        .transform(lambda d: pin_spread(d, "_bucket"))
+    )
+    a2, b2 = b.alias("a"), b.alias("b")
+    pairs = (
+        a2.join(
+            b2,
+            (F.col("a._bucket") == F.col("b._bucket"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
+        )
+        .select(
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
+            F.round(
+                sim.cosine_pre(
+                    F.col("a.embedding"),
+                    F.col("b.embedding"),
+                    F.col("a._n"),
+                    F.col("b._n"),
+                ),
+                6,
+            ).alias("cos"),
+        )
+        .filter(F.col("cos") >= 0.3)
+    )
+    return pairs
+
+
+# ---------------------------------------------------------------------------
+# Two-stage PQ retrieval and the IVF-PQ composition.
+#
+# Exhaustive PQ-ADC retrieval (``ext_ann_pq_rerank``: shortlist by
+# asymmetric code distance, re-rank the shortlist against true vectors)
+# measured >40 min at sf10: its lookup join is O(corpus x queries) by
+# construction, the documented cost of an *exhaustive baseline*. What
+# production indexes run is the IVF-PQ composition (Jégou et al. 2011's
+# IVFADC): coarse-quantizer pruning (IVF) in front of code-distance
+# ranking (PQ) in front of a point-lookup exact re-rank, so per-query
+# work is bounded by n_probe/n_cells of the corpus. Distances are
+# strict-fold doubles floored into integer picodistance units before any
+# reduction.
+# ---------------------------------------------------------------------------
+
+@register(
+    "ext_ann_pq_rerank",
+    f"""
+    WITH {PQ_ADC_SCORED_CTE},
+    short AS (
+      SELECT query_id, vec_id FROM (
+        SELECT query_id, vec_id,
+               row_number() OVER (PARTITION BY query_id
+                                  ORDER BY adc ASC, vec_id ASC) AS rank
+        FROM scored
+      ) WHERE rank <= 20
+    ),
+    rr AS (
+      SELECT s.query_id, s.vec_id,
+             CAST(floor({_D2.format(a='q.embedding', b='c.embedding')}
+                        * 1000000000000) AS BIGINT) AS exact_pd
+      FROM short s
+      JOIN embeddings q ON q.vec_id = s.query_id
+      JOIN embeddings c ON c.vec_id = s.vec_id
+    )
+    SELECT query_id, vec_id, exact_pd, rank FROM (
+      SELECT query_id, vec_id, exact_pd,
+             row_number() OVER (PARTITION BY query_id
+                                ORDER BY exact_pd ASC, vec_id ASC) AS rank
+      FROM rr
+    ) WHERE rank <= 5
+    """,
+)
+def ext_ann_pq_rerank(spark, sf_dir):
+    """[EXT] two-stage PQ retrieval — the query path every production
+    PQ index runs: shortlist top-20 per query by asymmetric code
+    distance (corpus touched only through its 8 nibble codes), then
+    re-rank the 20 candidates against their TRUE vectors with exact L2
+    and keep the top-5. The expensive exact distances run on 20 rows
+    per query instead of the whole corpus — at 100 TB the re-rank
+    stage reads a point-lookup's worth of full vectors.
+
+    Exactness: shortlist membership is decided on exact-integer ADC
+    picodistances with a full tiebreak; re-rank distances are
+    strict-fold doubles floored to integer picodistance units —
+    bit-identical in both engines before any comparison.
+
+    Scale status: the shortlist stage here is EXHAUSTIVE ADC —
+    O(corpus x queries) by construction (measured >40 min at sf10),
+    the PQ analog of ``ext_ann_brute_topk``'s yardstick role. The
+    production-shaped path is ``ext_ann_ivfpq_rerank``
+    (below), which bounds the ADC stage to n_probe/n_cells
+    of the corpus via coarse-cell pruning."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+    wa = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("vec_id"))
+    short = (
+        sim.pq_adc_scores(emb, q, exclude_self=True)
+        .withColumn("_rn", F.row_number().over(wa))
+        .filter(F.col("_rn") <= 20)
+        .select("query_id", "vec_id")
+    )
+    qv = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv"))
+    cv = emb.select(F.col("vec_id"), F.col("embedding").alias("_cv"))
+    d2 = F.aggregate(
+        F.zip_with(
+            F.col("_qv"),
+            F.col("_cv"),
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    rr = (
+        short.join(qv, "query_id")
+        .join(cv, "vec_id")
+        .select(
+            "query_id",
+            "vec_id",
+            F.floor(d2 * F.lit(1_000_000_000_000)).cast("long").alias("exact_pd"),
+        )
+    )
+    wr = Window.partitionBy("query_id").orderBy(F.asc("exact_pd"), F.asc("vec_id"))
+    return (
+        rr.withColumn("rank", F.row_number().over(wr))
+        .filter(F.col("rank") <= 5)
+        .select("query_id", "vec_id", "exact_pd", "rank")
+    )
+
+
+# per-subspace squared L2 between an 8-wide slice of a query vector and
+# a codebook subcentroid — the same strict left fold as the engine
+_SUB_D2 = (
+    "list_reduce(list_prepend(0.0, list_transform(range(1, 9), "
+    "i -> ({a}[i]::DOUBLE - {b}[i]::DOUBLE) "
+    "* ({a}[i]::DOUBLE - {b}[i]::DOUBLE))), (acc, x) -> acc + x)"
+)
+
+
+@register(
+    "ext_ann_ivfpq_rerank",
+    f"""
+    WITH coarse AS MATERIALIZED (
+      SELECT row_number() OVER (ORDER BY {_CENT_ORDER}) - 1 AS cell_id,
+             embedding AS centroid
+      FROM embeddings ORDER BY {_CENT_ORDER} LIMIT 32
+    ),
+    cells AS MATERIALIZED (
+      SELECT vec_id, cell_id FROM (
+        SELECT c.vec_id, k.cell_id,
+               row_number() OVER (PARTITION BY c.vec_id
+                 ORDER BY {_cos('c.embedding', 'k.centroid')} DESC,
+                          k.cell_id ASC) AS cr
+        FROM embeddings c, coarse k) WHERE cr = 1
+    ),
+    probes AS (
+      SELECT query_id, cell_id FROM (
+        SELECT q.vec_id AS query_id, k.cell_id,
+               row_number() OVER (PARTITION BY q.vec_id
+                 ORDER BY {_cos('q.embedding', 'k.centroid')} DESC,
+                          k.cell_id ASC) AS cr
+        FROM embeddings q, coarse k WHERE {_QUERY_PRED}) WHERE cr <= 2
+    ),
+    pqcents AS MATERIALIZED (
+      SELECT row_number() OVER (ORDER BY {_CENT_ORDER}) - 1 AS code_id,
+             embedding AS centroid
+      FROM embeddings ORDER BY {_CENT_ORDER} LIMIT 16
+    ),
+    subs AS (SELECT unnest(range(0, 8)) AS s),
+    cb AS (
+      SELECT code_id, s, centroid[(s*8+1):(s*8+8)] AS subc FROM pqcents, subs
+    ),
+    codes AS MATERIALIZED (
+      SELECT vec_id, s, code_id FROM (
+        SELECT vx.vec_id, vx.s, cb.code_id,
+               row_number() OVER (PARTITION BY vx.vec_id, vx.s ORDER BY
+                 {_SUB_D2.format(a='subv', b='subc')} ASC,
+                 cb.code_id ASC) AS rn
+        FROM (SELECT vec_id, s, embedding[(s*8+1):(s*8+8)] AS subv
+              FROM embeddings, subs) vx
+        JOIN cb USING (s)
+      ) WHERE rn = 1
+    ),
+    lut AS (
+      SELECT p.query_id, p.cell_id, cb.s, cb.code_id,
+             CAST(floor(
+               {_SUB_D2.format(a="q.embedding[(cb.s*8+1):(cb.s*8+8)]", b="subc")}
+               * 1000000000000) AS BIGINT) AS qd
+      FROM probes p
+      JOIN embeddings q ON q.vec_id = p.query_id
+      CROSS JOIN cb
+    ),
+    scored AS (
+      SELECT lut.query_id, codes.vec_id, CAST(SUM(lut.qd) AS BIGINT) AS adc
+      FROM codes
+      JOIN cells USING (vec_id)
+      JOIN lut ON lut.cell_id = cells.cell_id
+              AND lut.s = codes.s AND lut.code_id = codes.code_id
+      WHERE codes.vec_id <> lut.query_id
+      GROUP BY 1, 2
+    ),
+    short AS (
+      SELECT query_id, vec_id FROM (
+        SELECT query_id, vec_id,
+               row_number() OVER (PARTITION BY query_id
+                                  ORDER BY adc ASC, vec_id ASC) AS rk
+        FROM scored) WHERE rk <= 20
+    ),
+    rr AS (
+      SELECT s.query_id, s.vec_id,
+             CAST(floor({_D2.format(a='q.embedding', b='c.embedding')}
+                        * 1000000000000) AS BIGINT) AS exact_pd
+      FROM short s
+      JOIN embeddings q ON q.vec_id = s.query_id
+      JOIN embeddings c ON c.vec_id = s.vec_id
+    )
+    SELECT query_id, vec_id, exact_pd, rank FROM (
+      SELECT query_id, vec_id, exact_pd,
+             row_number() OVER (PARTITION BY query_id
+                                ORDER BY exact_pd ASC, vec_id ASC) AS rank
+      FROM rr
+    ) WHERE rank <= 5
+    """,
+)
+def ext_ann_ivfpq_rerank(spark, sf_dir):
+    """[EXT] IVF-PQ two-stage retrieval (Jégou et al. 2011 IVFADC —
+    the composition production vector indexes run): 32 coarse cells
+    prune each query to its 2 nearest cells, PQ asymmetric code
+    distances shortlist the top-20 of ONLY those cells' vectors, and
+    the 20 survivors are re-ranked against true vectors with exact L2
+    into a top-5.
+
+    The per-query ADC work is n_probe/n_cells (1/16) of the
+    exhaustive ``ext_ann_pq_rerank``; at 100 TB the cells are the
+    partition layout (``write_ivf_partitioned``), so pruning is a
+    planning-time partition filter and the exact stage is a
+    shortlist-sized point lookup. Determinism matches the exhaustive
+    path: integer picodistance ADC sums, full (adc, id) and
+    (exact_pd, id) tiebreaks."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+    return sim.ivfpq_rerank_topk(
+        q,
+        emb,
+        n_cells=32,
+        n_probe=2,
+        shortlist=20,
+        k=5,
+        exclude_self=True,
+    )
+
+
+# ---------------------------------------------------------------------------
+# Multi-probe LSH top-10 (Lv et al. 2007): each query also scores the
+# buckets its lowest-margin sign-bit flips reach
+# ---------------------------------------------------------------------------
+
+def _multiprobe_sql() -> str:
+    bucket_c = _bucket_sql("embedding")
+    projs = _plane_proj_sqls("embedding")
+    margins = ", ".join(
+        f"{{'m': abs({p}), 'j': {j}}}" for j, p in enumerate(projs)
+    )
+    return f"""
+    WITH corpus AS MATERIALIZED (
+      SELECT vec_id, embedding, {bucket_c} AS bucket FROM embeddings
+    ),
+    q AS (
+      SELECT vec_id AS query_id, embedding AS query_vec,
+             {bucket_c} AS bucket,
+             list_sort([{margins}]) AS ms
+      FROM embeddings WHERE {_QUERY_PRED}
+    ),
+    probes AS (
+      SELECT query_id, query_vec,
+             unnest(list_prepend(bucket,
+               list_transform(ms[1:2], f -> xor(bucket, 1 << f.j))))
+               AS bucket
+      FROM q
+    ),
+    scored AS (
+      SELECT p.query_id, c.vec_id,
+             round({_cos('p.query_vec', 'c.embedding')}, 6) AS sim
+      FROM probes p JOIN corpus c USING (bucket)
+      WHERE p.query_id <> c.vec_id
+    ),
+    ranked AS (
+      SELECT query_id, vec_id, sim,
+             row_number() OVER (PARTITION BY query_id
+                                ORDER BY sim DESC, vec_id ASC) AS rank
+      FROM scored
+    )
+    SELECT query_id, vec_id, sim, rank FROM ranked WHERE rank <= 10
+    """
+
+
+@register("ext_ann_lsh_multiprobe_topk", _multiprobe_sql())
+def ext_ann_lsh_multiprobe_topk(spark, sf_dir):
+    """[EXT] multi-probe LSH top-10 (Lv et al. 2007): each query
+    scores its own bucket PLUS the buckets reached by flipping its 2
+    lowest-|margin| sign bits — the planes the query sits closest to,
+    the likeliest single-bit differences for a true neighbor. The
+    standard recall lever for single-table LSH: ~3x the candidate
+    reads recover most of what a second hash table would buy without
+    storing the corpus twice; at 100 TB the corpus stays written once
+    (partitioned by bucket) and multi-probe is a query-side fan-out
+    over 3 partition keys. Candidates strictly contain the
+    single-probe set, so per-query top-1 similarity dominates
+    ``ext_ann_lsh_topk``'s (pinned by test). Margins are the identical
+    projection doubles as the bucket bits on both engines, so flip
+    selection (and therefore the candidate set) matches exactly."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    return sim.hyperplane_lsh_multiprobe_topk(
+        queries, emb, k=10, n_flip=2, exclude_self=True
+    )

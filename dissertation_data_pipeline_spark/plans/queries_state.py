@@ -1,9 +1,10 @@
-"""Gate row for the §2.9 incremental-ingest state-table protocol
-(I1 content-hash change detection, I2/I3 processed-set resume).
+"""Incremental ingest and table maintenance: the §2.9 state-table
+protocol (I1 content-hash change detection, I2/I3 processed-set
+resume), MERGE INTO, CDC apply, incremental aggregates and dense ids.
 
 The reference keeps this state as JSON files (legiscan_api.py:21-56,
 utils.py:14-53); the engine keeps it as a keyed parquet ``StateTable``
-probed with joins.  This query drives the REAL protocol end-to-end —
+probed with joins.  The protocol row drives the REAL protocol end-to-end —
 ``StateTable.upsert`` twice (second batch overwrites a key subset, so
 update-wins is exercised), ``read`` back, then the two membership
 operators — and oracles the outcome with plain SQL that restates the
@@ -16,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from dissertation_data_pipeline_spark.operators.merge import apply_changes, merge_upsert
 from dissertation_data_pipeline_spark.plans.registry import register
 from dissertation_data_pipeline_spark.tables import load_table
 
@@ -227,3 +229,202 @@ def i4_negative_cache(spark, sf_dir):
         F.col("cust_id").cast("long").alias("key"),
         F.col("phone"),
     )
+
+
+# ---------------------------------------------------------------------------
+# Table maintenance. MERGE INTO (operators.merge) is the set-based form
+# of the reference's read-patch-rewrite snapshot maintenance
+# (build_master_corpus.py concat-then-dedup; the enricher's
+# read-patch-write loop) — one full-outer shuffle join. CDC apply
+# replays a change log (latest-op-per-key, deletes win) onto a base
+# snapshot — the incremental sibling of MERGE.
+# ---------------------------------------------------------------------------
+
+@register(
+    "ext_merge_upsert",
+    """
+    WITH t AS (
+      SELECT doc_id, lang, source, n_chars FROM documents WHERE doc_id % 3 != 2
+    ),
+    u AS (
+      SELECT doc_id, lang AS u_lang, n_chars + 100 AS u_n
+      FROM documents WHERE doc_id % 2 = 0
+    ),
+    j AS (
+      SELECT t.doc_id AS t_id, u.doc_id AS u_id,
+             t.lang, t.source, t.n_chars, u.u_lang, u.u_n
+      FROM t FULL JOIN u ON t.doc_id = u.doc_id
+    )
+    SELECT COALESCE(t_id, u_id) AS doc_id,
+           CASE WHEN t_id IS NOT NULL THEN lang ELSE u_lang END AS lang,
+           CASE WHEN t_id IS NOT NULL AND u_id IS NOT NULL THEN 'merged'
+                WHEN t_id IS NOT NULL THEN source
+                ELSE 'inserted' END AS source,
+           CASE WHEN t_id IS NOT NULL AND u_id IS NOT NULL THEN u_n
+                WHEN t_id IS NOT NULL THEN n_chars
+                ELSE u_n END AS n_chars
+    FROM j
+    WHERE NOT (t_id IS NOT NULL AND u_id IS NOT NULL
+               AND COALESCE(source = 'src0', FALSE))
+    """,
+)
+def ext_merge_upsert(spark, sf_dir):
+    """[EXT] MERGE INTO semantics on the documents snapshot: the
+    doc_id%2 slice plays the incoming batch against the doc_id%3
+    target. Matched rows in 'src0' are deleted, other matches update
+    (source='merged', n_chars from the batch), unmatched batch rows
+    insert with source='inserted'. One full-outer shuffle join on the
+    key; output schema == target schema (overwrite-ready)."""
+    docs = load_table(spark, sf_dir, "documents")
+    target = docs.filter(F.col("doc_id") % 3 != 2).select(
+        "doc_id", "lang", "source", "n_chars"
+    )
+    updates = docs.filter(F.col("doc_id") % 2 == 0).select(
+        "doc_id",
+        F.col("lang").alias("u_lang"),
+        (F.col("n_chars") + 100).alias("u_n"),
+    )
+    return merge_upsert(
+        target,
+        updates,
+        "doc_id",
+        update_set={"source": F.lit("merged"), "n_chars": F.col("s.u_n")},
+        insert_values={
+            "doc_id": F.col("s.doc_id"),
+            "lang": F.col("s.u_lang"),
+            "source": F.lit("inserted"),
+            "n_chars": F.col("s.u_n"),
+        },
+        delete_when=F.col("t.source") == "src0",
+    )
+
+
+@register(
+    "ext_cdc_apply",
+    """
+    WITH base AS (
+      SELECT c_custkey AS user_id, c_name FROM customer WHERE c_custkey < 100
+    ),
+    ch AS (
+      SELECT user_id, ts, event_id, event_type AS ch_type, value AS ch_value,
+             row_number() OVER (
+               PARTITION BY user_id ORDER BY ts DESC, event_id DESC
+             ) AS rn
+      FROM events
+    ),
+    latest AS (
+      SELECT user_id, ts, event_id, ch_type, ch_value FROM ch WHERE rn = 1
+    ),
+    j AS (
+      SELECT b.user_id AS b_id, l.user_id AS c_id,
+             b.c_name, l.ts, l.event_id, l.ch_type, l.ch_value
+      FROM base b FULL JOIN latest l ON b.user_id = l.user_id
+    )
+    SELECT COALESCE(b_id, c_id) AS user_id, c_name, ts, event_id,
+           ch_type, ch_value,
+           CASE WHEN c_id IS NULL THEN 'kept'
+                WHEN b_id IS NOT NULL THEN 'updated'
+                ELSE 'inserted' END AS change_status
+    FROM j
+    WHERE NOT (c_id IS NOT NULL AND COALESCE(ch_type = 'error', FALSE))
+    """,
+)
+def ext_cdc_apply(spark, sf_dir):
+    """[EXT] CDC replay: the events table as a change log over a
+    customer snapshot (user_id keys; 'error' = tombstone/delete, any
+    other latest op upserts). Latest-op-per-key by the deterministic
+    (ts DESC, event_id DESC) order, then one full-outer join applies
+    kept/updated/inserted/deleted fates. Users >= 100 exercise the
+    insert leg; latest-op deletes remove their key entirely."""
+    base = (
+        load_table(spark, sf_dir, "customer")
+        .filter(F.col("c_custkey") < 100)
+        .select(F.col("c_custkey").alias("user_id"), "c_name")
+    )
+    changes = load_table(spark, sf_dir, "events").select(
+        "user_id",
+        "ts",
+        "event_id",
+        F.col("event_type").alias("ch_type"),
+        F.col("value").alias("ch_value"),
+    )
+    return apply_changes(
+        base,
+        changes,
+        "user_id",
+        order_by=[F.desc("ts"), F.desc("event_id")],
+        is_delete=F.col("ch_type") == "error",
+    )
+
+
+# ---------------------------------------------------------------------------
+# Incremental maintenance and enumeration: an aggregate refreshed from a
+# persisted state table plus a delta batch (operators.merge), and
+# contiguous global ids without a single-partition sort (operators.ids).
+# ---------------------------------------------------------------------------
+
+@register(
+    "ext_incremental_agg",
+    """
+    SELECT user_id,
+           CAST(count(*) AS BIGINT) AS n_events,
+           CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
+                AS BIGINT) AS value_cents
+    FROM events GROUP BY 1
+    """,
+)
+def ext_incremental_agg(spark, sf_dir):
+    """[EXT] incremental aggregate maintenance: the per-user event
+    rollup is refreshed from a persisted state table (the event_id%10
+    != 0 slice's aggregate) plus a delta batch aggregate (the %10 == 0
+    slice) via operators/merge.py::merge_aggregates — ONE full-outer
+    join of two key-sized tables, O(delta) new data read. The oracle
+    re-aggregates the whole corpus: the merged state must equal the
+    full recompute exactly (counts and cent-sums are exact int64)."""
+    from dissertation_data_pipeline_spark.operators.merge import merge_aggregates
+
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id",
+        "event_id",
+        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
+    )
+
+    def agg(df):
+        return df.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("cents").alias("value_cents"),
+        )
+
+    old = agg(ev.filter(F.col("event_id") % 10 != 0))
+    delta = agg(ev.filter(F.col("event_id") % 10 == 0))
+    return merge_aggregates(
+        old, delta, "user_id", count_col="n_events", sum_cols=["value_cents"]
+    )
+
+
+@register(
+    "ext_dense_ids",
+    """
+    SELECT doc_id,
+           CAST(row_number() OVER (ORDER BY md5(CAST(doc_id AS VARCHAR)))
+                - 1 AS BIGINT) AS dense_id
+    FROM documents
+    """,
+)
+def ext_dense_ids(spark, sf_dir):
+    """[EXT] scalable global enumeration (operators/ids.py dense_ids):
+    contiguous 0-based ids over the corpus in a total key order
+    WITHOUT the single-partition global-sort window the naive
+    ``row_number() OVER (ORDER BY ...)`` plans — range-partitioned
+    sorted layout, Arrow-batched per-partition enumeration (zero extra
+    shuffles), prefix-sum offsets broadcast back.  The order key is
+    md5(doc_id) so the assigned ids are a nontrivial permutation (by
+    raw doc_id the op would be the identity and the row vacuous); the
+    oracle is the very window the operator exists to avoid, which at
+    gate SF is cheap and exact."""
+    from dissertation_data_pipeline_spark.operators.ids import dense_ids
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.md5(F.col("doc_id").cast("string")).alias("sort_key")
+    )
+    return dense_ids(docs, "sort_key").select("doc_id", "dense_id")

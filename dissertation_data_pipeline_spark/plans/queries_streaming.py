@@ -7,6 +7,8 @@ Value sums use DECIMAL(18,2) (order-independent, engine-exact).
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import functions as F
 
 from dissertation_data_pipeline_spark.plans.registry import register
@@ -148,6 +150,64 @@ def _drain_partitions(n_rows: int, spark) -> int:
     return max(8, min(conf, n_rows // 125_000))
 
 
+def _drain_profile(spark, sf_dir, operator, sink_name: str, state_store):
+    """Stage the events table, drain it through ``operator`` into the
+    memory sink ``sink_name`` inside the ``state_store`` context, and
+    reduce the update-mode emissions to the final state per key — the
+    shared body of ``s_stateful_profile`` (whose docstring explains the
+    staging and the monotone reduction) and ``s_stateful_profile_tws``."""
+    import os
+    import shutil
+    import tempfile
+
+    from dissertation_data_pipeline_spark.streaming.jobs import (
+        read_events_stream,
+        run_available_now_to_memory,
+    )
+
+    events = load_table(spark, sf_dir, "events")
+    n_events = events.count()
+    # stage only the four columns the profile operators consume (both
+    # project exactly these); event_id and the props JSON are
+    # staging-write dead weight
+    staged = events.select("user_id", "ts", "event_type", "value")
+    work = tempfile.mkdtemp(prefix=f"ddp_{sink_name}_")
+    try:
+        src = os.path.join(work, "src")
+        staged.repartition(2).write.parquet(src)
+        stream = read_events_stream(
+            spark, src, staged.schema, max_files_per_trigger=1
+        )
+        with state_store:
+            sink = run_available_now_to_memory(
+                stream,
+                operator,
+                sink_name,
+                os.path.join(work, "ckpt"),
+                output_mode="update",
+                # loaded-host headroom (idle: ~6 s) — same rationale as
+                # s_stream_stream_join
+                timeout_sec=600,
+                shuffle_partitions=_drain_partitions(n_events, spark),
+                # update-mode, no timers: the trailing empty micro-batch
+                # emits nothing and only pays state-store load/commit
+                # (for RocksDB, re-opening all 8 stores: measured 7.7 s
+                # of executor time at sf0.1) — A/B-verified identical
+                # output (r10, hash-equal)
+                no_data_batches=False,
+            )
+        final = sink.groupBy("user_id").agg(
+            F.max("n_events").alias("n_events"),
+            F.max("last_ts").alias("last_ts"),
+            F.max("n_event_types").cast("int").alias("n_event_types"),
+        )
+        # materialize before the rmtree below (the memory sink itself
+        # lives in driver memory, but don't rely on that detail)
+        return final.localCheckpoint()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
 @register(
     "s_stateful_profile",
     """
@@ -177,61 +237,20 @@ def s_stateful_profile(spark, sf_dir):
     it in float across arbitrary batch boundaries, and float addition
     order is not engine-portable (it stays pytest-covered).
     """
-    import os
-    import shutil
-    import tempfile
-
-    from dissertation_data_pipeline_spark.streaming.jobs import (
-        read_events_stream,
-        run_available_now_to_memory,
-    )
     from dissertation_data_pipeline_spark.streaming.stateful import (
         running_user_profile,
     )
 
-    events = load_table(spark, sf_dir, "events")
-    n_events = events.count()
-    # stage only the four columns the profile operator consumes
-    # (running_user_profile projects exactly these); event_id and the
-    # props JSON are staging-write dead weight
-    staged = events.select("user_id", "ts", "event_type", "value")
-    work = tempfile.mkdtemp(prefix="ddp_stateful_gate_")
-    try:
-        src = os.path.join(work, "src")
-        staged.repartition(2).write.parquet(src)
-        stream = read_events_stream(
-            spark, src, staged.schema, max_files_per_trigger=1
-        )
-        sink = run_available_now_to_memory(
-            stream,
-            # evict=False: a finite AvailableNow drain must terminate —
-            # ProcessingTimeTimeout keeps shouldRunAnotherBatch true and
-            # the trigger spins empty state-cleanup batches forever.
-            lambda s: running_user_profile(s, evict=False),
-            "s_stateful_profile_sink",
-            os.path.join(work, "ckpt"),
-            output_mode="update",
-            # loaded-host headroom (idle: ~6 s) — same rationale as
-            # s_stream_stream_join
-            timeout_sec=600,
-            shuffle_partitions=_drain_partitions(n_events, spark),
-            # update-mode, NoTimeout: the trailing empty micro-batch
-            # emits nothing and only pays state-store load/commit —
-            # A/B-verified identical output (r10, hash-equal)
-            no_data_batches=False,
-        )
-        # The memory sink holds its rows in the driver; the staged
-        # files and checkpoint are dead weight once the query drains.
-        final = sink.groupBy("user_id").agg(
-            F.max("n_events").alias("n_events"),
-            F.max("last_ts").alias("last_ts"),
-            F.max("n_event_types").cast("int").alias("n_event_types"),
-        )
-        # materialize before the rmtree below (the memory sink itself
-        # lives in driver memory, but don't rely on that detail)
-        return final.localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain_profile(
+        spark,
+        sf_dir,
+        # evict=False: a finite AvailableNow drain must terminate —
+        # ProcessingTimeTimeout keeps shouldRunAnotherBatch true and
+        # the trigger spins empty state-cleanup batches forever.
+        lambda s: running_user_profile(s, evict=False),
+        "s_stateful_profile_sink",
+        contextlib.nullcontext(),
+    )
 
 
 def _tws_runtime_available() -> bool:
@@ -317,62 +336,27 @@ if _tws_runtime_available():
         importable (see _tws_runtime_available); elsewhere the Spark-4
         state API surface stays pytest-covered via the parity test's
         dependency skip."""
-        import os
-        import shutil
-        import tempfile
-
         from dissertation_data_pipeline_spark.streaming.jobs import (
-            read_events_stream,
             rocksdb_state_store,
-            run_available_now_to_memory,
         )
         from dissertation_data_pipeline_spark.streaming.tws import (
             running_user_profile_tws,
         )
 
-        events = load_table(spark, sf_dir, "events")
-        n_events = events.count()
-        # same staged-column pruning as the sibling drain: the TWS
-        # operator projects exactly these four columns
-        staged = events.select("user_id", "ts", "event_type", "value")
-        work = tempfile.mkdtemp(prefix="ddp_tws_gate_")
-        try:
-            src = os.path.join(work, "src")
-            staged.repartition(2).write.parquet(src)
-            stream = read_events_stream(
-                spark, src, staged.schema, max_files_per_trigger=1
-            )
+        return _drain_profile(
+            spark,
+            sf_dir,
+            # no TTL -> timeMode None -> the AvailableNow drain
+            # terminates by default (the eviction knob the OLD
+            # API's timeoutConf couldn't offer a finite drain)
+            running_user_profile_tws,
+            "s_stateful_profile_tws_sink",
             # TWS keeps each named state variable in its own column
             # family, which the default HDFS-backed provider rejects
             # (MULTIPLE_COLUMN_FAMILIES not supported) — RocksDB is a
             # REQUIREMENT here, not just the 100 TB sizing choice.
-            with rocksdb_state_store(spark):
-                sink = run_available_now_to_memory(
-                    stream,
-                    # no TTL -> timeMode None -> the AvailableNow drain
-                    # terminates by default (the eviction knob the OLD
-                    # API's timeoutConf couldn't offer a finite drain)
-                    lambda s: running_user_profile_tws(s),
-                    "s_stateful_profile_tws_sink",
-                    os.path.join(work, "ckpt"),
-                    output_mode="update",
-                    timeout_sec=600,
-                    shuffle_partitions=_drain_partitions(n_events, spark),
-                    # timeMode None (no timers): the trailing empty
-                    # micro-batch emits nothing but re-opens and
-                    # commits all 8 RocksDB stores (measured 7.7 s of
-                    # executor time at sf0.1) — skip it; output
-                    # A/B-verified identical on the sibling drain
-                    no_data_batches=False,
-                )
-            final = sink.groupBy("user_id").agg(
-                F.max("n_events").alias("n_events"),
-                F.max("last_ts").alias("last_ts"),
-                F.max("n_event_types").cast("int").alias("n_event_types"),
-            )
-            return final.localCheckpoint()
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
+            rocksdb_state_store(spark),
+        )
 
 else:
     # s_stateful_profile_tws is EXPLICITLY UNREGISTERED — the gate row
@@ -680,6 +664,20 @@ def s_stream_stream_join_evict(spark, sf_dir):
         shutil.rmtree(work, ignore_errors=True)
 
 
+def _typed_stream(spark, src: str, schema, event_type: str):
+    """One event type of the staged click/purchase directory as a
+    stream, watermarked AFTER the type filter so each stream's
+    watermark derives from its own rows (the outer-join rows' rule)."""
+    return (
+        spark.readStream.format("parquet")
+        .schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .load(src)
+        .filter(F.col("event_type") == event_type)
+        .withWatermark("ts", "2 hours")
+    )
+
+
 @register(
     "s_stream_stream_left_outer",
     """
@@ -756,19 +754,8 @@ def s_stream_stream_left_outer(spark, sf_dir):
     try:
         src = os.path.join(work, "src")
         staged.repartition(2).write.parquet(src)
-
-        def typed_stream(event_type):
-            return (
-                spark.readStream.format("parquet")
-                .schema(staged.schema)
-                .option("maxFilesPerTrigger", 1)
-                .load(src)
-                .filter(F.col("event_type") == event_type)
-                .withWatermark("ts", "2 hours")
-            )
-
-        clicks = typed_stream("click")
-        purchases = typed_stream("purchase")
+        clicks = _typed_stream(spark, src, staged.schema, "click")
+        purchases = _typed_stream(spark, src, staged.schema, "purchase")
         sink = run_available_now_to_memory(
             clicks,
             lambda l: stream_stream_interval_join(
@@ -862,19 +849,8 @@ def s_stream_stream_full_outer(spark, sf_dir):
     try:
         src = os.path.join(work, "src")
         staged.repartition(2).write.parquet(src)
-
-        def typed_stream(event_type):
-            return (
-                spark.readStream.format("parquet")
-                .schema(staged.schema)
-                .option("maxFilesPerTrigger", 1)
-                .load(src)
-                .filter(F.col("event_type") == event_type)
-                .withWatermark("ts", "2 hours")
-            )
-
-        clicks = typed_stream("click")
-        purchases = typed_stream("purchase")
+        clicks = _typed_stream(spark, src, staged.schema, "click")
+        purchases = _typed_stream(spark, src, staged.schema, "purchase")
         joined = stream_stream_interval_join(
             clicks, purchases, "user_id", within="1 hour", how="full_outer"
         )

@@ -1,5 +1,6 @@
-"""[EXT] temporal queries: as-of join, interval join, hierarchical
-rollup, exact percentiles — all oracle-checked against DuckDB.
+"""[EXT] temporal queries: as-of join (backward and nearest), interval
+join, hierarchical rollup, exact percentiles, time series and
+late-data accounting — all oracle-checked against DuckDB.
 
 Exactness notes (see registry docstring + BASELINE.md):
 - The as-of right side is pre-aggregated to one row per (user_id, ts)
@@ -18,22 +19,21 @@ Exactness notes (see registry docstring + BASELINE.md):
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from dissertation_data_pipeline_spark.operators.temporal import (
     asof_join,
+    asof_join_nearest,
     interval_join,
+    late_event_report,
     scd2_apply_batch,
     scd2_history,
     sessionize,
     time_rollup,
 )
-from dissertation_data_pipeline_spark.plans.registry import register
+from dissertation_data_pipeline_spark.plans.registry import _dec, register
 from dissertation_data_pipeline_spark.tables import load_table
-
-
-def _dec(c):
-    return (F.col(c) if isinstance(c, str) else c).cast("decimal(18,2)")
 
 
 @register(
@@ -464,4 +464,278 @@ def ext_approx_percentile_bounded(spark, sf_dir):
             F.abs(approx - exact)
             <= F.greatest(0.05 * F.abs(exact), F.lit(1.0))
         ).alias("approx_within_5pct"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Time series over the event stream: dense resampling (gap fill),
+# running distinct users, last-touch attribution. Hour grain is date
+# arithmetic (timezone-free in both engines), money in integer cents,
+# cumulative counts are integer window sums over aggregated frames.
+# ---------------------------------------------------------------------------
+
+@register(
+    "ext_time_gap_fill",
+    """
+    WITH hourly AS (
+      SELECT event_type,
+             (CAST(ts AS DATE) - DATE '2024-01-01') * 24
+               + CAST(hour(ts) AS BIGINT) AS h,
+             CAST(COUNT(*) AS BIGINT) AS n,
+             CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
+                  AS BIGINT) AS cents
+      FROM events GROUP BY 1, 2
+    ), bounds AS (
+      SELECT MIN(h) AS lo, MAX(h) AS hi FROM hourly
+    ), grid AS (
+      SELECT t.event_type, u.i AS h
+      FROM (SELECT DISTINCT event_type FROM hourly) t,
+           bounds, UNNEST(range(bounds.lo, bounds.hi + 1)) AS u(i)
+    )
+    SELECT g.event_type, g.h,
+           COALESCE(hourly.n, 0) AS n,
+           COALESCE(hourly.cents, 0) AS cents
+    FROM grid g LEFT JOIN hourly USING (event_type, h)
+    """,
+)
+def ext_time_gap_fill(spark, sf_dir):
+    """[EXT] Sparse-to-dense resampling: aggregate events to the hour
+    grain, then LEFT-join the aggregate onto the full (event_type x
+    hour) grid so silent hours appear as explicit zero rows — the
+    precondition for any window/forecast model over the series.
+
+    Plan: one map-side-combined groupBy to the hour grain (the only
+    pass over the fact table), then grid construction from a broadcast
+    1-row bounds aggregate x the distinct-type frame via ``sequence``
+    + explode — grid size = types x hours, independent of row count.
+    At 100 TB the dense grid is still tiny; the scan happens once."""
+    e = load_table(spark, sf_dir, "events")
+    hourly = (
+        e.select(
+            "event_type",
+            (
+                F.datediff(
+                    F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")
+                )
+                * 24
+                + F.hour("ts")
+            ).cast("long").alias("h"),
+            (F.col("value").cast("decimal(18,2)") * 100)
+            .cast("long")
+            .alias("v"),
+        )
+        .groupBy("event_type", "h")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("cents"))
+    )
+    bounds = hourly.agg(F.min("h").alias("lo"), F.max("h").alias("hi"))
+    grid = (
+        hourly.select("event_type")
+        .distinct()
+        .crossJoin(F.broadcast(bounds))
+        .select(
+            "event_type",
+            F.explode(F.sequence(F.col("lo"), F.col("hi"))).alias("h"),
+        )
+    )
+    return grid.join(hourly, ["event_type", "h"], "left").select(
+        "event_type",
+        "h",
+        F.coalesce("n", F.lit(0)).alias("n"),
+        F.coalesce("cents", F.lit(0)).alias("cents"),
+    )
+
+
+@register(
+    "ext_running_distinct_users",
+    """
+    WITH first_seen AS (
+      SELECT user_id,
+             MIN(CAST(ts AS DATE) - DATE '2024-01-01') AS d
+      FROM events GROUP BY 1
+    ), per_day AS (
+      SELECT d, CAST(COUNT(*) AS BIGINT) AS new_users FROM first_seen GROUP BY 1
+    )
+    SELECT d AS day, new_users,
+           CAST(SUM(new_users) OVER (ORDER BY d) AS BIGINT) AS cum_users
+    FROM per_day
+    """,
+)
+def ext_running_distinct_users(spark, sf_dir):
+    """[EXT] Exact running count-distinct over time WITHOUT running
+    HLL sketches or a quadratic self-join: a user contributes to the
+    cumulative curve exactly once, at first appearance — so reduce to
+    (user -> first day), aggregate to day grain, and one cumulative
+    integer sum over the (tiny) per-day frame reproduces
+    COUNT(DISTINCT) for every prefix. Two map-side-combined groupBys;
+    the ordered window runs over days, not rows — bounded by the
+    calendar at any corpus scale."""
+    e = load_table(spark, sf_dir, "events")
+    first_seen = e.select(
+        "user_id",
+        F.datediff(
+            F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")
+        ).alias("d"),
+    ).groupBy("user_id").agg(F.min("d").alias("d"))
+    per_day = first_seen.groupBy("d").agg(
+        F.count(F.lit(1)).alias("new_users")
+    )
+    w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return per_day.select(
+        F.col("d").alias("day"),
+        "new_users",
+        F.sum("new_users").over(w).cast("long").alias("cum_users"),
+    )
+
+
+@register(
+    "ext_attribution_last_touch",
+    """
+    WITH seq AS (
+      SELECT user_id, event_id, ts, event_type,
+             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+             last_value(
+               CASE WHEN event_type <> 'purchase' THEN event_type END
+               IGNORE NULLS) OVER (
+                 PARTITION BY user_id ORDER BY ts, event_id
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+               ) AS touch_type
+      FROM events
+    )
+    SELECT touch_type,
+           CAST(COUNT(*) AS BIGINT) AS n_purchases,
+           CAST(SUM(cents) AS BIGINT) AS attributed_cents
+    FROM seq
+    WHERE event_type = 'purchase' AND touch_type IS NOT NULL
+    GROUP BY 1
+    """,
+)
+def ext_attribution_last_touch(spark, sf_dir):
+    """[EXT] Last-touch attribution: each purchase credits the nearest
+    PRECEDING non-purchase event of the same user (lag ... IGNORE
+    NULLS over the per-user event-time order — the carry-forward
+    pattern shared with the as-of join), then one aggregation of
+    purchase counts and exact-cent revenue per touch type. One window
+    shuffle on user_id + one map-side-combined groupBy; no self-join
+    of the event stream against itself."""
+    e = load_table(spark, sf_dir, "events")
+    # "nearest preceding non-null" = last(ignorenulls) over a frame
+    # ending one row back (PySpark's lag() has no IGNORE NULLS arg;
+    # the SQL oracle spells the same thing as lag ... IGNORE NULLS)
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    seq = e.select(
+        "user_id",
+        "event_type",
+        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
+        F.last(
+            F.when(F.col("event_type") != "purchase", F.col("event_type")),
+            ignorenulls=True,
+        ).over(w).alias("touch_type"),
+    )
+    return (
+        seq.filter(
+            (F.col("event_type") == "purchase")
+            & F.col("touch_type").isNotNull()
+        )
+        .groupBy("touch_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_purchases"),
+            F.sum("cents").alias("attributed_cents"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Nearest as-of join (operators.temporal.asof_join_nearest): pandas
+# ``merge_asof(direction='nearest')`` semantics as two union-tag window
+# passes — zero joins, one shuffle on the key. The oracle is the
+# brute-force per-left-row argmin with the identical tie discipline.
+# ---------------------------------------------------------------------------
+
+@register(
+    "ext_asof_nearest",
+    """
+    WITH p AS (
+      SELECT event_id AS p_id, user_id, epoch_us(ts) AS pt
+      FROM events WHERE event_type = 'purchase'
+    ),
+    c AS (
+      SELECT event_id AS c_id, user_id, epoch_us(ts) AS ct
+      FROM events WHERE event_type = 'click'
+    ),
+    pairs AS (
+      SELECT p.p_id, p.user_id, c.c_id, c.ct - p.pt AS delta_us,
+             row_number() OVER (
+               PARTITION BY p.p_id
+               ORDER BY abs(c.ct - p.pt), c.ct, c.c_id
+             ) AS rn
+      FROM p JOIN c USING (user_id)
+    )
+    SELECT p_id AS event_id, user_id, c_id AS nearest_id,
+           CAST(delta_us AS BIGINT) AS delta_us
+    FROM pairs WHERE rn = 1
+    """,
+)
+def ext_asof_nearest(spark, sf_dir):
+    """[EXT] nearest as-of: every purchase aligned to its temporally
+    closest click by the same user (|delta| min; ties -> earlier click,
+    then smaller id). The engine runs two window passes over one
+    union — zero joins — while the oracle brute-forces the per-purchase
+    argmin over all same-user clicks; identical output proves the
+    window formulation."""
+    ev = load_table(spark, sf_dir, "events")
+    left = ev.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts"
+    )
+    right = ev.filter(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_id"), "user_id", "ts"
+    )
+    return asof_join_nearest(
+        left, right, ["user_id"], right_id="click_id"
+    ).select("event_id", "user_id", "nearest_id", "delta_us")
+
+
+# ---------------------------------------------------------------------------
+# Late-data accounting: batch replay of streaming watermark semantics —
+# per-key running-max event time vs arrival order, exact int64
+# microsecond math.
+# ---------------------------------------------------------------------------
+
+@register(
+    "ext_late_data_report",
+    """
+    WITH flagged AS (
+      SELECT event_type,
+             epoch_us(ts) AS ts_us,
+             max(epoch_us(ts)) OVER (
+               PARTITION BY user_id ORDER BY event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+             ) - 600000000 AS wm_us
+      FROM events
+    )
+    SELECT event_type,
+           CAST(count(*) AS BIGINT) AS n_events,
+           CAST(sum(CASE WHEN wm_us IS NOT NULL AND ts_us < wm_us
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
+           COALESCE(MAX(CASE WHEN wm_us IS NOT NULL AND ts_us < wm_us
+                             THEN wm_us - ts_us END), 0) AS max_lateness_us
+    FROM flagged GROUP BY 1
+    """,
+)
+def ext_late_data_report(spark, sf_dir):
+    """[EXT] streaming-watermark accounting replayed in batch: per
+    event_type, how many events would a 600 s watermark have dropped,
+    and by how much (worst case). Watermark = per-user running max of
+    event time over arrival (event_id) order; all math in exact int64
+    microseconds."""
+    return late_event_report(
+        load_table(spark, sf_dir, "events"),
+        key="user_id",
+        ts_col="ts",
+        arrival_col="event_id",
+        allowed_lateness_s=600,
+        group_col="event_type",
     )

@@ -1,6 +1,8 @@
 """[EXT] Training-data pipeline queries: repetition metrics, Gopher
 quality gate, sequence packing, stratified sampling, domain
-reweighting, corpus n-gram stats, text scrubbing.
+reweighting, corpus n-gram stats, text scrubbing, LM-based quality
+signals, PMI collocations, shard assignment, classifier filtering,
+temperature mixtures and BPE pair counts.
 
 These extend the reference's corpus-building intent (build_corpus.py's
 filter -> dedup -> tag flow) to the LLM-data-pipeline scale called for
@@ -14,7 +16,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from dissertation_data_pipeline_spark.operators.bpe import (
+    initial_symbols,
+    pair_counts,
+    word_frequencies,
+)
 from dissertation_data_pipeline_spark.operators.training import (
+    bigram_lm_scores,
     weighted_sample_per_group,
     chunk_documents,
     corpus_top_bigrams,
@@ -22,6 +30,7 @@ from dissertation_data_pipeline_spark.operators.training import (
     domain_resample,
     gopher_quality_gate,
     pack_sequences,
+    pmi_collocations,
     repetition_profile,
     scrub_text,
     stratified_sample,
@@ -326,3 +335,378 @@ def ext_weighted_sample(spark, sf_dir):
     return weighted_sample_per_group(
         d, ["lang"], "n_chars", 5, id_col="doc_id"
     ).select("lang", "doc_id", "n_chars", "sample_rank")
+
+
+# ---------------------------------------------------------------------------
+# Corpus quality signals and data mixing: unigram-frequency quality,
+# bigram-LM perplexity (CCNet-style), CCNet buckets, PMI collocations
+# (Church & Hanks 1990), shard assignment, a hashed linear quality
+# classifier, temperature-sampled mixtures, and the first BPE merge
+# round. Every hash is md5-derived; the one floating sum (LM log-probs)
+# is documented bounded-error (terms bit-identical across engines,
+# partition-order spread ~1e-13 vs 1e-4 display rounding).
+# ---------------------------------------------------------------------------
+
+@register(
+    "ext_token_freq_quality",
+    """
+    WITH toks AS (
+      SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
+    ), td AS (
+      SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c FROM toks GROUP BY 1, 2
+    ), corpus AS (
+      SELECT tok, CAST(SUM(c) AS BIGINT) AS freq FROM td GROUP BY 1
+    )
+    SELECT td.doc_id,
+           CAST(SUM(td.c) AS BIGINT) AS n_tokens,
+           CAST(SUM(td.c * corpus.freq) AS BIGINT) AS freq_sum,
+           round(CAST(SUM(td.c * corpus.freq) AS DOUBLE)
+                 / CAST(SUM(td.c) AS DOUBLE), 6) AS avg_tok_freq
+    FROM td JOIN corpus USING (tok)
+    GROUP BY 1
+    """,
+)
+def ext_token_freq_quality(spark, sf_dir):
+    """[EXT] Unigram corpus-frequency quality score — the cheap LM
+    proxy used by web-scale curation pipelines (docs whose tokens are
+    rare corpus-wide are disproportionately boilerplate/garbage; cf.
+    the CCNet/KenLM perplexity bucket, here with the corpus itself as
+    the unigram model). All-integer accumulation: per-doc score is
+    SUM(tf * corpus_freq), exact in any partitioning; the single final
+    division is the only float op.
+
+    Plan: one explode pass -> groupBy (doc_id, token) with map-side
+    combine -> token-level re-aggregate for the corpus table (vocab
+    rows only) -> broadcast-size join back -> groupBy doc_id. The
+    vocabulary aggregate is tiny relative to the corpus at any scale
+    (Heaps' law), so the join-back broadcasts at 100 TB too.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    td = (
+        d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+        .groupBy("doc_id", "tok")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    corpus = td.groupBy("tok").agg(F.sum("c").alias("freq"))
+    return (
+        td.join(F.broadcast(corpus), "tok")
+        .groupBy("doc_id")
+        .agg(
+            F.sum("c").alias("n_tokens"),
+            F.sum(F.col("c") * F.col("freq")).alias("freq_sum"),
+            F.round(
+                F.sum(F.col("c") * F.col("freq")).cast("double")
+                / F.sum("c").cast("double"),
+                6,
+            ).alias("avg_tok_freq"),
+        )
+    )
+
+
+@register(
+    "ext_bigram_lm_score",
+    r"""
+    WITH t AS (
+      SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
+      FROM documents
+    ),
+    bg AS (
+      SELECT doc_id, tk[i] AS w1, tk[i + 1] AS w2
+      FROM t, LATERAL (SELECT unnest(range(1, len(tk))) AS i)
+    ),
+    c12 AS (SELECT w1, w2, count(*) AS c12 FROM bg GROUP BY 1, 2),
+    c1 AS (SELECT w1, count(*) AS c1 FROM bg GROUP BY 1),
+    v AS (SELECT count(DISTINCT w2) AS vocab FROM bg),
+    scored AS (
+      SELECT bg.doc_id,
+             ln((c12 + 1)::DOUBLE / (c1 + vocab)::DOUBLE) AS lp
+      FROM bg JOIN c12 USING (w1, w2) JOIN c1 USING (w1), v
+    )
+    SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+           round(sum(lp) / count(*), 4) AS avg_logp,
+           round(exp(-sum(lp) / count(*)), 4) AS perplexity
+    FROM scored GROUP BY 1
+    """,
+)
+def ext_bigram_lm_score(spark, sf_dir):
+    """[EXT] corpus-trained bigram LM score per document — the CCNet
+    quality signal (Wenzek et al. 2020 rank documents by LM perplexity
+    and keep the low-perplexity head). Add-one-smoothed
+    ``p(w2|w1) = (c12+1)/(c_hist(w1)+V)``; output = bigram count, mean
+    log-prob, perplexity. See operators/training.py::bigram_lm_scores
+    for the pre-aggregated join-back plan shape and the bounded-error
+    float-sum argument."""
+    return bigram_lm_scores(load_table(spark, sf_dir, "documents"))
+
+
+@register(
+    "ext_ccnet_buckets",
+    r"""
+    WITH t AS (
+      SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
+      FROM documents
+    ),
+    bg AS (
+      SELECT doc_id, tk[i] AS w1, tk[i + 1] AS w2
+      FROM t, LATERAL (SELECT unnest(range(1, len(tk))) AS i)
+    ),
+    c12 AS (SELECT w1, w2, count(*) AS c12 FROM bg GROUP BY 1, 2),
+    c1 AS (SELECT w1, count(*) AS c1 FROM bg GROUP BY 1),
+    v AS (SELECT count(DISTINCT w2) AS vocab FROM bg),
+    scored AS (
+      SELECT bg.doc_id,
+             ln((c12 + 1)::DOUBLE / (c1 + vocab)::DOUBLE) AS lp
+      FROM bg JOIN c12 USING (w1, w2) JOIN c1 USING (w1), v
+    ),
+    ppl AS (
+      SELECT doc_id, round(exp(-sum(lp) / count(*)), 4) AS perplexity
+      FROM scored GROUP BY 1
+    ),
+    ranked AS (
+      SELECT d.doc_id, d.lang, p.perplexity,
+             ntile(3) OVER (PARTITION BY d.lang
+                            ORDER BY p.perplexity ASC, d.doc_id ASC) AS bucket
+      FROM documents d JOIN ppl p ON p.doc_id = d.doc_id
+    )
+    SELECT doc_id, lang, perplexity, bucket,
+           (['head', 'middle', 'tail'])[bucket] AS bucket_name
+    FROM ranked
+    """,
+)
+def ext_ccnet_buckets(spark, sf_dir):
+    """[EXT] CCNet head/middle/tail corpus partition (Wenzek et al.
+    2020 §4.3): per-language equal-frequency perplexity buckets over
+    the corpus-trained bigram LM score — 'head' is the training-set
+    keep, 'tail' the drop. Deterministic: the ntile order is
+    (4dp-rounded perplexity ASC, doc_id ASC), a total order both
+    engines agree on. One window shuffle on the language key beyond
+    the LM scorer's plan."""
+    from dissertation_data_pipeline_spark.operators.training import (
+        ccnet_perplexity_buckets,
+    )
+
+    return ccnet_perplexity_buckets(load_table(spark, sf_dir, "documents"))
+
+
+@register(
+    "ext_pmi_collocations",
+    r"""
+    WITH toks AS (
+      SELECT string_split_regex(lower(trim(text)), '\s+') AS t FROM documents
+    ),
+    uc AS (
+      SELECT w, CAST(count(*) AS BIGINT) AS c_w
+      FROM (SELECT unnest(t) AS w FROM toks) GROUP BY 1
+    ),
+    bc AS (
+      SELECT w1, w2, CAST(count(*) AS BIGINT) AS c_ab
+      FROM (
+        SELECT t[i] AS w1, t[i + 1] AS w2
+        FROM (SELECT t, unnest(range(1, len(t))) AS i FROM toks)
+      ) GROUP BY 1, 2
+    ),
+    tot AS (
+      SELECT (SELECT CAST(sum(c_w) AS BIGINT) FROM uc) AS T1,
+             (SELECT CAST(sum(c_ab) AS BIGINT) FROM bc) AS T2
+    )
+    SELECT w1, w2, c_ab, c_a, c_b, round(ln(score), 4) AS pmi FROM (
+      SELECT bc.w1, bc.w2, bc.c_ab, ua.c_w AS c_a, ub.c_w AS c_b,
+             (bc.c_ab::DOUBLE / T2::DOUBLE)
+             / ((ua.c_w::DOUBLE / T1::DOUBLE) * (ub.c_w::DOUBLE / T1::DOUBLE))
+               AS score
+      FROM bc
+      JOIN uc ua ON bc.w1 = ua.w
+      JOIN uc ub ON bc.w2 = ub.w
+      CROSS JOIN tot
+      WHERE bc.c_ab >= 5
+    ) ORDER BY score DESC, w1, w2 LIMIT 100
+    """,
+)
+def ext_pmi_collocations(spark, sf_dir):
+    """[EXT] top-100 collocations by PMI over the documents corpus
+    (min bigram count 5). Ranking runs on the raw probability-ratio
+    double (exact-int operands, IEEE-deterministic ops — see
+    operators/training.py::pmi_collocations); ln() only touches the
+    4dp display column."""
+    return pmi_collocations(
+        load_table(spark, sf_dir, "documents"), min_count=5, top_n=100
+    )
+
+
+@register(
+    "ext_shard_assignment",
+    rf"""
+    WITH t AS (
+      SELECT CAST(({_H_EXPR}) % 16 AS BIGINT) AS shard,
+             CAST(len(string_split_regex(lower(trim(text)), '\s+'))
+                  AS BIGINT) AS nt
+      FROM documents
+    )
+    SELECT shard,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(nt) AS BIGINT) AS total_tokens,
+           CAST(max(nt) AS BIGINT) AS max_doc_tokens
+    FROM t GROUP BY shard
+    """,
+)
+def ext_shard_assignment(spark, sf_dir):
+    """[EXT] Deterministic training-shard assignment (see
+    :func:`operators.training.shard_assignment`): shard =
+    md5-hash(doc_id) % 16, per-shard document count / token budget /
+    largest doc. The assignment is a pure function of the document id
+    — identical under any partitioning, cluster size, or re-run — and
+    the oracle recomputes it from scratch in SQL, so determinism is
+    gate-verified, not claimed."""
+    from dissertation_data_pipeline_spark.operators.training import (
+        shard_assignment,
+    )
+
+    return shard_assignment(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", n_shards=16
+    )
+
+
+def _h32(expr: str) -> str:
+    """DuckDB twin of operators.training.uniform_hash_u32 for an
+    arbitrary VARCHAR expression: md5-hex first 8 digits -> uint32 as
+    explicit digit arithmetic (DuckDB has no conv())."""
+    return " + ".join(
+        f"CAST((strpos('0123456789abcdef', substr(md5({expr}), "
+        f"{i + 1}, 1)) - 1) AS BIGINT) * {16 ** (7 - i)}"
+        for i in range(8)
+    )
+
+
+@register(
+    "ext_classifier_quality_filter",
+    f"""
+    WITH toks AS (
+      SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+      FROM documents
+    ),
+    feats AS (
+      SELECT doc_id, ({_h32("tok")}) % 4096 AS bucket FROM toks
+    ),
+    w AS (
+      SELECT b AS bucket,
+             (({_h32("CAST(b AS VARCHAR) || ':w'")}) % 2001) - 1000
+               AS weight_milli
+      FROM range(4096) t(b)
+    ),
+    agg AS (
+      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+             CAST(sum(weight_milli) AS BIGINT) AS score_milli
+      FROM feats JOIN w USING (bucket) GROUP BY doc_id
+    )
+    SELECT doc_id, n_tokens, score_milli, score_milli > 0 AS keep
+    FROM agg
+    """,
+)
+def ext_classifier_quality_filter(spark, sf_dir):
+    """[EXT] fastText-style hashed linear classifier inference (see
+    :func:`operators.training.hashed_classifier_score`): the
+    classifier-based quality-filter step. Integer milli-weight
+    arithmetic end to end, so the oracle match is exact, not
+    float-tolerant; the weight table is recomputed identically by both
+    engines from md5."""
+    from dissertation_data_pipeline_spark.operators.training import (
+        hashed_classifier_score,
+    )
+
+    return hashed_classifier_score(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", dim=4096
+    )
+
+
+@register(
+    "ext_temperature_mixture",
+    """
+    WITH counts AS (
+      SELECT lang, CAST(count(*) AS BIGINT) AS n_docs
+      FROM documents GROUP BY lang
+    ),
+    tot AS (
+      SELECT CAST(sum(n_docs) AS BIGINT) AS _n,
+             sum(sqrt(CAST(n_docs AS DOUBLE))) AS _z
+      FROM counts
+    )
+    SELECT lang, n_docs,
+           round(CAST(n_docs AS DOUBLE) / _n, 6) AS natural_share,
+           round(sqrt(CAST(n_docs AS DOUBLE)) / _z, 6) AS temp_share,
+           CAST(round(100000.0 * sqrt(CAST(n_docs AS DOUBLE)) / _z, 0)
+                AS BIGINT) AS target_docs
+    FROM counts, tot
+    """,
+)
+def ext_temperature_mixture(spark, sf_dir):
+    """[EXT] Temperature (alpha=0.5) multilingual mixture planning (see
+    :func:`operators.training.temperature_mixture`): per-language
+    natural vs flattened sampling shares and integer document budgets.
+    sqrt is IEEE-exact on both engines (pow is not) — that is why the
+    temperature is 0.5 and not a config float."""
+    from dissertation_data_pipeline_spark.operators.training import (
+        temperature_mixture,
+    )
+
+    return temperature_mixture(
+        load_table(spark, sf_dir, "documents"), "lang", budget=100_000
+    )
+
+
+# ---------------------------------------------------------------------------
+# BPE training (operators.bpe): the iterative merge loop is
+# driver-pattern (per-round global argmax -> 1-row collect) and thus not
+# one-statement-SQL-expressible; the gate-checked query is its first
+# iteration — corpus-wide adjacent symbol-pair counts over the char+EOW
+# initialization — which pins the word-frequency reduction, the symbol
+# initialization, and the pair-count aggregate that every later round
+# reuses. Full-loop parity vs an independent pure-Python reference lives
+# in tests/test_wave6.py.
+# ---------------------------------------------------------------------------
+
+@register(
+    "ext_bpe_pair_counts",
+    r"""
+    WITH words AS (
+      SELECT word, CAST(count(*) AS BIGINT) AS freq
+      FROM (
+        SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS word
+        FROM documents
+      )
+      WHERE len(word) > 0 GROUP BY 1
+    ),
+    syms AS (
+      SELECT freq,
+             list_concat(
+               list_transform(range(1, len(word) + 1), i -> word[i:i]),
+               ['</w>']
+             ) AS s
+      FROM words
+    ),
+    pairs AS (
+      SELECT freq,
+             unnest(list_transform(range(1, len(s)),
+                                   i -> {'a': s[i], 'b': s[i + 1]})) AS p
+      FROM syms
+    )
+    SELECT p.a AS a, p.b AS b, CAST(sum(freq) AS BIGINT) AS cnt
+    FROM pairs GROUP BY 1, 2
+    ORDER BY cnt DESC, a, b LIMIT 20
+    """,
+)
+def ext_bpe_pair_counts(spark, sf_dir):
+    """[EXT] BPE training round 1: top-20 adjacent symbol pairs (char +
+    end-of-word initialization, counts weighted by word frequency,
+    deterministic (cnt DESC, a, b) tiebreak). This is exactly the
+    argmax input of operators/bpe.py::bpe_train's first iteration —
+    the corpus->word-frequency reduction and the pair aggregate that
+    every round reuses, value-checked; the loop itself is verified by
+    reference-implementation parity in tests."""
+    words = initial_symbols(
+        word_frequencies(load_table(spark, sf_dir, "documents"))
+    )
+    return (
+        pair_counts(words)
+        .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
+        .limit(20)
+    )

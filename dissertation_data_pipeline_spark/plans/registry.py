@@ -5,6 +5,14 @@ over the shared testdata tables, paired with an ANSI-SQL oracle that
 DuckDB runs on the same parquet files. Query names carry the SURVEY
 operator ids they exercise.
 
+This module holds the relational core (P/J/U/W/A/O ids); each other
+operator family has its own ``queries_*`` module, imported at the
+bottom. Long-tail operators that larger queries subsume still get a
+dedicated query each, so the coverage map (COVERAGE.md) points at
+executable evidence, not prose. Of the operators that are driver-side
+in the reference, only F-d4 (run timestamps — value inherently
+nondeterministic) has no data-plane gate row.
+
 Cross-engine exactness rules used throughout:
 
 - **Money math in DECIMAL(18,2)** — double sums are order-dependent
@@ -20,9 +28,11 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from dissertation_data_pipeline_spark.functions import is_missing
 from dissertation_data_pipeline_spark.operators import (
     anti_report,
     conflict_report,
@@ -34,6 +44,7 @@ from dissertation_data_pipeline_spark.operators import (
     top_k_frequency,
     union_conform,
 )
+from dissertation_data_pipeline_spark.schemas import conform
 from dissertation_data_pipeline_spark.tables import load_table
 
 
@@ -48,6 +59,13 @@ QUERIES: dict[str, Q] = {}
 
 def register(name: str, sql: str | None):
     def deco(fn):
+        if name in QUERIES:
+            prev = QUERIES[name].fn
+            raise ValueError(
+                f"query {name!r} is already registered by "
+                f"{prev.__module__}.{prev.__qualname__}; "
+                f"{fn.__module__}.{fn.__qualname__} cannot register it again"
+            )
         QUERIES[name] = Q(fn, sql)
         return fn
 
@@ -234,6 +252,65 @@ def a8_conflict_report(spark, sf_dir):
     )
 
 
+@register(
+    "a3_a5_minmax_mean",
+    """
+    SELECT o_orderstatus,
+           min(year(o_orderdate)) AS min_year,
+           max(year(o_orderdate)) AS max_year,
+           CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(*)
+             AS avg_price
+    FROM orders GROUP BY o_orderstatus
+    """,
+)
+def a3_a5_minmax_mean(spark, sf_dir):
+    """A3 (build_corpus.py:113: min/max year range) + A5
+    (normalize_corpus.py:306: mean) — the mean is computed as an exact
+    DECIMAL sum cast to double, divided by the count: double summation
+    is reduction-order-dependent and would not hash-match the oracle."""
+    o = load_table(spark, sf_dir, "orders")
+    return o.groupBy("o_orderstatus").agg(
+        F.min(F.year("o_orderdate")).alias("min_year"),
+        F.max(F.year("o_orderdate")).alias("max_year"),
+        (
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double")
+            / F.count(F.lit(1))
+        ).alias("avg_price"),
+    )
+
+
+@register(
+    "a10_completeness_histogram",
+    """
+    SELECT score, count(*) AS n FROM (
+      SELECT (CASE WHEN o_orderkey % 5 <> 0 THEN 1 ELSE 0 END
+            + CASE WHEN o_orderkey % 7 <> 0 THEN 1 ELSE 0 END
+            + CASE WHEN o_orderkey % 11 <> 0 THEN 1 ELSE 0 END) AS score
+      FROM orders
+    ) GROUP BY score
+    """,
+)
+def a10_completeness_histogram(spark, sf_dir):
+    """A10 (legiscan_normalizer.py:316: row-wise completeness =
+    ``notna().sum(axis=1)``) — sum of per-column not-NULL flags over
+    deterministically synthesized missing fields, histogrammed."""
+    o = load_table(spark, sf_dir, "orders")
+    k = F.col("o_orderkey")
+    cols = [
+        F.when(k % 5 != 0, F.col("o_orderstatus")),
+        F.when(k % 7 != 0, F.col("o_orderpriority")),
+        F.when(k % 11 != 0, F.col("o_orderdate").cast("string")),
+    ]
+    score = cols[0].isNotNull().cast("int")
+    for c in cols[1:]:
+        score = score + c.isNotNull().cast("int")
+    return (
+        o.select(score.alias("score"))
+        .groupBy("score")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
 # ---------------------------------------------------------------------------
 # Projections / filters (SURVEY §2.2)
 # ---------------------------------------------------------------------------
@@ -260,6 +337,90 @@ def p4_filter_project(spark, sf_dir):
         )
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
     )
+
+
+@register(
+    "p1_p2_conform_contract",
+    """
+    SELECT c_custkey AS cust_id, c_name AS name, c_mktsegment AS segment,
+           CAST(NULL AS VARCHAR) AS notes
+    FROM customer
+    """,
+)
+def p1_p2_conform_contract(spark, sf_dir):
+    """P1 (build_master_corpus.py:73-85: project+rename to contract) +
+    P2 (legiscan_normalizer.py:255-258: back-fill missing columns) —
+    rename-select onto a fixed StructType via ``conform``, which adds
+    the absent ``notes`` column as a typed NULL (the engine's canonical
+    missing value, replacing the reference's ``""``)."""
+    contract = StructType(
+        [
+            StructField("cust_id", LongType()),
+            StructField("name", StringType()),
+            StructField("segment", StringType()),
+            StructField("notes", StringType()),
+        ]
+    )
+    c = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("cust_id"),
+        F.col("c_name").alias("name"),
+        F.col("c_mktsegment").alias("segment"),
+    )
+    return conform(c, contract)
+
+
+@register(
+    "p3_p5_value_and_length_filters",
+    """
+    SELECT p_partkey, p_name, p_brand
+    FROM part
+    WHERE upper(trim(p_brand)) <> 'BRAND#11' AND length(p_name) > 9
+    """,
+)
+def p3_p5_value_and_length_filters(spark, sf_dir):
+    """P3 (build_master_corpus.py:95: case-insensitive value-exclusion
+    filter) + P5 (build_corpus.py:103-104: minimum text length) — NULLs
+    fail both predicates natively, matching the reference's dropna."""
+    p = load_table(spark, sf_dir, "part")
+    return p.filter(
+        (F.upper(F.trim(F.col("p_brand"))) != "BRAND#11")
+        & (F.length("p_name") > 9)
+    ).select("p_partkey", "p_name", "p_brand")
+
+
+@register(
+    "p8_needs_enrichment",
+    """
+    SELECT o_orderkey, pri, clerk FROM (
+      SELECT o_orderkey,
+             CASE WHEN o_orderkey % 5 = 0 THEN NULL
+                  WHEN o_orderkey % 5 = 1 THEN ''
+                  WHEN o_orderkey % 5 = 2 THEN 'not found'
+                  ELSE o_orderpriority END AS pri,
+             CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_orderstatus END AS clerk
+      FROM orders
+    )
+    WHERE pri IS NULL OR trim(pri) = '' OR lower(trim(pri)) = 'not found'
+       OR clerk IS NULL OR trim(clerk) = '' OR lower(trim(clerk)) = 'not found'
+    """,
+)
+def p8_needs_enrichment(spark, sf_dir):
+    """P8 (legiscan_enricher.py:332-338): rows needing enrichment — the
+    disjunction of ``is_missing`` over the enrichable fields, with the
+    reference's three-way missingness (NULL / '' / 'not found')
+    synthesized deterministically."""
+    o = load_table(spark, sf_dir, "orders")
+    k = F.col("o_orderkey")
+    df = o.select(
+        "o_orderkey",
+        F.when(k % 5 == 0, F.lit(None))
+        .when(k % 5 == 1, F.lit(""))
+        .when(k % 5 == 2, F.lit("not found"))
+        .otherwise(F.col("o_orderpriority"))
+        .alias("pri"),
+        F.when(k % 7 == 0, F.lit(None)).otherwise(F.col("o_orderstatus")).alias("clerk"),
+    )
+    return df.filter(is_missing("pri") | is_missing("clerk"))
 
 
 # ---------------------------------------------------------------------------
@@ -393,6 +554,29 @@ def u1_union_conform(spark, sf_dir):
 def u3_distinct(spark, sf_dir):
     """U3 distinct (.unique(), legiscan_normalizer.py:293)."""
     return load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority").distinct()
+
+
+@register(
+    "u2_except_uncovered_nations",
+    """
+    SELECT n_nationkey AS nationkey FROM nation
+    EXCEPT
+    SELECT c_nationkey FROM customer WHERE c_custkey % 50 = 0
+    """,
+)
+def u2_except_uncovered_nations(spark, sf_dir):
+    """U2 (build_master_corpus.py:154-156: set difference for the
+    missing-states report) — relational EXCEPT (``subtract``), the
+    engine-native form of the reference's ``set(a) - set(b)``."""
+    n = load_table(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").alias("nationkey")
+    )
+    c = (
+        load_table(spark, sf_dir, "customer")
+        .filter(F.col("c_custkey") % 50 == 0)
+        .select(F.col("c_nationkey").alias("nationkey"))
+    )
+    return n.subtract(c)
 
 
 # ---------------------------------------------------------------------------
@@ -550,6 +734,87 @@ def o2_top_k_frequency(spark, sf_dir):
     return top_k_frequency(load_table(spark, sf_dir, "customer"), "c_mktsegment", 3)
 
 
+@register(
+    "w4_format_preference",
+    """
+    SELECT l_orderkey,
+           best.pref AS pref,
+           best.l_linenumber AS l_linenumber,
+           best.l_partkey AS l_partkey
+    FROM (
+      SELECT l_orderkey,
+             (list(struct_pack(pref := CASE WHEN l_linestatus = 'O' THEN 0 ELSE 1 END,
+                               l_linenumber := l_linenumber,
+                               l_partkey := l_partkey)
+                   ORDER BY CASE WHEN l_linestatus = 'O' THEN 0 ELSE 1 END,
+                            l_linenumber, l_partkey))[1] AS best
+      FROM lineitem GROUP BY 1
+    )
+    """,
+)
+def w4_format_preference(spark, sf_dir):
+    """W4 (legiscan_collector.py:171-177): pick the preferred element of
+    a nested list by an explicit preference ladder (mime preference in
+    the reference; l_linestatus here), deterministic tiebreaks."""
+    li = load_table(spark, sf_dir, "lineitem")
+    pref = F.when(F.col("l_linestatus") == "O", 0).otherwise(1)
+    entry = F.struct(
+        pref.alias("pref"),
+        F.col("l_linenumber").alias("l_linenumber"),
+        F.col("l_partkey").alias("l_partkey"),
+    )
+    return (
+        li.groupBy("l_orderkey")
+        .agg(F.array_sort(F.collect_list(entry)).alias("ranked"))
+        .select(
+            "l_orderkey",
+            F.col("ranked")[0]["pref"].alias("pref"),
+            F.col("ranked")[0]["l_linenumber"].alias("l_linenumber"),
+            F.col("ranked")[0]["l_partkey"].alias("l_partkey"),
+        )
+    )
+
+
+@register(
+    "p10_o4_deterministic_head",
+    """
+    SELECT o_orderkey, o_orderstatus, o_orderpriority
+    FROM orders ORDER BY o_orderkey LIMIT 10
+    """,
+)
+def p10_o4_deterministic_head(spark, sf_dir):
+    """P10 (fetch_texts.py:86-87: --limit test runs) + O4
+    (legiscan_normalizer.py:376: head-N preview) — ``limit`` pinned to
+    a total order on the unique key; a bare limit is
+    partition-nondeterministic and would not oracle-match."""
+    o = load_table(spark, sf_dir, "orders")
+    return (
+        o.orderBy("o_orderkey")
+        .limit(10)
+        .select("o_orderkey", "o_orderstatus", "o_orderpriority")
+    )
+
+
+@register(
+    "o1_o5_sorted_frequency",
+    """
+    SELECT o_orderpriority, count(*) AS n
+    FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
+    """,
+)
+def o1_o5_sorted_frequency(spark, sf_dir):
+    """O1 (build_master_corpus.py:138: global sort) + O5
+    (build_corpus.py:119: ``value_counts().sort_index()`` by-key output
+    convention) — frequency table ordered by key, one shuffle + a
+    global sort of the tiny aggregate."""
+    o = load_table(spark, sf_dir, "orders")
+    return (
+        o.groupBy("o_orderpriority")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .orderBy("o_orderpriority")
+    )
+
+
 # -- sibling query modules register themselves on import (kept at the
 # bottom: they import `register` from this module) ---------------------------
 from dissertation_data_pipeline_spark.plans import queries_scalar  # noqa: E402,F401
@@ -557,25 +822,12 @@ from dissertation_data_pipeline_spark.plans import queries_dedup  # noqa: E402,F
 from dissertation_data_pipeline_spark.plans import queries_similarity  # noqa: E402,F401
 from dissertation_data_pipeline_spark.plans import queries_textanalysis  # noqa: E402,F401
 from dissertation_data_pipeline_spark.plans import queries_streaming  # noqa: E402,F401
-from dissertation_data_pipeline_spark.plans import queries_misc  # noqa: E402,F401
 from dissertation_data_pipeline_spark.plans import queries_tpch  # noqa: E402,F401
-from dissertation_data_pipeline_spark.plans import queries_coverage  # noqa: E402,F401
-from dissertation_data_pipeline_spark.plans import queries_coverage2  # noqa: E402,F401
 from dissertation_data_pipeline_spark.plans import queries_training  # noqa: E402,F401
 from dissertation_data_pipeline_spark.plans import queries_multimodal  # noqa: E402,F401
 from dissertation_data_pipeline_spark.plans import queries_skew  # noqa: E402,F401
 from dissertation_data_pipeline_spark.plans import queries_temporal  # noqa: E402,F401
-from dissertation_data_pipeline_spark.plans import queries_tpch2  # noqa: E402,F401
-from dissertation_data_pipeline_spark.plans import queries_tpch3  # noqa: E402,F401
 from dissertation_data_pipeline_spark.plans import queries_analytics  # noqa: E402,F401
-from dissertation_data_pipeline_spark.plans import queries_wave3  # noqa: E402,F401
 from dissertation_data_pipeline_spark.plans import queries_features  # noqa: E402,F401
-from dissertation_data_pipeline_spark.plans import queries_timeseries  # noqa: E402,F401
-from dissertation_data_pipeline_spark.plans import queries_wave4  # noqa: E402,F401
-from dissertation_data_pipeline_spark.plans import queries_wave5  # noqa: E402,F401
-from dissertation_data_pipeline_spark.plans import queries_wave6  # noqa: E402,F401
-from dissertation_data_pipeline_spark.plans import queries_wave8  # noqa: E402,F401
-from dissertation_data_pipeline_spark.plans import queries_wave9  # noqa: E402,F401
 from dissertation_data_pipeline_spark.plans import queries_fixtures  # noqa: E402,F401
 from dissertation_data_pipeline_spark.plans import queries_state  # noqa: E402,F401
-from dissertation_data_pipeline_spark.plans import queries_coverage3  # noqa: E402,F401

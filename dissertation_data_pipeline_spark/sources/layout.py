@@ -15,7 +15,7 @@ artifact conventions.
 
 Implementation notes:
 - The curve value is a pure bitwise codegen expression
-  (``plans.queries_wave3.zorder_value``) over *bucketed* column values
+  (``zorder_value``) over *bucketed* column values
   (low ``bits`` bits each) — no UDF, no sort-key blowup.
 - ``repartitionByRange(zval)`` gives contiguous, balanced curve
   segments (range boundaries from a sampled sketch — at 100 TB, set
@@ -33,6 +33,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def zorder_value(a, b, bits: int = 8):
+    """Z-order (Morton) curve value of two bucketed ints as a pure
+    codegen expression: interleave the low ``bits`` bits of ``a`` (odd
+    positions) and ``b`` (even positions)."""
+    z = F.lit(0).cast("long")
+    for i in range(bits):
+        z = z.bitwiseOR(
+            F.shiftleft(F.shiftright(a, i).bitwiseAND(F.lit(1)).cast("long"), 2 * i + 1)
+        )
+        z = z.bitwiseOR(
+            F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)).cast("long"), 2 * i)
+        )
+    return z
+
+
 def write_zordered(
     df: DataFrame,
     path: str,
@@ -47,8 +62,6 @@ def write_zordered(
     low ``bits`` bits of ``col_a`` and ``col_b`` (columns must already
     be bucketed into [0, 2**bits) — e.g. ``key % 256`` or a
     ``width_bucket``)."""
-    from dissertation_data_pipeline_spark.plans.queries_wave3 import zorder_value
-
     z = zorder_value(F.col(col_a), F.col(col_b), bits).alias("_zval")
     (
         df.withColumn("_zval", z)

@@ -18,6 +18,7 @@ BroadcastHashJoin, Exchange hashpartitioning).
 from __future__ import annotations
 
 import re
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -332,3 +333,243 @@ def test_entry_contract_value_types():
     sqls = oracle_sql()
     assert all(isinstance(s, str) and s.strip() for s in sqls.values())
     assert all(sqls[n] == QUERIES[n].sql for n in sqls)
+
+
+def test_register_rejects_duplicate_name():
+    """A second registration under a taken name raises, naming both
+    query functions, and leaves the registry as it was."""
+    from dissertation_data_pipeline_spark.plans.registry import register
+
+    before = dict(QUERIES)
+
+    def flagship_corpus_rollup(spark, sf_dir):  # pragma: no cover - never run
+        raise AssertionError
+
+    with pytest.raises(ValueError) as err:
+        register("flagship_corpus_rollup", "SELECT 1")(flagship_corpus_rollup)
+    msg = str(err.value)
+    assert "registry.flagship_corpus_rollup" in msg
+    assert f"{__name__}.test_register_rejects_duplicate_name.<locals>.flagship_corpus_rollup" in msg
+    assert QUERIES == before
+
+
+def test_engine_modules_do_not_import_plans():
+    """The engine (operators, sources, streaming, functions and the
+    package's top-level modules) never imports the query registry:
+    query modules depend on the engine, not the other way round."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "dissertation_data_pipeline_spark"
+    files = sorted(pkg.glob("*.py"))
+    for sub in ("operators", "sources", "streaming", "functions"):
+        files += sorted((pkg / sub).rglob("*.py"))
+    assert len(files) > 20
+    banned = "dissertation_data_pipeline_spark.plans"
+    offenders = []
+    for f in files:
+        for node in ast.walk(ast.parse(f.read_text(), str(f))):
+            if isinstance(node, ast.ImportFrom):
+                parts = [pkg.name, *f.parent.relative_to(pkg).parts]
+                base = ".".join(
+                    parts[: len(parts) + 1 - node.level] + [node.module or ""]
+                    if node.level
+                    else [node.module]
+                ).strip(".")
+                mods = [base] + [f"{base}.{a.name}" for a in node.names]
+            elif isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            else:
+                continue
+            if any(m == banned or m.startswith(banned + ".") for m in mods):
+                offenders.append(f"{f.relative_to(pkg)}:{node.lineno}")
+    assert offenders == []
+
+
+# Where each query of a deleted round-named module now lives (DESIGN.md
+# §13). Old notes that cite one of these modules resolve through this map.
+ROUND_MODULE_HOMES = {
+    "queries_coverage": {
+        "registry": ["p8_needs_enrichment"],
+        "queries_scalar": ["fa4_is_amendment", "fj1_flatten_structs", "fs9_state_code"],
+        "queries_similarity": ["ext_embedding_near_dup"],
+        "queries_analytics": ["ext_approx_count_distinct"],
+    },
+    "queries_coverage2": {
+        "registry": [
+            "p1_p2_conform_contract",
+            "p3_p5_value_and_length_filters",
+            "p10_o4_deterministic_head",
+            "a3_a5_minmax_mean",
+            "a10_completeness_histogram",
+            "u2_except_uncovered_nations",
+            "o1_o5_sorted_frequency",
+        ],
+        "queries_scalar": ["fs6_fs7_fs15_string_normalize", "fs11_fa2_concat_fields"],
+    },
+    "queries_coverage3": {
+        "queries_fixtures": [
+            "p11_skip_list_scan",
+            "j5_file_key_join",
+            "k6_file_per_row_sink",
+            "o3_latest_artifact_scan",
+            "a11_stats_counters",
+            "fs8_column_normalize",
+            "s6_rest_pages_fixture",
+            "s8_point_lookup",
+            "k5_report_fixture",
+        ],
+    },
+    "queries_misc": {
+        "registry": ["w4_format_preference"],
+        "queries_scalar": ["fs4_status_decode", "fs5_title_case", "fs10_safe_filename"],
+        "queries_analytics": [
+            "ext_histogram_equiwidth",
+            "ext_pct_of_total",
+            "ext_mad_outliers",
+            "ext_event_transitions",
+            "ext_cohort_retention",
+        ],
+    },
+    "queries_timeseries": {
+        "queries_temporal": [
+            "ext_time_gap_fill",
+            "ext_running_distinct_users",
+            "ext_attribution_last_touch",
+        ],
+    },
+    "queries_tpch2": {
+        "queries_tpch": [
+            "tpch_q4_order_priority",
+            "tpch_q8_market_share",
+            "tpch_q9_product_profit",
+            "tpch_q12_late_lines_by_status",
+            "tpch_q13_customer_distribution",
+            "tpch_q15_top_supplier",
+            "tpch_q16_part_supplier_variety",
+            "tpch_q17_small_qty_revenue",
+            "tpch_q19_disc_revenue_or",
+            "tpch_q21_waiting_suppliers",
+            "tpch_q22_idle_customers",
+        ],
+    },
+    "queries_tpch3": {
+        "queries_tpch": [
+            "tpch_q2_min_cost_supplier",
+            "tpch_q11_important_stock",
+            "tpch_q20_potential_promotion",
+        ],
+    },
+    "queries_wave3": {
+        "queries_dedup": [
+            "ext_chunk_dedup_clean",
+            "ext_entity_resolution",
+            "ext_entity_resolution_block",
+        ],
+        "queries_training": ["ext_token_freq_quality"],
+        "queries_analytics": [
+            "ext_pagerank_transitions",
+            "ext_histogram_equidepth",
+            "ext_group_linreg",
+        ],
+        "queries_fixtures": ["ext_zorder_values"],
+    },
+    "queries_wave4": {
+        "queries_dedup": [
+            "ext_containment_pairs",
+            "ext_winnowing_fingerprints",
+            "ext_repeated_substring_spans",
+        ],
+        "queries_similarity": ["ext_ann_pq_rerank"],
+        "queries_training": ["ext_bigram_lm_score", "ext_ccnet_buckets"],
+    },
+    "queries_wave5": {
+        "queries_state": ["ext_merge_upsert", "ext_cdc_apply"],
+        "queries_training": [
+            "ext_pmi_collocations",
+            "ext_shard_assignment",
+            "ext_classifier_quality_filter",
+            "ext_temperature_mixture",
+        ],
+        "queries_temporal": ["ext_late_data_report"],
+        "queries_analytics": [
+            "ext_source_overlap_sketch",
+            "ext_count_min_hitters",
+            "ext_hll_distinct",
+        ],
+    },
+    "queries_wave6": {
+        "queries_training": ["ext_bpe_pair_counts"],
+        "queries_analytics": ["ext_udaf_label_medians"],
+        "queries_state": ["ext_incremental_agg"],
+    },
+    "queries_wave8": {
+        "queries_temporal": ["ext_asof_nearest"],
+        "queries_analytics": ["ext_weighted_median"],
+    },
+    "queries_wave9": {
+        "queries_similarity": ["ext_ann_ivfpq_rerank", "ext_ann_lsh_multiprobe_topk"],
+        "queries_scalar": ["ext_url_canonicalize"],
+        "queries_state": ["ext_dense_ids"],
+    },
+}
+
+PLANS_DIR = Path(__file__).resolve().parents[1] / "dissertation_data_pipeline_spark" / "plans"
+
+
+@pytest.mark.parametrize("old", sorted(ROUND_MODULE_HOMES))
+def test_round_module_queries_have_domain_homes(old):
+    """A deleted round-named module is gone, and each of its queries is
+    registered from the domain module the DESIGN map names."""
+    import importlib
+
+    with pytest.raises(ModuleNotFoundError):
+        importlib.import_module(f"dissertation_data_pipeline_spark.plans.{old}")
+    homes = {
+        name: f"dissertation_data_pipeline_spark.plans.{new}"
+        for new, names in ROUND_MODULE_HOMES[old].items()
+        for name in names
+    }
+    assert {n: QUERIES[n].fn.__module__ for n in homes} == homes
+
+
+def test_plans_layout_is_by_domain():
+    """plans/ holds the registry, pipelines and 14 domain modules; none
+    is named after a round, and the map above covers 83 queries."""
+    mods = sorted(p.stem for p in PLANS_DIR.glob("*.py"))
+    assert mods == [
+        "__init__",
+        "pipelines",
+        "queries_analytics",
+        "queries_dedup",
+        "queries_features",
+        "queries_fixtures",
+        "queries_multimodal",
+        "queries_scalar",
+        "queries_similarity",
+        "queries_skew",
+        "queries_state",
+        "queries_streaming",
+        "queries_temporal",
+        "queries_textanalysis",
+        "queries_tpch",
+        "queries_training",
+        "registry",
+    ]
+    assert not [m for m in mods if re.search(r"wave|coverage|misc|\d", m)]
+    moved = [n for homes in ROUND_MODULE_HOMES.values() for ns in homes.values() for n in ns]
+    assert len(moved) == len(set(moved)) == 83
+
+
+def test_plans_define_one_dec():
+    """plans/ has a single ``_dec`` money cast, in registry.py; the
+    modules that use it import it rather than keep a copy."""
+    import ast
+
+    defs = [
+        p.name
+        for p in sorted(PLANS_DIR.glob("*.py"))
+        for node in ast.walk(ast.parse(p.read_text(), str(p)))
+        if isinstance(node, ast.FunctionDef) and node.name == "_dec"
+    ]
+    assert defs == ["registry.py"]

@@ -34,3 +34,34 @@ def test_dump_plan_round_rejects_bad_args(argv):
     assert out.returncode == 1
     assert out.stderr.startswith("usage: python tools/dump_plan_round.py")
     assert not (ROOT / "plans" / "r998").exists()
+
+
+def test_bench_streaming_drain_times_the_shared_drain(monkeypatch, tmp_path):
+    """``bench_streaming._drain`` drains through
+    ``run_available_now_to_memory`` (one checkpoint per job under the
+    run's root, the bench's timeout) and returns the seconds it took."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "bench_streaming", ROOT / "tools" / "bench_streaming.py"
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+
+    calls = []
+
+    def fake_drain(stream, transform, name, ckpt, **kw):
+        calls.append((stream, transform, name, ckpt, kw))
+
+    monkeypatch.setattr(bench, "run_available_now_to_memory", fake_drain)
+    secs = bench._drain("stream", "transform", "update", "sliding_agg", str(tmp_path))
+    assert calls == [
+        (
+            "stream",
+            "transform",
+            "sliding_agg",
+            str(tmp_path / "sliding_agg"),
+            {"output_mode": "update", "timeout_sec": bench.DRAIN_TIMEOUT_S},
+        )
+    ]
+    assert isinstance(secs, float) and secs >= 0

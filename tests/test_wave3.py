@@ -8,11 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from dissertation_data_pipeline_spark.operators.graphs import pagerank_int
-from dissertation_data_pipeline_spark.plans.queries_wave3 import zorder_value
 from dissertation_data_pipeline_spark.sources.layout import (
     file_minmax_stats,
     skipped_fraction,
     write_zordered,
+    zorder_value,
 )
 
 

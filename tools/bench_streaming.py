@@ -41,6 +41,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from dissertation_data_pipeline_spark.session import get_spark  # noqa: E402
 from dissertation_data_pipeline_spark.streaming.jobs import (  # noqa: E402
     read_events_stream,
+    run_available_now_to_memory,
 )
 from dissertation_data_pipeline_spark.streaming.joins import (  # noqa: E402
     stream_static_enrich,
@@ -59,24 +60,18 @@ DRAIN_TIMEOUT_S = 1800
 
 
 def _drain(stream, transform, output_mode, name, ckpt_root):
-    """Start transform(stream) into a memory sink with AvailableNow,
-    block until the backlog drains, return wall seconds."""
-    out = transform(stream)
+    """Drain transform(stream) into a memory sink with AvailableNow and
+    return the wall seconds until the backlog is drained."""
     t0 = time.perf_counter()
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", os.path.join(ckpt_root, name))
-        .trigger(availableNow=True)
-        .start()
+    run_available_now_to_memory(
+        stream,
+        transform,
+        name,
+        os.path.join(ckpt_root, name),
+        output_mode=output_mode,
+        timeout_sec=DRAIN_TIMEOUT_S,
     )
-    finished = q.awaitTermination(DRAIN_TIMEOUT_S)
-    wall = time.perf_counter() - t0
-    if not finished:
-        q.stop()
-        raise TimeoutError(f"{name} did not drain in {DRAIN_TIMEOUT_S}s")
-    return wall
+    return time.perf_counter() - t0
 
 
 def main() -> None:
