@@ -10,6 +10,8 @@ streaming) that a 100 TB deployment needs.
 Layers
 ------
 - ``session``    — SparkSession factory tuned for scale (AQE, Arrow, UTC).
+- ``pyworker_daemon`` — Python-worker entry point that drops Spark's
+                   archives from the worker's ``sys.path``.
 - ``schemas``    — fixed StructType contracts + ``conform`` (SURVEY §1.3).
 - ``functions``  — scalar expression library (SURVEY §2.8): every reference
                    scalar as a pure ``Column -> Column`` builder, no UDFs.
@@ -23,4 +25,13 @@ Layers
 
 __version__ = "0.1.0"
 
-from dissertation_data_pipeline_spark.session import get_spark  # noqa: F401
+
+def __getattr__(name):
+    # Lazy (PEP 562): ``python -m dissertation_data_pipeline_spark.
+    # pyworker_daemon`` runs this file first, and must import no pyspark
+    # before it has chosen the worker's sys.path.
+    if name == "get_spark":
+        from dissertation_data_pipeline_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

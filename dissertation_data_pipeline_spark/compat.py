@@ -107,12 +107,16 @@ def ensure_protobuf() -> bool:
     try:
         import google.protobuf as _gp
 
-        # A REAL install has __init__.py.  In Spark workers, `import
-        # google.protobuf` can succeed as an empty NAMESPACE package
-        # instead: spark-core's jar sits on worker sys.path and ships
-        # `google/protobuf/*.proto` resources, which zipimport happily
-        # treats as a namespace portion (no __file__, no Python in it).
-        # Only a file-backed package counts as installed.
+        # A REAL install has __init__.py.  In a Spark worker started by
+        # the stock daemon, `import google.protobuf` can succeed as an
+        # empty NAMESPACE package instead: spark-core's jar sits on
+        # that worker's sys.path and ships `google/protobuf/*.proto`
+        # resources, which zipimport happily treats as a namespace
+        # portion (no __file__, no Python in it).  Workers of the
+        # engine's own sessions drop the jar (pyworker_daemon), but the
+        # stock daemon still runs on a pyspark version mismatch and in
+        # sessions the host built.  Only a file-backed package counts
+        # as installed.
         if getattr(_gp, "__file__", None) is not None:
             orig_validator = None
             try:

@@ -40,6 +40,9 @@ from dissertation_data_pipeline_spark.session import pin_spread
 
 
 def _dec(col: Column | str) -> Column:
+    """The engine's one exact money representation: DECIMAL(18,2) sums
+    are order-independent, so every partitioning and the DuckDB oracle
+    agree to the cent."""
     c = F.col(col) if isinstance(col, str) else col
     return c.cast("decimal(18,2)")
 

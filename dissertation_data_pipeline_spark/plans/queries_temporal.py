@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from dissertation_data_pipeline_spark.operators.analytics import _dec
 from dissertation_data_pipeline_spark.operators.temporal import (
     asof_join,
     asof_join_nearest,
@@ -32,7 +33,7 @@ from dissertation_data_pipeline_spark.operators.temporal import (
     sessionize,
     time_rollup,
 )
-from dissertation_data_pipeline_spark.plans.registry import _dec, register
+from dissertation_data_pipeline_spark.plans.registry import register
 from dissertation_data_pipeline_spark.tables import load_table
 
 

@@ -16,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dissertation_data_pipeline_spark.plans.registry import _dec, register
+from dissertation_data_pipeline_spark.operators.analytics import _dec
+from dissertation_data_pipeline_spark.plans.registry import register
 from dissertation_data_pipeline_spark.tables import load_table
 
 

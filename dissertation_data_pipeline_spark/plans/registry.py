@@ -44,6 +44,7 @@ from dissertation_data_pipeline_spark.operators import (
     top_k_frequency,
     union_conform,
 )
+from dissertation_data_pipeline_spark.operators.analytics import _dec
 from dissertation_data_pipeline_spark.schemas import conform
 from dissertation_data_pipeline_spark.tables import load_table
 
@@ -80,12 +81,6 @@ def query_fns() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sqls() -> dict[str, str]:
     """DuckDB oracle SQL for every query that has one, in registration order."""
     return {n: q.sql for n, q in QUERIES.items() if q.sql is not None}
-
-
-def _dec(col) -> F.Column:
-    """Exact money representation (see module docstring)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("decimal(18,2)")
 
 
 # ---------------------------------------------------------------------------

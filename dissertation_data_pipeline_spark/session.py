@@ -110,19 +110,19 @@ def get_spark(
     # e.g. local-cluster[2,16,4096]) exercises REAL separate executor
     # JVMs + Python workers, which single-JVM local[n] structurally
     # cannot (closure capture, worker-side imports, executor broadcast
-    # memory).  Executor processes inherit this process's environment
-    # in local-cluster mode, but PYTHONPATH is ALSO set explicitly via
-    # spark.executorEnv so the engine package resolves in workers no
-    # matter how the host launched the driver.
+    # memory).
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
     builder = SparkSession.builder.appName(app_name).master(master)
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-    if master.startswith("local-cluster") or master.startswith("spark://"):
-        import dissertation_data_pipeline_spark as _pkg
-
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(_pkg.__file__)))
-        pypath = repo_root + os.pathsep + os.environ.get("PYTHONPATH", "")
-        builder = builder.config("spark.executorEnv.PYTHONPATH", pypath)
+    # Python workers start through pyworker_daemon, which drops Spark's
+    # archives from their sys.path (DESIGN §14).  The checkout goes on
+    # their PYTHONPATH for every master, so that module and the engine
+    # resolve in workers whatever the driver's cwd.
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pypath = os.pathsep.join(p for p in (repo_root, os.environ.get("PYTHONPATH")) if p)
+    builder = builder.config(
+        "spark.python.daemon.module", "dissertation_data_pipeline_spark.pyworker_daemon"
+    ).config("spark.executorEnv.PYTHONPATH", pypath)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

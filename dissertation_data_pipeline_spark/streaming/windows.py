@@ -20,9 +20,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _dec(col: str) -> Column:
-    return F.col(col).cast("decimal(18,2)")
+from dissertation_data_pipeline_spark.operators.analytics import _dec
 
 
 def _windowed_agg(

@@ -562,14 +562,15 @@ def test_plans_layout_is_by_domain():
 
 
 def test_plans_define_one_dec():
-    """plans/ has a single ``_dec`` money cast, in registry.py; the
-    modules that use it import it rather than keep a copy."""
+    """The package has a single ``_dec`` money cast, in the engine's
+    operators/analytics.py; every module that uses it, engine or query
+    module, imports it rather than keep a copy."""
     import ast
 
     defs = [
-        p.name
-        for p in sorted(PLANS_DIR.glob("*.py"))
+        p.relative_to(PLANS_DIR.parent).as_posix()
+        for p in sorted(PLANS_DIR.parent.rglob("*.py"))
         for node in ast.walk(ast.parse(p.read_text(), str(p)))
         if isinstance(node, ast.FunctionDef) and node.name == "_dec"
     ]
-    assert defs == ["registry.py"]
+    assert defs == ["operators/analytics.py"]

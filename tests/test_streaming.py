@@ -3,9 +3,17 @@ identical results under readStream + AvailableNow as under batch."""
 
 from __future__ import annotations
 
+import datetime
+import importlib.util
+import inspect
+import re
 import shutil
+import sys
 import tempfile
+from pathlib import Path
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -474,3 +482,49 @@ def test_interval_join_full_outer_keeps_key_and_refuses_collisions(spark):
     clashing_left = left.withColumn("r_event_id", F.lit("x"))
     with pytest.raises(ValueError, match="collide"):
         stream_stream_interval_join(clashing_left, right, "user_id")
+
+
+# -- the inner stream-stream join's watermark vs. the fixtures' events span ----
+# s_stream_stream_join drains under a watermark delay longer than the events
+# table's time span, so no join state is evicted mid-drain and the drain
+# equals the batch join for any file staging.  A fixture whose span reaches
+# the delay would make the gate row depend on the staging instead.
+
+PERFBENCH = Path(__file__).resolve().parents[1] / "perfbench"
+
+
+def _inner_join_delay() -> datetime.timedelta:
+    from dissertation_data_pipeline_spark.plans.registry import QUERIES
+
+    src = inspect.getsource(QUERIES["s_stream_stream_join"].fn)
+    (days,) = re.findall(r'watermark_delay="(\d+) days"', src)
+    return datetime.timedelta(days=int(days))
+
+
+def _span(ts) -> datetime.timedelta:
+    return pc.max(ts).as_py() - pc.min(ts).as_py()
+
+
+def _perfbench_module(name: str, monkeypatch):
+    spec = importlib.util.spec_from_file_location(f"_perfbench_{name}", PERFBENCH / f"{name}.py")
+    mod = importlib.util.module_from_spec(spec)
+    monkeypatch.setitem(sys.modules, spec.name, mod)  # dataclasses look it up
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_testdata_events_span_stays_under_inner_join_watermark(sf_dir):
+    sf_dirs = sorted(Path(sf_dir).parent.glob("sf*"))
+    assert len(sf_dirs) >= 3
+    for d in sf_dirs:
+        ts = pq.read_table(d / "events.parquet", columns=["ts"]).column("ts")
+        assert _span(ts) < _inner_join_delay(), d.name
+
+
+def test_perfbench_events_span_stays_under_inner_join_watermark(monkeypatch):
+    datagen = _perfbench_module("datagen", monkeypatch)
+    workloads = _perfbench_module("workloads", monkeypatch)
+    sfs = sorted({workloads.SMOKE_SF, *(w.sf for w in workloads.WORKLOADS.values())})
+    for sf in sfs:
+        ts = datagen.build_tables(sf)["events"].column("ts")
+        assert _span(ts) < _inner_join_delay(), sf
