@@ -12,6 +12,7 @@ import contextlib
 from pyspark.sql import functions as F
 
 from dissertation_data_pipeline_spark.plans.registry import register
+from dissertation_data_pipeline_spark.session import plan_size_bytes
 from dissertation_data_pipeline_spark.streaming.windows import (
     dedup_first_in_window,
     session_window_agg,
@@ -135,19 +136,22 @@ def s_json_props(spark, sf_dir):
     )
 
 
-def _drain_partitions(n_rows: int, spark) -> int:
-    """State-store partition count for a bounded AvailableNow drain,
-    sized to the staged input: ~125k rows per state partition per
-    batch, floored at the r6-measured gate optimum (8 — see
-    BASELINE.md 'stateful-drain overhead') and capped at the session
-    shuffle conf.  At gate SFs this resolves to exactly the pinned 8
-    (results are partition-count independent, pinned by test); at the
-    sf10 trend point the fixed 8 starved 32 cores — measured 140 s vs
-    ~56 s pre-pin — which this sizing repairs without giving up the
-    small-SF win.  On a real cluster the same rule scales with the
-    session conf, which is the deployment's knob."""
-    conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(8, min(conf, n_rows // 125_000))
+#: Projected input bytes per state partition of a profile drain: the
+#: staged 4-column projection measures 13-15 B/row at sf0.001-0.1, so
+#: 2 MiB is ~125k rows.
+_PROFILE_BYTES_PER_PARTITION = 2 << 20
+
+
+def _profile_partitions(size_bytes: int | None) -> int:
+    """State-store partitions requested for a profile drain over
+    ``size_bytes`` of projected input: one per 2 MiB, floored at the
+    r6-measured gate optimum of 8 (BASELINE.md 'stateful-drain
+    overhead').  The drain caps the request at the session's shuffle
+    conf, so on a session of fewer slots every store runs in one wave,
+    and at sf10 under a 32-partition conf the request (60-odd) caps
+    to 32 — the r8 fix for the starved fixed 8 (140 s vs ~56 s).
+    Unknown size requests the floor."""
+    return max(8, (size_bytes or 0) // _PROFILE_BYTES_PER_PARTITION)
 
 
 def _drain_profile(spark, sf_dir, operator, sink_name: str, state_store):
@@ -165,12 +169,12 @@ def _drain_profile(spark, sf_dir, operator, sink_name: str, state_store):
         run_available_now_to_memory,
     )
 
-    events = load_table(spark, sf_dir, "events")
-    n_events = events.count()
     # stage only the four columns the profile operators consume (both
     # project exactly these); event_id and the props JSON are
     # staging-write dead weight
-    staged = events.select("user_id", "ts", "event_type", "value")
+    staged = load_table(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_type", "value"
+    )
     work = tempfile.mkdtemp(prefix=f"ddp_{sink_name}_")
     try:
         src = os.path.join(work, "src")
@@ -188,12 +192,13 @@ def _drain_profile(spark, sf_dir, operator, sink_name: str, state_store):
                 # loaded-host headroom (idle: ~6 s) — same rationale as
                 # s_stream_stream_join
                 timeout_sec=600,
-                shuffle_partitions=_drain_partitions(n_events, spark),
+                # sized from planning statistics: zero jobs
+                shuffle_partitions=_profile_partitions(plan_size_bytes(staged)),
                 # update-mode, no timers: the trailing empty micro-batch
                 # emits nothing and only pays state-store load/commit
-                # (for RocksDB, re-opening all 8 stores: measured 7.7 s
-                # of executor time at sf0.1) — A/B-verified identical
-                # output (r10, hash-equal)
+                # (for RocksDB, re-opening every store: measured 7.7 s
+                # of executor time at sf0.1 over 8 stores) —
+                # A/B-verified identical output (r10, hash-equal)
                 no_data_batches=False,
             )
         final = sink.groupBy("user_id").agg(
@@ -477,16 +482,17 @@ def s_stream_stream_join(spark, sf_dir):
             # drain well past the 120 s default (idle: ~15 s; measured
             # >120 s under a concurrent full-suite run)
             timeout_sec=600,
-            # PINNED 8, deliberately NOT _drain_partitions: join state
-            # is WATERMARK-BOUNDED — it never grows with staged input,
-            # so the stateful drain's sf10 starvation cannot occur
-            # here, and rows-sizing only multiplies per-batch store
-            # commits (measured at sf10: 16 partitions 14.1-14.5 s vs
-            # 11.2 s pinned — BASELINE.md round-9 drain A/B)
+            # 8, capped at the session conf — deliberately not sized
+            # like the profile drain: join state is WATERMARK-BOUNDED,
+            # it never grows with staged input, so the profile drain's
+            # sf10 starvation cannot occur here, and input sizing only
+            # multiplies per-batch store commits (measured at sf10: 16
+            # partitions 14.1-14.5 s vs 11.2 s at 8 — BASELINE.md
+            # round-9 drain A/B)
             shuffle_partitions=8,
             # INNER join: matches emit eagerly on arrival, so the
             # trailing empty micro-batch emits nothing and only pays 4
-            # state-store commits x 8 partitions — skip it (A/B: 3.6-
+            # state-store commits per partition — skip it (A/B: 3.6-
             # 5.0 s -> 2.9-3.2 s at sf0.1, output hash identical).
             # The OUTER siblings keep the default: their null-padded
             # rows flush exactly in that final watermark batch.
@@ -651,8 +657,8 @@ def s_stream_stream_join_evict(spark, sf_dir):
             os.path.join(work, "ckpt"),
             output_mode="append",
             timeout_sec=600,
-            # pinned 8 — watermark-bounded join state; see
-            # s_stream_stream_join's measured rationale
+            # 8, capped at the session conf — watermark-bounded join
+            # state; see s_stream_stream_join's measured rationale
             shuffle_partitions=8,
             # INNER join (replay rows are a DATA batch; eviction runs
             # inside data batches regardless): the trailing empty
@@ -771,8 +777,8 @@ def s_stream_stream_left_outer(spark, sf_dir):
             os.path.join(work, "ckpt"),
             output_mode="append",
             timeout_sec=600,
-            # pinned 8 — watermark-bounded join state; see
-            # s_stream_stream_join's measured rationale
+            # 8, capped at the session conf — watermark-bounded join
+            # state; see s_stream_stream_join's measured rationale
             shuffle_partitions=8,
         )
         return sink.localCheckpoint()
@@ -870,8 +876,8 @@ def s_stream_stream_full_outer(spark, sf_dir):
             os.path.join(work, "ckpt"),
             output_mode="append",
             timeout_sec=600,
-            # pinned 8 — watermark-bounded join state; see
-            # s_stream_stream_join's measured rationale
+            # 8, capped at the session conf — watermark-bounded join
+            # state; see s_stream_stream_join's measured rationale
             shuffle_partitions=8,
         )
         return sink.localCheckpoint()

@@ -160,6 +160,19 @@ def pin_spread(df, *cols):
     return df.repartition(pinned_partitions(df), *cols)
 
 
+def plan_size_bytes(df) -> int | None:
+    """Catalyst's planning-time ``sizeInBytes`` estimate of ``df`` —
+    exact file bytes for a parquet scan, scaled by row width through a
+    projection.  Starts no job; None when the plan offers no
+    statistics."""
+    try:
+        return int(
+            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())  # noqa: SLF001
+        )
+    except Exception:
+        return None
+
+
 def spread_small_scan(df) -> DataFrame:
     """Round-robin to full parallelism when the input is too small to
     scan as ``defaultParallelism`` tasks (a single-row-group parquet
@@ -184,11 +197,8 @@ def spread_small_scan(df) -> DataFrame:
     Lives in session.py beside the other result-invariant execution
     helpers, which operators and plans both import."""
     sc = df.sparkSession.sparkContext
-    try:
-        size = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())  # noqa: SLF001
-        )
-    except Exception:
+    size = plan_size_bytes(df)
+    if size is None:
         return df
     max_split = int(
         df.sparkSession.conf.get(

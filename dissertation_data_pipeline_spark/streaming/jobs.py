@@ -85,18 +85,22 @@ def run_available_now_to_memory(
     half-populated table would hand the caller silently truncated
     results.
 
-    ``shuffle_partitions`` (opt-in) patches the state-store partition
-    count for this drain only.  A stateful streaming query creates ONE
-    state store per shuffle partition per stateful operator,
-    re-materialized every micro-batch — so a bounded drain at the
-    session default (32) pays 32 state-store tasks per operator per
-    batch even when each batch carries a few thousand rows.  The count
-    is baked into the checkpoint at first start, so patching it around
-    ``.start()`` is both safe (fresh checkpoint per run) and complete
-    (later batches reuse the baked count).  Results are partition-count
-    independent — the registry's oracle rows pin that.  Production
-    streams on a real cluster should instead size this to cores × state
-    volume.
+    ``shuffle_partitions`` (opt-in) sets the state-store partition
+    count for this drain only.  A stateful streaming query loads and
+    commits ONE state store per shuffle partition per stateful
+    operator every micro-batch, so on a bounded drain each partition
+    beyond the session's task slots adds a second wave of store loads
+    and commits that buys no parallelism.  The request is therefore
+    capped at the session's current ``spark.sql.shuffle.partitions``
+    (the engine sizes that conf to the cores): where the conf is at
+    least the request, the request stands; below it, the drain runs
+    its stores in one wave.  The count is baked into the checkpoint at
+    first start — a restart from an existing checkpoint keeps the
+    baked count whatever is requested — so patching the conf around
+    ``.start()`` is safe for the fresh checkpoint each run uses and
+    complete for every later batch.  Results are partition-count
+    independent; the registry's oracle rows and the invariance harness
+    pin that.
 
     ``no_data_batches=False`` (opt-in) skips the trailing empty
     micro-batch the engine otherwise runs for eager state management
@@ -112,7 +116,10 @@ def run_available_now_to_memory(
     spark = stream_df.sparkSession
     confs: dict[str, str] = {}
     if shuffle_partitions is not None:
-        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+        session_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        confs["spark.sql.shuffle.partitions"] = str(
+            min(shuffle_partitions, session_conf)
+        )
     if not no_data_batches:
         confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     with patched_sql_confs(spark, confs):

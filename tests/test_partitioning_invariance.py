@@ -49,6 +49,10 @@ SAMPLE = [
     "ext_classifier_quality_filter",  # int64 milli-score broadcast join
     "ext_temperature_mixture",     # sqrt shares + 1-row total broadcast
     "ext_unicode_nfc",             # pandas-UDF NFC map (narrow)
+    # bounded drains: the state-partition cap runs them at 3 vs 8
+    # state partitions under the two confs below
+    "s_stateful_profile",          # applyInPandasWithState drain
+    "s_stream_stream_left_outer",  # outer join, final watermark flush
 ]
 
 

@@ -528,3 +528,208 @@ def test_perfbench_events_span_stays_under_inner_join_watermark(monkeypatch):
     for sf in sfs:
         ts = datagen.build_tables(sf)["events"].column("ts")
         assert _span(ts) < _inner_join_delay(), sf
+
+
+# --- drain state partitions: one wave of the session's task slots -------
+#
+# run_available_now_to_memory caps a requested state-partition count at
+# the session's shuffle conf; the profile drain requests one partition
+# per 2 MiB of projected input (floor 8) from planning statistics.
+
+MIB = 1 << 20
+
+
+def test_drain_caps_requested_state_partitions_at_session_conf(spark, sf_dir, tmpdirs):
+    from dissertation_data_pipeline_spark.streaming.jobs import patched_sql_confs
+
+    events = load_table(spark, sf_dir, "events").limit(5)
+    src = f"{tmpdirs}/src"
+    events.write.parquet(src)
+    key = "spark.sql.shuffle.partitions"
+    seen = []
+
+    def observe(df):
+        seen.append(spark.conf.get(key))
+        return df
+
+    for i, (conf, requested) in enumerate([(3, 8), (4, 2), (200, 8)]):
+        with patched_sql_confs(spark, {key: str(conf)}):
+            run_available_now_to_memory(
+                read_events_stream(spark, src, events.schema),
+                observe,
+                f"t_cap_{i}",
+                f"{tmpdirs}/ckpt_{i}",
+                shuffle_partitions=requested,
+            )
+            assert spark.conf.get(key) == str(conf)
+    assert seen == ["3", "2", "8"]
+
+
+def _old_drain_rule(n_rows: int, conf: int) -> int:
+    """The count the profile drain used before the cap: the floor of 8
+    applied after the conf, so a sub-8 conf still ran 8 stores."""
+    return max(8, min(conf, n_rows // 125_000))
+
+
+def test_profile_drain_sizing_arithmetic(spark):
+    from dissertation_data_pipeline_spark.plans.queries_streaming import (
+        _profile_partitions,
+    )
+    from dissertation_data_pipeline_spark.session import plan_size_bytes
+
+    def drained(size, conf):
+        return min(conf, _profile_partitions(size))
+
+    confs = (1, 2, 3, 4, 7, 8, 16, 32, 200)
+    sizes = (None, 0, 1, 2 * MIB, 18 * MIB, 100 * MIB, 10 * 1024 * MIB)
+    assert all(drained(s, c) <= c for s in sizes for c in confs)
+    # the testdata projections stay at the floor: min(8, conf)
+    for sf in ("0.001", "0.01", "0.1"):
+        staged = load_table(spark, f"/root/testdata/sf{sf}", "events").select(
+            "user_id", "ts", "event_type", "value"
+        )
+        size = plan_size_bytes(staged)
+        assert size is not None and 0 < size < 4 * MIB, (sf, size)
+        assert all(drained(size, c) == min(8, c) for c in confs), sf
+    assert _profile_partitions(18 * MIB - 1) == 8
+    assert _profile_partitions(18 * MIB) == 9
+    # where the cap does not bind, the byte rule matches the old row rule
+    # at 13-15 B/row (the measured projection width): sf0.001-sf1 at
+    # any conf >= 8, and sf10 under a 32-partition conf
+    for bytes_per_row in (13, 14, 15):
+        for n_rows in (1_000, 10_000, 100_000, 1_000_000):
+            for conf in (8, 16, 32, 200):
+                assert drained(n_rows * bytes_per_row, conf) == _old_drain_rule(
+                    n_rows, conf
+                ), (bytes_per_row, n_rows, conf)
+        assert drained(10_000_000 * bytes_per_row, 32) == _old_drain_rule(
+            10_000_000, 32
+        ) == 32
+
+
+def test_stateful_profile_build_starts_no_count(spark, sf_dir, monkeypatch):
+    from dissertation_data_pipeline_spark.plans.registry import QUERIES
+
+    def no_count(self):
+        raise AssertionError("the profile drain's build must not count rows")
+
+    # the session's concrete DataFrame class, which overrides count()
+    monkeypatch.setattr(type(spark.range(1)), "count", no_count)
+    out = QUERIES["s_stateful_profile"].fn(spark, sf_dir)
+    monkeypatch.undo()
+    assert out.count() > 0
+
+
+def test_stateful_profile_gate_query_matches_batch(spark, sf_dir):
+    """The real-streaming gate query (staged files + AvailableNow +
+    update-sink monotone-max reduction) equals the batch aggregate —
+    the exact claim its DuckDB oracle states."""
+    from dissertation_data_pipeline_spark.plans.registry import QUERIES
+    from dissertation_data_pipeline_spark.tables import load_table
+
+    got = {
+        r.user_id: (r.n_events, r.last_ts, r.n_event_types)
+        for r in QUERIES["s_stateful_profile"].fn(spark, sf_dir).collect()
+    }
+    e = load_table(spark, sf_dir, "events")
+    exp = {
+        r.user_id: (r.n_events, r.last_ts, r.n_event_types)
+        for r in e.groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.max("ts").alias("last_ts"),
+            F.countDistinct("event_type").cast("int").alias("n_event_types"),
+        )
+        .collect()
+    }
+    assert got == exp
+
+
+def _reduce_profiles(rows) -> dict:
+    """Final state per key from update-mode profile emissions: every
+    gate column is monotone per key, so the per-key max is the state."""
+    out: dict = {}
+    for r in rows:
+        prev = out.get(r.user_id)
+        cur = (r.n_events, r.last_ts, r.n_event_types)
+        out[r.user_id] = cur if prev is None else tuple(map(max, prev, cur))
+    return out
+
+
+def test_profile_drain_restarts_from_checkpoint(spark, sf_dir, tmpdirs):
+    """Crash/restart: drain the first staged file into checkpoint C at 2
+    state partitions, add the second file, and drain again from C under
+    a session conf of 4.  The restart keeps the count baked into C, and
+    the union of both runs' emissions reduces to the same per-key state
+    as an uninterrupted drain and the batch GROUP BY.  A foreachBatch
+    sink collects the emissions: the memory sink recovers from a
+    checkpoint only in complete mode."""
+    import os
+
+    from dissertation_data_pipeline_spark.streaming.jobs import patched_sql_confs
+    from dissertation_data_pipeline_spark.streaming.stateful import (
+        running_user_profile,
+    )
+
+    events = load_table(spark, sf_dir, "events")
+    staged = events.select("user_id", "ts", "event_type", "value")
+    stage = os.path.join(tmpdirs, "stage")
+    staged.repartition(2).write.parquet(stage)
+    files = sorted(f for f in os.listdir(stage) if f.endswith(".parquet"))
+    assert len(files) == 2
+
+    def drain(src, ckpt, conf):
+        emitted = []
+        with patched_sql_confs(spark, {"spark.sql.shuffle.partitions": str(conf)}):
+            stream = read_events_stream(
+                spark, src, staged.schema, max_files_per_trigger=1
+            )
+            query = (
+                running_user_profile(stream, evict=False)
+                .writeStream.outputMode("update")
+                .foreachBatch(lambda df, _id: emitted.extend(df.collect()))
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            assert query.awaitTermination(600)
+        parts = {
+            op["numShufflePartitions"]
+            for p in query.recentProgress
+            for op in p["stateOperators"]
+        }
+        return emitted, parts
+
+    src = os.path.join(tmpdirs, "src")
+    os.makedirs(src)
+    ckpt = os.path.join(tmpdirs, "ckpt")
+    shutil.copy(os.path.join(stage, files[0]), src)
+    first, first_parts = drain(src, ckpt, conf=2)
+    shutil.copy(os.path.join(stage, files[1]), src)
+    second, second_parts = drain(src, ckpt, conf=4)
+    assert first and second
+    assert first_parts == {2}
+    assert second_parts == {2}  # the baked count wins over the session conf
+
+    whole = os.path.join(tmpdirs, "whole")
+    shutil.copytree(stage, whole)
+    uninterrupted, _ = drain(whole, os.path.join(tmpdirs, "ckpt_whole"), conf=2)
+
+    oracle = {
+        r.user_id: (r.n_events, r.last_ts, r.n_event_types)
+        for r in events.groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.max("ts").alias("last_ts"),
+            F.countDistinct("event_type").cast("int").alias("n_event_types"),
+        )
+        .collect()
+    }
+    restarted = _reduce_profiles(first + second)
+    assert restarted == _reduce_profiles(uninterrupted) == oracle
+    # state really crossed the restart: some key's first-run emission is
+    # superseded by a larger count in the second run
+    assert any(
+        r.n_events > _reduce_profiles(first).get(r.user_id, (0,))[0] > 0
+        for r in second
+    )

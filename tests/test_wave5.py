@@ -335,31 +335,6 @@ def test_shard_assignment_deterministic_and_balanced(spark, sf_dir):
         assert abs(n_docs - mean_docs) / mean_docs < 0.5, (shard, n_docs)
 
 
-def test_stateful_profile_gate_query_matches_batch(spark, sf_dir):
-    """The real-streaming gate query (staged files + AvailableNow +
-    update-sink monotone-max reduction) equals the batch aggregate —
-    the exact claim its DuckDB oracle states."""
-    from dissertation_data_pipeline_spark.plans.registry import QUERIES
-    from dissertation_data_pipeline_spark.tables import load_table
-
-    got = {
-        r.user_id: (r.n_events, r.last_ts, r.n_event_types)
-        for r in QUERIES["s_stateful_profile"].fn(spark, sf_dir).collect()
-    }
-    e = load_table(spark, sf_dir, "events")
-    exp = {
-        r.user_id: (r.n_events, r.last_ts, r.n_event_types)
-        for r in e.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.max("ts").alias("last_ts"),
-            F.countDistinct("event_type").cast("int").alias("n_event_types"),
-        )
-        .collect()
-    }
-    assert got == exp
-
-
 def test_hashed_classifier_score_exact_and_partition_invariant(spark):
     """Integer milli-weight scoring is bit-exact: a hand-computed md5
     score on a 2-doc frame matches, and any repartitioning produces the
