@@ -108,6 +108,21 @@ def _shuffle_totals(spark) -> tuple[int, int]:
         return (-1, -1)
 
 
+def warm_up(spark, names, sf_dir, queries=QUERIES) -> list[dict[str, str]]:
+    """Run each named query once on ``sf_dir`` with a ``count()``.  A
+    query that raises is reported as ``{name, error}`` (and one stderr
+    line) and the rest still run; the timed pass meets it again."""
+    failures = []
+    for name in names:
+        try:
+            queries[name].fn(spark, sf_dir).count()
+        except Exception as e:
+            msg = (str(e).strip().splitlines() or [""])[0]
+            failures.append({"name": name, "error": f"{type(e).__name__}: {msg}"[:400]})
+            print(f"bench: warmup {name} failed: {failures[-1]['error']}", file=sys.stderr)
+    return failures
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -122,12 +137,7 @@ def main() -> None:
     # pool spin-up. Iterative queries (connected components) and
     # pandas-UDF stages otherwise pay 2-4s of one-time cost that no
     # steady-state deployment would see.
-    warm_dir = "/root/testdata/sf0.001"
-    for name in names:
-        try:
-            QUERIES[name].fn(spark, warm_dir).count()
-        except Exception:
-            pass  # a warmup failure surfaces in the timed pass
+    warmup_failures = warm_up(spark, names, "/root/testdata/sf0.001")
     drop_blocks(spark)
 
     # Median-of-3 timed passes: this host shows neighbor-load spikes
@@ -223,6 +233,7 @@ def main() -> None:
                 "queries": timings,
                 "passes": passes,
                 "shuffle_bytes": shuffle_bytes,
+                "warmup_failures": warmup_failures,
                 "sf": sf,
             },
             fh,

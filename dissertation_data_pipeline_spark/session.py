@@ -141,11 +141,18 @@ def drop_blocks(spark: SparkSession) -> None:
     across a warmup pass plus timed passes the driver filled until
     legitimate broadcast builds failed with "Not enough memory to
     build and broadcast" (round-8 BENCH_SCALE sf10, diagnosed as a
-    planner problem first — it wasn't; the plans were right)."""
+    planner problem first — it wasn't; the plans were right).
+
+    The views are listed from the session catalog (what ``SHOW VIEWS``
+    reads), a few py4j calls and no job; ``catalog.listTables()``
+    collects a Dataset and so ran Spark jobs on every call (DESIGN §16).
+    Global temp views and persistent tables are not local temp views
+    and stay."""
     spark.catalog.clearCache()
-    for t in spark.catalog.listTables():
-        if t.isTemporary:
-            spark.catalog.dropTempView(t.name)
+    views = spark._jsparkSession.sessionState().catalog().listLocalTempViews("*")  # noqa: SLF001
+    it = views.iterator()
+    while it.hasNext():
+        spark.catalog.dropTempView(it.next().table())
     it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()  # noqa: SLF001
     while it.hasNext():
         it.next()._2().unpersist(True)

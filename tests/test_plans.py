@@ -386,6 +386,30 @@ def test_engine_modules_do_not_import_plans():
     assert offenders == []
 
 
+def test_package_calls_no_job_starting_catalog_listing():
+    """No module of the package calls ``.listTables(`` or
+    ``.toLocalIterator(``: PySpark collects both through a Dataset, so
+    each call starts Spark jobs, and on a per-query path (the
+    harnesses' ``drop_blocks``) that cost lands on every query
+    (DESIGN.md §16)."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "dissertation_data_pipeline_spark"
+    files = sorted(pkg.rglob("*.py"))
+    assert len(files) > 20
+    banned = {"listTables", "toLocalIterator"}
+    offenders = [
+        f"{f.relative_to(pkg)}:{node.lineno} .{node.func.attr}("
+        for f in files
+        for node in ast.walk(ast.parse(f.read_text(), str(f)))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in banned
+    ]
+    assert offenders == []
+
+
 # Where each query of a deleted round-named module now lives (DESIGN.md
 # §13). Old notes that cite one of these modules resolve through this map.
 ROUND_MODULE_HOMES = {

@@ -65,3 +65,27 @@ def test_bench_streaming_drain_times_the_shared_drain(monkeypatch, tmp_path):
         )
     ]
     assert isinstance(secs, float) and secs >= 0
+
+
+def test_bench_warm_up_records_a_failure_and_runs_the_rest(capsys):
+    """``bench.warm_up`` reports a raising query as ``{name, error}``
+    plus one stderr line, and still runs every query after it."""
+    from types import SimpleNamespace
+
+    import bench
+
+    ran = []
+
+    def builder(name):
+        result = SimpleNamespace(count=lambda: ran.append(name))
+        return SimpleNamespace(fn=lambda spark, sf_dir: result)
+
+    def broken(spark, sf_dir):
+        raise RuntimeError("no such table\nsecond line")
+
+    queries = {"a": builder("a"), "b": SimpleNamespace(fn=broken), "c": builder("c")}
+    failures = bench.warm_up(object(), ["a", "b", "c"], "/nowhere", queries)
+
+    assert failures == [{"name": "b", "error": "RuntimeError: no such table"}]
+    assert ran == ["a", "c"]
+    assert capsys.readouterr().err == "bench: warmup b failed: RuntimeError: no such table\n"
