@@ -1,9 +1,14 @@
 """Benchmark runner — the driver's per-round BENCH contract.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
+Runs the registry queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
 line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec, ...}, "sf": ...}.
+
+    python bench.py                 # every query; writes BENCH_DETAIL.json
+    python bench.py NAME [NAME ...] # just these; prints the line only
+
+$SPARK_GRAFT_BENCH_PASSES sets the number of timed passes (default 3).
 
 Each query is forced to execute fully (count over the result — keeps all
 computation in the JVM; no driver-side row materialization skews).
@@ -108,6 +113,12 @@ def _shuffle_totals(spark) -> tuple[int, int]:
         return (-1, -1)
 
 
+def error_text(e: Exception) -> str:
+    """``"Type: first line of the message"``, at most 400 characters."""
+    msg = (str(e).strip().splitlines() or [""])[0]
+    return f"{type(e).__name__}: {msg}"[:400]
+
+
 def warm_up(spark, names, sf_dir, queries=QUERIES) -> list[dict[str, str]]:
     """Run each named query once on ``sf_dir`` with a ``count()``.  A
     query that raises is reported as ``{name, error}`` (and one stderr
@@ -117,20 +128,73 @@ def warm_up(spark, names, sf_dir, queries=QUERIES) -> list[dict[str, str]]:
         try:
             queries[name].fn(spark, sf_dir).count()
         except Exception as e:
-            msg = (str(e).strip().splitlines() or [""])[0]
-            failures.append({"name": name, "error": f"{type(e).__name__}: {msg}"[:400]})
+            failures.append({"name": name, "error": error_text(e)})
             print(f"bench: warmup {name} failed: {failures[-1]['error']}", file=sys.stderr)
     return failures
 
 
-def main() -> None:
+def run_passes(
+    spark, names, sf_dir, n_passes, queries=QUERIES
+) -> tuple[list[dict[str, float]], list[float], dict[str, list[int]], list[dict]]:
+    """Time ``n_passes`` passes of build + ``count()`` over ``names`` on
+    ``sf_dir``, with ``drop_blocks`` after every query.
+
+    Returns the per-pass timings, the 1-minute load average after each
+    pass, the shuffle bytes per query and the failures.  A query that
+    raises is left out of that pass's timings and reported as ``{name,
+    pass, phase, error}`` (phase ``build`` or ``execute``, and one
+    stderr line); the rest still run.
+
+    Shuffle volume (write bytes, read bytes) is captured on the first
+    pass by diffing the app-lifetime executor totals around each query
+    — the dynamic complement to PLAN_STATS.md's static exchange counts.
+    The totals are monotone and drop_blocks moves no shuffle bytes, so
+    each query's post reading doubles as the next query's pre reading
+    (one REST probe per query)."""
+    passes: list[dict[str, float]] = []
+    loads: list[float] = []
+    sbytes: dict[str, list[int]] = {}
+    failures: list[dict] = []
+    for i in range(n_passes):
+        run: dict[str, float] = {}
+        pre = _shuffle_totals(spark) if i == 0 else (-1, -1)
+        for name in names:
+            phase = "build"
+            t0 = time.perf_counter()
+            try:
+                df = queries[name].fn(spark, sf_dir)
+                phase = "execute"
+                df.count()
+                run[name] = round(time.perf_counter() - t0, 3)
+            except Exception as e:
+                failures.append({"name": name, "pass": i, "phase": phase, "error": error_text(e)})
+                print(f"bench: pass {i} {name} failed in {phase}: {failures[-1]['error']}",
+                      file=sys.stderr)
+            if i == 0 and pre[0] >= 0:
+                post = _shuffle_totals(spark)
+                if post[0] >= 0:
+                    sbytes[name] = [post[0] - pre[0], post[1] - pre[1]]
+                pre = post
+            drop_blocks(spark)
+        passes.append(run)
+        loads.append(round(os.getloadavg()[0], 1))
+    return passes, loads, sbytes, failures
+
+
+def main(argv: list[str]) -> None:
+    unknown = [n for n in argv if n not in QUERIES]
+    if unknown:
+        sys.exit(f"bench: unknown queries: {' '.join(unknown)}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
+
+    if argv:
+        names = list(dict.fromkeys(argv))
+    else:
+        names = [n for n in HEADLINE if n in QUERIES]
+        names += [n for n in QUERIES if n not in names]
     spark = get_spark("ddp-bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    names = [n for n in HEADLINE if n in QUERIES]
-    names += [n for n in QUERIES if n not in names]
 
     # Warmup: run EVERY query once at the smallest SF so the timed pass
     # measures the plans, not JVM startup, codegen JIT, or Python-worker
@@ -161,50 +225,29 @@ def main() -> None:
         m = median(totals)
         return (max(totals) - min(totals)) / m if m else 0.0
 
-    # Measured shuffle volume per query (write bytes, read bytes),
-    # captured on ONE pass by diffing the app-lifetime executor totals
-    # around each execution — the dynamic complement to PLAN_STATS.md's
-    # static exchange counts (a query can have few exchanges but move a
-    # lot of bytes through them; this is the number that predicts the
-    # 100 TB shuffle bill). The totals are monotone and drop_blocks
-    # moves no shuffle bytes, so each query's post reading doubles as
-    # the next query's pre reading (one REST probe per query).
-    def run_passes() -> tuple[
-        list[dict[str, float]], list[float], dict[str, list[int]]
-    ]:
-        ps: list[dict[str, float]] = []
-        loads: list[float] = []
-        sbytes: dict[str, list[int]] = {}
-        for i in range(n_passes):
-            run: dict[str, float] = {}
-            pre = _shuffle_totals(spark) if i == 0 else (-1, -1)
-            for name in names:
-                t0 = time.perf_counter()
-                QUERIES[name].fn(spark, sf_dir).count()
-                run[name] = round(time.perf_counter() - t0, 3)
-                if i == 0 and pre[0] >= 0:
-                    post = _shuffle_totals(spark)
-                    if post[0] >= 0:
-                        sbytes[name] = [post[0] - pre[0], post[1] - pre[1]]
-                    pre = post
-                drop_blocks(spark)
-            ps.append(run)
-            loads.append(round(os.getloadavg()[0], 1))
-        return ps, loads, sbytes
+    def pass_sums(passes: list[dict[str, float]]) -> list[float]:
+        # over the queries every pass timed, so a failure in one pass
+        # does not read as spread
+        timed = set(names).intersection(*passes)
+        return [round(sum(p[n] for n in timed), 3) for p in passes]
 
     attempts = 1
-    passes, loadavgs, shuffle_bytes = run_passes()
-    spread = spread_of([sum(p.values()) for p in passes])
+    attempt = run_passes(spark, names, sf_dir, n_passes)
+    spread = spread_of(pass_sums(attempt[0]))
     if spread > 0.10 and n_passes > 1:
         attempts = 2
-        passes2, loadavgs2, shuffle2 = run_passes()
-        if spread_of([sum(p.values()) for p in passes2]) < spread:
-            # keep the whole attempt together — timings, loadavg, AND
-            # shuffle volume must describe the same run
-            passes, loadavgs, shuffle_bytes = passes2, loadavgs2, shuffle2
+        attempt2 = run_passes(spark, names, sf_dir, n_passes)
+        if spread_of(pass_sums(attempt2[0])) < spread:
+            # keep the whole attempt together — timings, loadavg, shuffle
+            # volume AND failures must describe the same run
+            attempt = attempt2
+    passes, loadavgs, shuffle_bytes, failures = attempt
 
-    timings = {n: round(median([p[n] for p in passes]), 3) for n in names}
-    pass_totals = [round(sum(p.values()), 3) for p in passes]
+    failed = {f["name"] for f in failures}
+    timings = {
+        n: round(median([p[n] for p in passes]), 3) for n in names if n not in failed
+    }
+    pass_totals = pass_sums(passes)
     spread = round(spread_of(pass_totals), 4)
 
     total = round(sum(timings.values()), 3)
@@ -217,29 +260,33 @@ def main() -> None:
     # record keeps only the last 2000 chars of stdout (BENCH_r01.json:
     # tail len 2000, parsed null because the full 100+-query JSON line
     # was truncated mid-line).  The printed line must fit that window.
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as fh:
-        json.dump(
-            {
-                "metric": "total_query_wall_clock",
-                "value": total,
-                "unit": "sec",
-                "avg_per_query": avg,
-                "estimator": f"median_of_{len(passes)}",
-                "pass_totals": pass_totals,
-                "pass_total_spread": spread,
-                "loadavg_per_pass": loadavgs,
-                "attempts": attempts,
-                "queries": timings,
-                "passes": passes,
-                "shuffle_bytes": shuffle_bytes,
-                "warmup_failures": warmup_failures,
-                "sf": sf,
-            },
-            fh,
-            indent=1,
-        )
-        fh.write("\n")
+    # A name-filtered run leaves the committed full-run file alone.
+    detail = None if argv else "BENCH_DETAIL.json"
+    if detail:
+        here = os.path.dirname(os.path.abspath(__file__))
+        with open(os.path.join(here, detail), "w") as fh:
+            json.dump(
+                {
+                    "metric": "total_query_wall_clock",
+                    "value": total,
+                    "unit": "sec",
+                    "avg_per_query": avg,
+                    "estimator": f"median_of_{len(passes)}",
+                    "pass_totals": pass_totals,
+                    "pass_total_spread": spread,
+                    "loadavg_per_pass": loadavgs,
+                    "attempts": attempts,
+                    "queries": timings,
+                    "passes": passes,
+                    "shuffle_bytes": shuffle_bytes,
+                    "warmup_failures": warmup_failures,
+                    "failures": failures,
+                    "sf": sf,
+                },
+                fh,
+                indent=1,
+            )
+            fh.write("\n")
 
     # Per-query entries: headline set first, then the PINNED list, then
     # slowest of the rest, greedily while the serialized line stays
@@ -251,37 +298,15 @@ def main() -> None:
     # driver's per-query diff now sees a stable set.  Additions only:
     # nothing is removed or renamed, and every query is still timed and
     # recorded in BENCH_DETAIL.json either way.
-    compact = lambda obj: json.dumps(obj, separators=(",", ":"))  # noqa: E731
-    ranked = [n for n in names if n in set(HEADLINE)]
-    ranked += [
-        n for n in PINNED_PRINT if n in timings and n not in set(HEADLINE)
-    ]
+    ranked = [n for n in names if n in timings and n in HEADLINE]
+    ranked += [n for n in PINNED_PRINT if n in timings and n not in HEADLINE]
     ranked += sorted(
         (n for n in timings if n not in set(ranked)),
         key=lambda n: -timings[n],
     )
-    shown: dict[str, float] = {}
-    for name in ranked:
-        trial = dict(shown)
-        trial[name] = timings[name]
-        line = compact(
-            {
-                "metric": "total_query_wall_clock",
-                "value": total,
-                "unit": "sec",
-                "avg_per_query": avg,
-                "queries": trial,
-                "sf": sf,
-                "n_queries": len(timings),
-                "queries_omitted": len(timings) - len(trial),
-                "detail": "BENCH_DETAIL.json",
-            }
-        )
-        if len(line) > 1700:
-            break
-        shown = trial
-    print(
-        compact(
+
+    def line(shown: dict[str, float]) -> str:
+        return json.dumps(
             {
                 "metric": "total_query_wall_clock",
                 "value": total,
@@ -291,11 +316,18 @@ def main() -> None:
                 "sf": sf,
                 "n_queries": len(timings),
                 "queries_omitted": len(timings) - len(shown),
-                "detail": "BENCH_DETAIL.json",
-            }
+                "detail": detail,
+            },
+            separators=(",", ":"),
         )
-    )
 
+    shown: dict[str, float] = {}
+    for name in ranked:
+        trial = {**shown, name: timings[name]}
+        if len(line(trial)) > 1700:
+            break
+        shown = trial
+    print(line(shown))
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

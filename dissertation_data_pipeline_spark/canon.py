@@ -5,7 +5,8 @@ A row becomes one line: its values rendered by a canonicalizer and
 joined with ``|``, columns taken in case-insensitive name order (the
 engines agree on column names only up to case).  The fingerprint is the
 sha256 of the sorted lines, so row order never matters.  Used by
-``tests/test_registry_oracle.py`` and ``tools/check_correctness.py``.
+``tests/test_registry_oracle.py`` and ``tools/check_correctness.py``,
+which run the oracle SQL on ``oracle_connection``.
 """
 
 from __future__ import annotations
@@ -44,3 +45,18 @@ def table_fingerprint(cols, rows, canon_fn=canon) -> str:
         h.update(line.encode())
         h.update(b"\n")
     return h.hexdigest()
+
+
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with one ``read_parquet`` view per table of
+    ``sf_dir``, named as the registry's oracle SQL names them."""
+    import duckdb
+
+    from dissertation_data_pipeline_spark.tables import TABLE_NAMES
+
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con

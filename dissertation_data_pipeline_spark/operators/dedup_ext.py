@@ -79,16 +79,6 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     )
 
 
-def char_ngrams(col: Column | str, n: int = 4) -> Column:
-    """Distinct character n-grams of the lowercased text."""
-    s = F.lower(F.trim(_c(col).cast("string")))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.length(s) - (n - 1)),
-        lambda i: F.substring(s, i, n),
-    )
-    return F.array_distinct(F.when(F.length(s) >= n, grams).otherwise(F.array(s)))
-
-
 def shingle_postings(
     df: DataFrame,
     id_col: str,
@@ -184,29 +174,6 @@ def shingle_hash(s: Column) -> Column:
     """32-bit integer hash of a shingle: the first 8 hex digits of its
     md5 (portable — DuckDB parses the same digits positionally)."""
     return F.conv(F.substring(_md5(s), 1, 8), 16, 10).cast("long")
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 12) -> Column:
-    """MinHash signature over the shingle set.
-
-    Two-level fold keeps hash work linear: an inner ``transform``
-    computes ONE md5-derived 32-bit value per shingle (the lambda
-    variable is then free to reference), and a single ``aggregate``
-    advances all ``num_hashes`` minima together — never re-evaluating
-    a digest (see the expression-reuse trap in the module docstring).
-    """
-    coeffs = MINHASH_COEFFS[:num_hashes]
-    assert len(coeffs) == num_hashes, "extend MINHASH_COEFFS for more hashes"
-    hvals = F.transform(shingles, shingle_hash)
-    init = F.array(*[F.lit(MINHASH_PRIME).cast("long") for _ in coeffs])
-    perms = lambda h: F.array(  # noqa: E731
-        *[(F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME) for a, b in coeffs]
-    )
-    return F.aggregate(
-        hvals,
-        init,
-        lambda acc, h: F.zip_with(acc, perms(h), lambda a, x: F.least(a, x)),
-    )
 
 
 def jaccard(a: Column, b: Column) -> Column:

@@ -278,15 +278,6 @@ def wav_audio_decoder(data: bytes) -> tuple[int, int, int, float]:
     return rate, ch, n, (ss / (full * full * count)) ** 0.5
 
 
-def fake_audio_decoder(data: bytes) -> tuple[int, int, int, float]:
-    """Deterministic stand-in audio decoder (digest-derived fields) for
-    plumbing tests with non-WAV payloads. NOT a real decode."""
-    import hashlib
-
-    h = hashlib.md5(data).digest()
-    return 8000, 1, 64 + h[0], h[1] / 256.0
-
-
 def extract_audio_features(
     media: DataFrame, decoder: AudioDecoder | None = None
 ) -> DataFrame:

@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from dissertation_data_pipeline_spark import functions as fx
 from dissertation_data_pipeline_spark.operators import (
-    conflict_report,
     dedup_priority,
     flag_both_sources,
     frequency,
@@ -86,29 +85,6 @@ def normalize_bills(frames: Sequence[DataFrame]) -> DataFrame:
         fill_cols=["title", "legiscan_bill_url", "legiscan_text_url", "status"],
         tiebreak=["state", "bill_number"],
     )
-
-
-def normalizer_conflicts(frames: Sequence[DataFrame]) -> DataFrame:
-    """The normalizer's duplicate-conflict report (A8).
-
-    Conflicts are computed on the NORMALIZED values — the same
-    bill_number/title normalization ``normalize_bills`` merges on —
-    so the report describes exactly the groups the pipeline merges
-    (raw-value keys would miss 'HB 123' vs 'HB123' collisions and
-    report case-only title differences the pipeline title-cases away).
-    """
-    conformed = []
-    for df in frames:
-        c = conform(fuzzy_rename(df, BILL_HEADER_ALIASES), BILLS_COMBINED)
-        conformed.append(
-            c.withColumn(
-                "bill_number", fx.normalize_bill_number("bill_number")
-            ).withColumn("title", fx.title_case("title"))
-        )
-    merged = union_conform(*conformed).withColumn(
-        "bill_id", fx.make_bill_id("state", "bill_number")
-    )
-    return conflict_report(merged, "bill_id", ["title", "status"])
 
 
 def build_master_corpus(

@@ -27,6 +27,7 @@ from pyspark.sql.types import (
 )
 
 from dissertation_data_pipeline_spark.plans.registry import register
+from dissertation_data_pipeline_spark.session import plan_text
 from dissertation_data_pipeline_spark.sources.layout import zorder_value
 from dissertation_data_pipeline_spark.tables import load_table
 
@@ -656,9 +657,7 @@ def ext_bucketed_join(spark, sf_dir):
             .cast("double")
             .alias("total_price"),
         )
-        plan = joined._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            joined._jdf.queryExecution(), "formatted"
-        )
+        plan = plan_text(joined)
         # formatted op lists render shuffle nodes as '(4) Exchange'
         # with the partitioning on a separate Arguments: line — match
         # the node name exactly (BroadcastExchange is a distinct

@@ -180,6 +180,15 @@ def plan_size_bytes(df) -> int | None:
         return None
 
 
+def plan_text(df) -> str:
+    """``df``'s formatted plan, the text ``df.explain("formatted")``
+    prints: operator tree, then one details block per node.  Plans the
+    query; starts no job."""
+    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+        df._jdf.queryExecution(), "formatted"  # noqa: SLF001
+    )
+
+
 def spread_small_scan(df) -> DataFrame:
     """Round-robin to full parallelism when the input is too small to
     scan as ``defaultParallelism`` tasks (a single-row-group parquet

@@ -135,10 +135,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLE_NAMES)}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all tables as temp views so ``spark.sql`` queries work."""
     for n in TABLE_NAMES:

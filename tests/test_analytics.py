@@ -1,13 +1,21 @@
-"""Analytics wave: pivot/unpivot, CUBE, window suite, funnel, fuzzy
-matching, TF-IDF/BM25 — semantics + the plan shapes that matter."""
+"""Analytics: pivot/unpivot, CUBE, window suite, funnel, fuzzy
+matching, TF-IDF/BM25, per-group OLS, equi-depth histogram, sketches
+(bottom-k, count-min, HyperLogLog), grouped-agg pandas UDAF — semantics
++ the plan shapes that matter."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from dissertation_data_pipeline_spark.operators import analytics as an
 from dissertation_data_pipeline_spark.operators import textrank as tr
+from dissertation_data_pipeline_spark.operators.sketches import (
+    bottomk_sketches,
+    sketch_overlap_pairs,
+)
+from dissertation_data_pipeline_spark.operators.udafs import label_dim_medians
 from dissertation_data_pipeline_spark.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -358,3 +366,245 @@ def test_rolling_features_semantics(spark):
     assert out[5].roll_std == round(125 ** 0.5, 6)
     # constant series: zero std, ewma equals the value
     assert out[7].roll_std == 0.0 and out[7].ewma == 7.0
+
+
+# --- per-group OLS ---------------------------------------------------------
+
+def test_linreg_recovers_perfect_line(spark):
+    # y = 700x + 300 (cents), three groups' worth of x values
+    rows = [("t", x, 700 * x + 300) for x in range(0, 50)]
+    df = spark.createDataFrame(rows, "g string, x long, y long")
+    m = df.groupBy("g").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("x").alias("sx"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("x") * F.col("x")).alias("sxx"),
+        F.sum(F.col("x") * F.col("y")).alias("sxy"),
+        F.sum(F.col("y") * F.col("y")).alias("syy"),
+    )
+    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
+    den = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
+    row = m.select(
+        (num / den).alias("slope"),
+        (
+            (F.col("sy").cast("double") - num / den * F.col("sx").cast("double"))
+            / F.col("n").cast("double")
+        ).alias("icept"),
+    ).collect()[0]
+    assert row["slope"] == pytest.approx(700.0, abs=1e-9)
+    assert row["icept"] == pytest.approx(300.0, abs=1e-6)
+
+
+def test_linreg_query_r2_in_unit_interval(spark, sf_dir):
+    from dissertation_data_pipeline_spark.plans.registry import QUERIES
+
+    for r in QUERIES["ext_group_linreg"].fn(spark, sf_dir).collect():
+        assert 0.0 <= r["r2"] <= 1.0
+
+
+# --- equi-depth histogram --------------------------------------------------
+
+def test_equidepth_buckets_are_balanced(spark, sf_dir):
+    from dissertation_data_pipeline_spark.plans.registry import QUERIES
+
+    rows = QUERIES["ext_histogram_equidepth"].fn(spark, sf_dir).collect()
+    assert len(rows) == 10
+    counts = {r["bucket"]: r["n"] for r in rows}
+    n = sum(counts.values())
+    # exact order-statistic boundaries: every bucket within 2 of n/10
+    # unless ties force spill (synthetic prices are near-unique)
+    for b in range(10):
+        assert abs(counts[b] - n / 10) <= max(2, 0.02 * n)
+    # buckets tile the value range in order
+    ordered = [r for _, r in sorted((r["bucket"], r) for r in rows)]
+    for lo_r, hi_r in zip(ordered, ordered[1:]):
+        assert lo_r["hi_cents"] <= hi_r["lo_cents"]
+
+
+# --- sketches: bottom-k, count-min, HyperLogLog ----------------------------
+
+def test_bottomk_sketch_identical_groups_estimate_one(spark):
+    text = " ".join(f"w{i}" for i in range(40))
+    docs = spark.createDataFrame(
+        [Row(doc_id=1, g="a", text=text), Row(doc_id=2, g="b", text=text),
+         Row(doc_id=3, g="c", text="totally different words here now " * 8)]
+    )
+    sk = bottomk_sketches(docs, "g", "text", id_col="doc_id", k=16)
+    got = {r.g: r for r in sk.collect()}
+    assert got["a"].sketch == got["b"].sketch
+    assert got["a"].sketch == sorted(got["a"].sketch)
+    assert len(got["a"].sketch) <= 16
+    pairs = {
+        (r.g_a, r.g_b): r
+        for r in sketch_overlap_pairs(sk, "g", k=16).collect()
+    }
+    assert pairs[("a", "b")].jaccard_est == 1.0
+    assert pairs[("a", "c")].jaccard_est < 0.5
+    assert pairs[("a", "b")].sample_size == len(got["a"].sketch)
+
+
+def test_bottomk_sketch_caps_at_k(spark):
+    long_text = " ".join(f"tok{i}" for i in range(500))
+    docs = spark.createDataFrame([Row(doc_id=1, g="a", text=long_text)])
+    got = bottomk_sketches(docs, "g", "text", id_col="doc_id", k=8).collect()[0]
+    assert len(got.sketch) == 8
+    assert got.n_distinct == 498  # 500 tokens -> 498 word-3-grams
+
+
+def test_count_min_guarantee_and_mergeability(spark, sf_dir):
+    """CMS one-sided guarantee on real data (est >= truth for every
+    probed heavy hitter) and the property that makes it the streaming
+    structure: the sketch of a union is the cell-wise sum of the
+    parts' sketches."""
+    from dissertation_data_pipeline_spark.operators import dedup_ext as dx
+    from dissertation_data_pipeline_spark.operators.sketches import (
+        count_min_heavy_hitters,
+    )
+    from dissertation_data_pipeline_spark.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    out = count_min_heavy_hitters(docs).collect()
+    assert len(out) == 10
+    assert all(r.est_cnt >= r.true_cnt for r in out)
+
+    # mergeability: split the corpus, build each half's counter matrix
+    # with the same bucket fns, and check cell-wise sums reproduce the
+    # full-corpus matrix
+    def matrix(df):
+        toks = df.select(F.explode(dx.tokens("text")).alias("tok")).filter(
+            F.length("tok") > 0
+        )
+        cells = toks.select(
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(d).alias("d"),
+                            F.conv(
+                                F.substring(
+                                    F.md5(F.concat(F.lit(f"{d}:"), F.col("tok"))),
+                                    1,
+                                    2,
+                                ),
+                                16,
+                                10,
+                            ).cast("int").alias("b"),
+                        )
+                        for d in range(4)
+                    ]
+                )
+            ).alias("_db")
+        )
+        rows = (
+            cells.groupBy("_db.d", "_db.b").count().collect()
+        )
+        return {(r.d, r.b): r["count"] for r in rows}
+
+    full = matrix(docs)
+    a = matrix(docs.filter(F.col("doc_id") % 2 == 0))
+    b = matrix(docs.filter(F.col("doc_id") % 2 == 1))
+    merged = dict(a)
+    for k, v in b.items():
+        merged[k] = merged.get(k, 0) + v
+    assert merged == full
+
+
+def _py_rho(hexstr: str) -> int:
+    """Reference rho: 1 + leading zero bits of the 48-bit tail."""
+    tail = hexstr[2:14]
+    v = int(tail, 16)
+    if v == 0:
+        return 49
+    return 48 - v.bit_length() + 1
+
+
+def test_hll_rho_matches_bitwise_reference(spark):
+    """The string-ops rho expression equals the arithmetic definition
+    (1 + leading-zero bits) for tokens covering every nibble class."""
+    import hashlib
+
+    from dissertation_data_pipeline_spark.operators.sketches import _hll_rho
+
+    toks = [f"tok{i}" for i in range(200)]
+    df = spark.createDataFrame([Row(tok=t) for t in toks])
+    out = {
+        r.tok: r.rho
+        for r in df.select(
+            "tok", _hll_rho(F.substring(F.md5("tok"), 3, 12)).alias("rho")
+        ).collect()
+    }
+    for t in toks:
+        h = hashlib.md5(t.encode()).hexdigest()
+        assert out[t] == _py_rho(h), (t, h)
+
+
+def test_hll_estimate_accuracy_and_exactness_columns(spark, sf_dir):
+    """HLL-256 typical error is 1.04/sqrt(256) ~ 6.5%; assert every
+    per-source estimate lands within 4 sigma (26%) of the exact count
+    it is reported beside."""
+    from dissertation_data_pipeline_spark.operators.sketches import (
+        hll_distinct_by_group,
+    )
+    from dissertation_data_pipeline_spark.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    rows = hll_distinct_by_group(docs, "source").collect()
+    assert rows
+    for r in rows:
+        assert r.n_exact > 0
+        assert abs(r.hll_est - r.n_exact) / r.n_exact < 0.26, r
+
+
+def test_hll_registers_merge_by_cellwise_max(spark, sf_dir):
+    """The property that makes HLL the distributed structure: the
+    union's register vector is the cell-wise max of the parts'."""
+    from dissertation_data_pipeline_spark.operators import dedup_ext as dx
+    from dissertation_data_pipeline_spark.operators.sketches import _hll_rho
+    from dissertation_data_pipeline_spark.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+
+    def registers(df):
+        toks = (
+            df.select(F.explode(dx.tokens("text")).alias("tok"))
+            .filter(F.length("tok") > 0)
+            .distinct()
+        )
+        h = F.md5(F.col("tok"))
+        rows = (
+            toks.select(
+                F.conv(F.substring(h, 1, 2), 16, 10).cast("int").alias("j"),
+                _hll_rho(F.substring(h, 3, 12)).alias("rho"),
+            )
+            .groupBy("j")
+            .agg(F.max("rho").alias("r"))
+            .collect()
+        )
+        return {r.j: r.r for r in rows}
+
+    full = registers(docs)
+    a = registers(docs.filter(F.col("doc_id") % 2 == 0))
+    b = registers(docs.filter(F.col("doc_id") % 2 == 1))
+    merged = dict(a)
+    for j, r in b.items():
+        merged[j] = max(merged.get(j, 0), r)
+    assert merged == full
+
+
+# --- grouped-agg pandas UDAF -----------------------------------------------
+
+def test_udaf_label_medians_exact(spark):
+    rows = [
+        Row(vec_id=1, label=0, embedding=[1.0, 10.0]),
+        Row(vec_id=2, label=0, embedding=[3.0, 30.0]),
+        Row(vec_id=3, label=0, embedding=[2.0, -20.0]),
+        Row(vec_id=4, label=1, embedding=[5.0, 7.0]),
+        Row(vec_id=5, label=1, embedding=[9.0, 3.0]),
+    ]
+    df = spark.createDataFrame(rows)
+    got = {
+        (r.label, r.dim): r.med
+        for r in label_dim_medians(df).collect()
+    }
+    assert got[(0, 1)] == 2.0 and got[(0, 2)] == 10.0  # odd count: middle
+    assert got[(1, 1)] == 7.0 and got[(1, 2)] == 5.0  # even count: midpair avg

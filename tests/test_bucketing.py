@@ -8,6 +8,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from dissertation_data_pipeline_spark.session import plan_text
 from dissertation_data_pipeline_spark.sources.bucketing import (
     read_bucketed,
     write_bucketed,
@@ -15,12 +16,6 @@ from dissertation_data_pipeline_spark.sources.bucketing import (
 from dissertation_data_pipeline_spark.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def _exchange_nodes(plan: str) -> list[str]:
@@ -55,7 +50,7 @@ def test_bucketed_join_plans_no_exchange(spark, bucketed):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         j = li.join(o, li.l_orderkey == o.o_orderkey)
-        assert _exchange_nodes(_plan(j)) == [], _plan(j)
+        assert _exchange_nodes(plan_text(j)) == [], plan_text(j)
     finally:
         spark.conf.set(
             "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
@@ -82,7 +77,7 @@ def test_bucketed_join_matches_shuffled_join(spark, bucketed):
 def test_bucketed_groupby_on_bucket_key_plans_no_exchange(spark, bucketed):
     li, _ = bucketed
     agg = li.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("n"))
-    assert _exchange_nodes(_plan(agg)) == [], _plan(agg)
+    assert _exchange_nodes(plan_text(agg)) == [], plan_text(agg)
 
 
 def test_partitioned_write_prunes_partitions(spark, tmp_path_factory):
@@ -94,6 +89,6 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path_factory):
     e = load_table(spark, SF_DIR, "events")
     e.write.mode("overwrite").partitionBy("event_type").parquet(base)
     df = spark.read.parquet(base).filter(F.col("event_type") == "click")
-    plan = _plan(df)
+    plan = plan_text(df)
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "event_type" in m.group(1), plan

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from dissertation_data_pipeline_spark.operators import dedup_ext as dx
 
 
@@ -392,3 +394,53 @@ def test_auto_n_blocks_threshold(spark, sf_dir):
     # parquet-scan path: exact matched-file bytes (the gate-query shape)
     docs = load_table(spark, sf_dir, "documents")
     assert dx._auto_n_blocks(docs, 3, 48) == 4  # ~60 KB at sf0.01
+
+
+# --- chunk-level boilerplate removal ---------------------------------------
+
+def test_chunk_dedup_removes_cross_doc_chunks_only(spark, sf_dir):
+    from dissertation_data_pipeline_spark.plans.registry import QUERIES
+
+    rows = {
+        r["doc_id"]: r
+        for r in QUERIES["ext_chunk_dedup_clean"]
+        .fn(spark, sf_dir)
+        .collect()
+    }
+    # every doc fully accounted for; cleaned text length consistent
+    for r in rows.values():
+        assert 0 <= r["n_kept"] <= r["n_chunks"]
+        if r["n_kept"] == 0:
+            assert r["cleaned"] == ""
+        else:
+            # kept chunks reassemble to at most the original token count
+            assert len(r["cleaned"].split(" ")) <= r["n_chunks"] * 8
+
+
+def test_chunk_dedup_tiny_corpus(spark):
+    # doc 1 and 2 share their first 8 tokens exactly; doc 3 is unique
+    shared = "a b c d e f g h"
+    df = spark.createDataFrame(
+        [
+            (1, shared + " u1 u2 u3 u4 u5 u6 u7 u8"),
+            (2, shared + " v1 v2 v3 v4 v5 v6 v7 v8"),
+            (3, "w1 w2 w3 w4 w5 w6 w7 w8"),
+        ],
+        "doc_id long, text string",
+    )
+    toks = F.split(F.col("text"), " ")
+    n = F.ceil(F.size(toks) / F.lit(8.0)).cast("int")
+    chunks = F.transform(
+        F.sequence(F.lit(0), n - 1),
+        lambda i: F.array_join(F.slice(toks, i * 8 + 1, 8), " "),
+    )
+    ch = df.select("doc_id", F.posexplode(chunks).alias("pos", "chunk"))
+    freq = ch.groupBy("chunk").agg(F.countDistinct("doc_id").alias("nd"))
+    kept = (
+        ch.join(freq, "chunk")
+        .filter(F.col("nd") == 1)
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_kept"))
+    )
+    got = {r["doc_id"]: r["n_kept"] for r in kept.collect()}
+    assert got == {1: 1, 2: 1, 3: 1}  # each doc keeps only its unique chunk

@@ -201,3 +201,42 @@ def test_matched_keywords_preserves_original_casing(spark):
         matched_keywords("t", ["School Shooting", "Firearm"]).alias("m")
     ).collect()[0].m
     assert list(got) == ["School Shooting"]  # matched, original case kept
+
+
+# --- URL canonicalization --------------------------------------------------
+
+def test_url_canonicalize_rules(spark):
+    """Each canonicalization rule, pinned on handwritten URLs."""
+    from dissertation_data_pipeline_spark.functions import urls as fu
+
+    rows = [
+        ("HTTP://WWW.Ex.COM:80/P/1?utm_source=n&b=2&a=1#f",
+         "http://www.ex.com/P/1?a=1&b=2", "www.ex.com", "ex.com"),
+        ("https://Ex.com:443/a/b?z=9&a=1&utm_campaign=x",
+         "https://ex.com/a/b?a=1&z=9", "ex.com", "ex.com"),
+        # non-default port kept; tracking-only query drops entirely
+        ("https://sub.ex.co:8443/x?fbclid=abc",
+         "https://sub.ex.co:8443/x", "sub.ex.co:8443", "ex.co"),
+        # empty path -> '/'
+        ("http://ex.org", "http://ex.org/", "ex.org", "ex.org"),
+        # non-http scheme: port rules don't apply, ref param dropped
+        ("ftp://F.Ex.net:80/data?ref=h&q=1",
+         "ftp://f.ex.net:80/data?q=1", "f.ex.net:80", "ex.net"),
+        # not a URL -> NULL canon
+        ("not a url 7", None, "", ""),
+        # case preserved in path/query
+        ("https://A.B/Path?Q=Vv", "https://a.b/Path?Q=Vv", "a.b", "a.b"),
+    ]
+    df = spark.createDataFrame([(r[0],) for r in rows], "raw string")
+    got = df.select(
+        "raw",
+        fu.canonicalize_url("raw").alias("c"),
+        fu.url_host("raw").alias("h"),
+        fu.url_registered_domain("raw").alias("d"),
+    ).collect()
+    by_raw = {r["raw"]: r for r in got}
+    for raw, canon, host, dom in rows:
+        r = by_raw[raw]
+        assert r["c"] == canon, (raw, r["c"])
+        assert r["h"] == host, (raw, r["h"])
+        assert r["d"] == dom, (raw, r["d"])

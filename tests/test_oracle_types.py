@@ -13,11 +13,10 @@ HUGEINT/UHUGEINT output column fails the suite.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
+from dissertation_data_pipeline_spark.canon import oracle_connection
 from dissertation_data_pipeline_spark.plans.registry import QUERIES
-from dissertation_data_pipeline_spark.tables import TABLE_NAMES
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -41,11 +40,7 @@ ORACLED = [n for n, q in QUERIES.items() if q.sql is not None]
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = oracle_connection(SF_DIR)
     yield con
     con.close()
 

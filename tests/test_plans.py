@@ -24,15 +24,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from dissertation_data_pipeline_spark.plans import QUERIES
+from dissertation_data_pipeline_spark.session import plan_text
 from dissertation_data_pipeline_spark.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def plan_str(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 @pytest.fixture(scope="module")
@@ -44,7 +39,7 @@ def spark():
 
 def test_filter_pushes_to_parquet_scan(spark):
     df = QUERIES["p4_filter_project"].fn(spark, SF_DIR)
-    plan = plan_str(df)
+    plan = plan_text(df)
     assert "PushedFilters:" in plan
     # the quantity/length-style predicate must appear in the scan node,
     # not only in a post-scan Filter
@@ -55,7 +50,7 @@ def test_filter_pushes_to_parquet_scan(spark):
 def test_projection_prunes_scan_schema(spark):
     o = load_table(spark, SF_DIR, "orders")
     df = o.select("o_orderkey", "o_orderstatus")
-    plan = plan_str(df)
+    plan = plan_text(df)
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m, plan
     read_cols = {c.split(":")[0] for c in m.group(1).split(",") if c}
@@ -64,13 +59,13 @@ def test_projection_prunes_scan_schema(spark):
 
 def test_flagship_pushes_quantity_filter(spark):
     df = QUERIES["flagship_corpus_rollup"].fn(spark, SF_DIR)
-    plan = plan_str(df)
+    plan = plan_text(df)
     assert "GreaterThan(l_quantity,5" in plan, "l_quantity>5 not pushed to scan"
 
 
 def test_dim_join_broadcasts(spark):
     df = QUERIES["j2_dim_rollup"].fn(spark, SF_DIR)
-    plan = plan_str(df)
+    plan = plan_text(df)
     assert "BroadcastHashJoin" in plan, f"dim join did not broadcast:\n{plan}"
     # and the dim side, not the fact side, is the broadcast exchange
     assert "BroadcastExchange" in plan
@@ -78,7 +73,7 @@ def test_dim_join_broadcasts(spark):
 
 def test_tpch_q5_broadcasts_small_dims(spark):
     df = QUERIES["tpch_q5_region_volume"].fn(spark, SF_DIR)
-    plan = plan_str(df)
+    plan = plan_text(df)
     assert "BroadcastHashJoin" in plan
 
 
@@ -88,7 +83,7 @@ def test_tpch_q8_snowflake_broadcasts_every_dim(spark):
     only shuffle join is lineitem-orders — at 100 TB that plan touches
     the two fact tables exactly once each."""
     df = QUERIES["tpch_q8_market_share"].fn(spark, SF_DIR)
-    plan = plan_str(df)
+    plan = plan_text(df)
     n_bhj = plan.count("BroadcastHashJoin")
     assert n_bhj >= 5, f"expected >=5 broadcast joins in Q8, got {n_bhj}"
     n_smj = plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin")
@@ -101,7 +96,7 @@ def test_tpch_q16_excludes_suppliers_without_shuffle(spark):
     """The NOT-IN supplier exclusion must plan as a broadcast anti-join,
     not a shuffled one — the exclusion list is dim-sized."""
     df = QUERIES["tpch_q16_part_supplier_variety"].fn(spark, SF_DIR)
-    plan = plan_str(df)
+    plan = plan_text(df)
     assert re.search(r"BroadcastHashJoin .*LeftAnti", plan), (
         "broadcast anti-join missing:\n" + plan[:2000]
     )
@@ -111,7 +106,7 @@ def test_pair_join_repartitions_by_bucket(spark):
     """LSH candidate generation must shuffle by band bucket — the skew
     and parallelism strategy — rather than broadcast-probe one side."""
     df = QUERIES["ext_minhash_lsh_pairs"].fn(spark, SF_DIR)
-    plan = plan_str(df)
+    plan = plan_text(df)
     assert re.search(r"hashpartitioning\([^)]*band", plan), (
         "band-bucket repartition missing:\n" + plan[:2000]
     )
@@ -205,7 +200,7 @@ def test_no_cartesian_products_in_registry(spark):
         if name in allowed:
             continue
         df = q.fn(spark, SF_DIR)
-        plan = plan_str(df)
+        plan = plan_text(df)
         if "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan:
             offenders[name] = True
     assert not offenders, f"cartesian/nested-loop joins in: {sorted(offenders)}"
@@ -215,7 +210,7 @@ def test_chunking_is_scan_shaped(spark):
     # chunk extraction must stay shuffle-free: generate + filter +
     # project over the scan, no Exchange anywhere
     df = QUERIES["ext_chunk_documents"].fn(spark, SF_DIR)
-    plan = plan_str(df)
+    plan = plan_text(df)
     assert "Exchange" not in plan, plan
     assert "Generate" in plan
 
@@ -225,7 +220,7 @@ def test_dup_ngram_fraction_has_no_pair_join(spark):
     # re-aggregate. Any cartesian/nested-loop node means a pairwise
     # plan snuck in.
     df = QUERIES["ext_dup_ngram_fraction"].fn(spark, SF_DIR)
-    plan = plan_str(df)
+    plan = plan_text(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -243,7 +238,7 @@ def test_shuffle_budget():
 
     sys.path.insert(0, "tools")
     from plan_stats import SF_DIR as PS_SF  # noqa: F401
-    from plan_stats import count_exchanges, plan_text
+    from plan_stats import count_exchanges
 
     from dissertation_data_pipeline_spark.plans.registry import QUERIES
     from dissertation_data_pipeline_spark.session import get_spark
@@ -287,7 +282,7 @@ def test_runtime_bloom_filter_injects(spark):
             .groupBy("o_orderpriority")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        assert "bloom_filter_agg" in plan_str(j).lower()
+        assert "bloom_filter_agg" in plan_text(j).lower()
     finally:
         for k, v in saved.items():
             if v is None:
@@ -408,6 +403,36 @@ def test_package_calls_no_job_starting_catalog_listing():
         and node.func.attr in banned
     ]
     assert offenders == []
+
+
+def test_one_plan_printer():
+    """``session.plan_text`` is the one caller of ``PythonSQLUtils``'s
+    plan printer in the package, ``tools/``, ``tests/`` and bench.py;
+    every plan dump and plan assertion reads the text it returns."""
+    import ast
+
+    printer = "explain" + "String"  # in two parts, so a text search finds one caller
+    root = Path(__file__).resolve().parents[1]
+    files = [
+        *sorted((root / "dissertation_data_pipeline_spark").rglob("*.py")),
+        *sorted((root / "tools").glob("*.py")),
+        *sorted((root / "tests").rglob("*.py")),
+        root / "bench.py",
+    ]
+    callers = {
+        f.relative_to(root).as_posix()
+        for f in files
+        for node in ast.walk(ast.parse(f.read_text(), str(f)))
+        if isinstance(node, ast.Attribute) and node.attr == printer
+    }
+    assert callers == {"dissertation_data_pipeline_spark/session.py"}
+
+
+def test_tests_are_grouped_by_domain():
+    """No test file is named after the round that added it; their tests
+    live in the domain file of the operator they cover."""
+    tests = Path(__file__).resolve().parent
+    assert sorted(tests.glob("test_wave*.py")) == []
 
 
 # Where each query of a deleted round-named module now lives (DESIGN.md

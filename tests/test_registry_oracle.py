@@ -19,12 +19,10 @@ builds the queries it finds unrecorded (e.g. when run on its own).
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-from dissertation_data_pipeline_spark.canon import table_fingerprint
+from dissertation_data_pipeline_spark.canon import oracle_connection, table_fingerprint
 from dissertation_data_pipeline_spark.plans.registry import QUERIES
-from dissertation_data_pipeline_spark.tables import TABLE_NAMES
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -38,11 +36,7 @@ SAFE = {
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = oracle_connection(SF_DIR)
     yield con
     con.close()
 

@@ -1,5 +1,6 @@
-"""Tests for io readers/sinks, state tables, mockable REST enrichment,
-text-extraction UDFs, and multimodal plumbing."""
+"""Tests for io readers/sinks, parquet layout (Z-order, compaction),
+state tables, mockable REST enrichment, text-extraction UDFs, and
+multimodal plumbing."""
 
 from __future__ import annotations
 
@@ -19,6 +20,12 @@ from dissertation_data_pipeline_spark.operators import text_udf
 from dissertation_data_pipeline_spark.schemas import BILLS_RAW
 from dissertation_data_pipeline_spark.sources import io as sio
 from dissertation_data_pipeline_spark.sources import state as sstate
+from dissertation_data_pipeline_spark.sources.layout import (
+    file_minmax_stats,
+    skipped_fraction,
+    write_zordered,
+    zorder_value,
+)
 from dissertation_data_pipeline_spark.sources.rest import enrich_with_cache
 
 
@@ -711,3 +718,81 @@ def test_read_col_widths_no_worksheet_raises_value_error(tmpd):
         z.writestr("xl/workbook.xml", "<workbook/>")
     with pytest.raises(ValueError, match="no worksheet part"):
         xlsx.read_col_widths(p)
+
+
+# --- Z-order layout and compaction -----------------------------------------
+
+def test_zorder_value_interleaves_bits(spark):
+    df = spark.range(1).select(
+        zorder_value(F.lit(0b1010), F.lit(0b0110), 4).alias("z")
+    )
+    # a bits -> odd positions, b bits -> even: a=1010, b=0110
+    # z = b0*1 + a0*2 + b1*4 + a1*8 + ... = interleave(a,b)
+    a, b = 0b1010, 0b0110
+    expect = sum(((a >> i) & 1) << (2 * i + 1) for i in range(4)) | sum(
+        ((b >> i) & 1) << (2 * i) for i in range(4)
+    )
+    assert df.collect()[0]["z"] == expect
+
+
+def test_zorder_layout_skips_files_in_both_dims(spark, tmp_path):
+    # 64x64 grid of (a, b) keys, one row each — worst case for 1-D sort
+    grid = (
+        spark.range(64 * 64)
+        .select(
+            (F.col("id") % 64).alias("a"),
+            (F.col("id") / 64).cast("long").alias("b"),
+            F.col("id").alias("payload"),
+        )
+    )
+    zpath = str(tmp_path / "zorder")
+    apath = str(tmp_path / "asort")
+    write_zordered(grid, zpath, "a", "b", bits=6, n_files=16)
+    (
+        grid.repartitionByRange(16, "a")
+        .sortWithinPartitions("a")
+        .write.mode("overwrite")
+        .parquet(apath)
+    )
+    zstats = file_minmax_stats(zpath, ["a", "b"])
+    astats = file_minmax_stats(apath, ["a", "b"])
+    assert len(zstats) == 16
+    # filter on a: both layouts skip
+    assert skipped_fraction(zstats, "a", 0, 7) >= 0.5
+    assert skipped_fraction(astats, "a", 0, 7) >= 0.5
+    # filter on b: ONLY the z-order layout skips — the point of the curve
+    z_b = skipped_fraction(zstats, "b", 0, 7)
+    a_b = skipped_fraction(astats, "b", 0, 7)
+    assert z_b >= 0.5
+    assert a_b == 0.0
+
+
+def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
+    from dissertation_data_pipeline_spark.sources.layout import compact_parquet
+
+    p = str(tmp_path / "frag")
+    spark.range(50_000).selectExpr(
+        "id", "id % 97 AS k", "repeat('x', 64) AS pad"
+    ).repartition(64).write.parquet(p)
+    import glob
+
+    assert len(glob.glob(p + "/*.parquet")) == 64
+    before = spark.read.parquet(p).orderBy("id").collect()
+
+    n = compact_parquet(spark, p, target_bytes=16 * 1024 * 1024)
+    files = glob.glob(p + "/*.parquet")
+    assert len(files) == n and n < 8  # tiny table -> a handful of files
+    after = spark.read.parquet(p).orderBy("id").collect()
+    assert after == before  # byte-identical contents
+
+    # sorted compaction restores clustering: per-file key ranges disjoint
+    from dissertation_data_pipeline_spark.sources.layout import (
+        file_minmax_stats,
+    )
+
+    compact_parquet(spark, p, target_bytes=4 * 1024 * 1024, sort_cols=["k"])
+    stats = sorted(
+        file_minmax_stats(p, ["k"]), key=lambda s: (s["k_min"], s["k_max"])
+    )
+    for lo, hi in zip(stats, stats[1:]):
+        assert lo["k_max"] <= hi["k_min"]

@@ -1,18 +1,22 @@
-"""Temporal operators: as-of join, interval join, rollup — semantics +
-physical-plan contracts (union-tag as-of must plan ZERO join nodes)."""
+"""Temporal operators: as-of join, interval join, rollup, late-data
+report — semantics + physical-plan contracts (union-tag as-of must plan
+ZERO join nodes)."""
 
 from __future__ import annotations
 
 import datetime as dt
 
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from dissertation_data_pipeline_spark.operators.temporal import (
     asof_join,
     interval_join,
+    late_event_report,
     time_rollup,
 )
 from dissertation_data_pipeline_spark.plans.registry import QUERIES
+from dissertation_data_pipeline_spark.session import plan_text
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -71,9 +75,7 @@ def test_asof_tolerance_nulls_stale_matches(spark):
 def test_asof_plans_zero_join_nodes(spark):
     """The whole point of the union-tag shape: one exchange, no join."""
     df = QUERIES["ext_asof_join"].fn(spark, SF_DIR)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = plan_text(df)
     assert "Join" not in plan, plan
     # one node-details header per physical node: union shuffle + pre-agg
     import re
@@ -434,3 +436,31 @@ def test_connected_components_raises_on_max_iter_exhaustion(spark):
         connected_components(
             pairs, max_iter=1, small_edge_threshold=0
         )
+
+
+# --- late-data report ------------------------------------------------------
+
+def test_late_event_report_flags_out_of_order(spark):
+    # arrival order (aid) vs event time (sec): event 3 arrives after the
+    # watermark from event 2 has passed it by > 10s allowed lateness.
+    rows = [
+        Row(aid=1, k=1, sec=100, g="a"),
+        Row(aid=2, k=1, sec=200, g="a"),
+        Row(aid=3, k=1, sec=150, g="a"),  # late: wm=200-10=190 > 150
+        Row(aid=4, k=1, sec=185, g="b"),  # not late: 185 >= 190? NO -> late
+        Row(aid=5, k=2, sec=50, g="a"),   # first arrival for key 2: no wm
+    ]
+    df = spark.createDataFrame(rows).select(
+        "aid", "k", F.timestamp_seconds("sec").alias("ts"), "g"
+    )
+    rep = {
+        r.g: r
+        for r in late_event_report(
+            df, key="k", ts_col="ts", arrival_col="aid",
+            allowed_lateness_s=10, group_col="g",
+        ).collect()
+    }
+    assert rep["a"].n_events == 4 and rep["a"].n_late == 1
+    assert rep["a"].max_lateness_us == (190 - 150) * 1_000_000
+    assert rep["b"].n_events == 1 and rep["b"].n_late == 1
+    assert rep["b"].max_lateness_us == (190 - 185) * 1_000_000

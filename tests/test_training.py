@@ -8,12 +8,24 @@ and the physical-plan contracts (codegen path, no Python UDFs).
 
 from __future__ import annotations
 
+from collections import Counter
+
+import numpy as np
+import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from dissertation_data_pipeline_spark.operators.bpe import (
+    EOW,
+    bpe_segment,
+    bpe_train,
+    bpe_train_batched,
+)
 from dissertation_data_pipeline_spark.operators.training import (
     domain_resample,
     gopher_quality_gate,
     pack_sequences,
+    pmi_collocations,
     repetition_profile,
     scrub_text,
     stratified_sample,
@@ -294,3 +306,290 @@ def test_ccnet_buckets_semantics(spark, sf_dir):
             {1: "head", 2: "middle", 3: "tail"}[r.bucket] == r.bucket_name
             for r in rows
         )
+
+
+# --- PMI collocations ------------------------------------------------------
+
+def test_pmi_prefers_exclusive_pair(spark):
+    # "tick tock" always together (exclusive) vs common filler pairs:
+    # PMI must rank the exclusive pair first.
+    docs = spark.createDataFrame(
+        [Row(doc_id=i, text="tick tock " + "the of " * 8) for i in range(5)]
+    )
+    out = pmi_collocations(docs, min_count=5, top_n=3).collect()
+    assert (out[0].w1, out[0].w2) == ("tick", "tock")
+    assert out[0].c_ab == 5
+    assert out[0].pmi > 0
+
+
+def test_pmi_min_count_prunes(spark):
+    docs = spark.createDataFrame(
+        [Row(doc_id=1, text="rare pair"), Row(doc_id=2, text="x y " * 10)]
+    )
+    got = {(r.w1, r.w2) for r in pmi_collocations(docs, min_count=5, top_n=10).collect()}
+    assert ("rare", "pair") not in got
+
+
+# --- sharding, hashed classifier, temperature mixture ----------------------
+
+def test_shard_assignment_deterministic_and_balanced(spark, sf_dir):
+    """Sharding is a pure function of doc_id (identical result under
+    a different partitioning) and md5-uniform (every shard populated;
+    token budgets within a loose band of the mean at 5k docs)."""
+    from dissertation_data_pipeline_spark.operators.training import (
+        shard_assignment,
+    )
+    from dissertation_data_pipeline_spark.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    a = {r.shard: (r.n_docs, r.total_tokens, r.max_doc_tokens)
+         for r in shard_assignment(docs).collect()}
+    b = {r.shard: (r.n_docs, r.total_tokens, r.max_doc_tokens)
+         for r in shard_assignment(docs.repartition(7)).collect()}
+    assert a == b
+    assert set(a) == set(range(16))
+    n_total = docs.count()
+    assert sum(v[0] for v in a.values()) == n_total
+    mean_docs = n_total / 16
+    for shard, (n_docs, _, _) in a.items():
+        assert abs(n_docs - mean_docs) / mean_docs < 0.5, (shard, n_docs)
+
+
+def test_hashed_classifier_score_exact_and_partition_invariant(spark):
+    """Integer milli-weight scoring is bit-exact: a hand-computed md5
+    score on a 2-doc frame matches, and any repartitioning produces the
+    identical result (the portability claim its oracle states)."""
+    import hashlib
+
+    from dissertation_data_pipeline_spark.operators.training import (
+        hashed_classifier_score,
+    )
+
+    def h32(s: str) -> int:
+        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta alpha"), (2, "gamma")], ["doc_id", "text"]
+    )
+
+    def expected(text: str) -> tuple[int, int]:
+        toks = text.split(" ")
+        score = sum(
+            (h32(f"{h32(t) % 4096}:w") % 2001) - 1000 for t in toks
+        )
+        return len(toks), score
+
+    got = {
+        r.doc_id: (r.n_tokens, r.score_milli, r.keep)
+        for r in hashed_classifier_score(docs).collect()
+    }
+    for doc_id, text in [(1, "alpha beta alpha"), (2, "gamma")]:
+        n, s = expected(text)
+        assert got[doc_id] == (n, s, s > 0), (doc_id, got[doc_id], (n, s))
+
+    re_got = {
+        r.doc_id: (r.n_tokens, r.score_milli, r.keep)
+        for r in hashed_classifier_score(docs.repartition(5)).collect()
+    }
+    assert re_got == got
+
+
+def test_hashed_classifier_broadcasts_weights(spark, sf_dir):
+    """The weight table must enter as a broadcast join — a shuffle on
+    the exploded token stream would be the 100 TB killer."""
+    from dissertation_data_pipeline_spark.operators.training import (
+        hashed_classifier_score,
+    )
+    from dissertation_data_pipeline_spark.tables import load_table
+
+    plan = hashed_classifier_score(
+        load_table(spark, sf_dir, "documents")
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+
+
+def test_temperature_mixture_flattens_the_head(spark, sf_dir):
+    """Temperature alpha=0.5 moves mass from the head language to the
+    tail: head temp_share < natural_share, tail temp_share >
+    natural_share; shares each sum to ~1 and integer budgets sum to
+    ~the requested budget (rounding slack only)."""
+    from dissertation_data_pipeline_spark.operators.training import (
+        temperature_mixture,
+    )
+    from dissertation_data_pipeline_spark.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    rows = temperature_mixture(docs, "lang", budget=100_000).collect()
+    by_lang = {r.lang: r for r in rows}
+    head = max(rows, key=lambda r: r.n_docs)
+    tail = min(rows, key=lambda r: r.n_docs)
+    assert head.temp_share < head.natural_share
+    assert tail.temp_share > tail.natural_share
+    assert abs(sum(r.natural_share for r in rows) - 1.0) < 1e-4
+    assert abs(sum(r.temp_share for r in rows) - 1.0) < 1e-4
+    assert abs(sum(r.target_docs for r in rows) - 100_000) <= len(rows)
+    # deterministic under repartition
+    again = {
+        r.lang: r for r in temperature_mixture(
+            docs.repartition(9), "lang", budget=100_000
+        ).collect()
+    }
+    assert {k: tuple(v) for k, v in again.items()} == {
+        k: tuple(v) for k, v in by_lang.items()
+    }
+
+
+# --- BPE training: parity with an independent reference (Sennrich 2016, sequential) ---
+
+def _ref_word_freqs(texts):
+    c = Counter()
+    for t in texts:
+        for w in t.lower().strip().split():
+            if w:
+                c[w] += 1
+    return c
+
+
+def _ref_pair_counts(word_syms, freqs):
+    pc = Counter()
+    for w, syms in word_syms.items():
+        for i in range(len(syms) - 1):
+            pc[(syms[i], syms[i + 1])] += freqs[w]
+    return pc
+
+
+def _ref_merge_word(syms, a, b):
+    out = []
+    for s in syms:
+        if out and out[-1] == a and s == b:
+            out[-1] = a + b
+        else:
+            out.append(s)
+    return out
+
+
+def _ref_bpe_train(texts, num_merges, min_pair_count=2):
+    freqs = _ref_word_freqs(texts)
+    word_syms = {w: list(w) + [EOW] for w in freqs}
+    merges = []
+    for _ in range(num_merges):
+        pc = _ref_pair_counts(word_syms, freqs)
+        if not pc:
+            break
+        (a, b), cnt = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
+        if cnt < min_pair_count:
+            break
+        merges.append((a, b, cnt))
+        word_syms = {w: _ref_merge_word(s, a, b) for w, s in word_syms.items()}
+    return merges, word_syms
+
+
+TEXTS = [
+    "low lower lowest low low",
+    "new newer newest new newer",
+    "wide wider widest new low",
+    "the lowest and the newest",
+]
+
+
+def test_bpe_train_matches_reference(spark):
+    docs = spark.createDataFrame(
+        [Row(doc_id=i, text=t) for i, t in enumerate(TEXTS)]
+    )
+    merges, words = bpe_train(docs, num_merges=12)
+    ref_merges, ref_syms = _ref_bpe_train(TEXTS, 12)
+    assert merges == ref_merges
+    got = {r.word: list(r.syms) for r in words.collect()}
+    assert got == ref_syms
+
+
+def test_bpe_segment_empty_doc_yields_no_tokens(spark):
+    # empty/whitespace-only docs must tokenize to ZERO tokens — the
+    # whitespace split's empty words are filtered before segmentation,
+    # matching the training path's length>0 rule (an unfiltered empty
+    # word would emit a phantom '</w>' and inflate token counts)
+    docs = spark.createDataFrame(
+        [Row(doc_id=1, text=""), Row(doc_id=2, text="   "), Row(doc_id=3, text="ab")]
+    )
+    got = {r.doc_id: list(r.bpe_tokens) for r in bpe_segment(docs, []).collect()}
+    assert got[1] == [] and got[2] == []
+    assert got[3] == ["a", "b", EOW]
+
+
+def test_bpe_train_early_stop(spark):
+    docs = spark.createDataFrame([Row(doc_id=1, text="a b c")])
+    # every word is a single char: pairs are (char, EOW) with count 1
+    merges, _ = bpe_train(docs, num_merges=10, min_pair_count=2)
+    assert merges == []
+
+
+def test_bpe_segment_applies_merges(spark):
+    docs = spark.createDataFrame([Row(doc_id=i, text=t) for i, t in enumerate(TEXTS)])
+    merges, _ = bpe_train(docs, num_merges=8)
+    seg = bpe_segment(docs, merges).select("doc_id", "bpe_tokens").collect()
+    ref_merges, ref_syms = _ref_bpe_train(TEXTS, 8)
+    for r in seg:
+        expect = []
+        for w in TEXTS[r.doc_id].lower().strip().split():
+            syms = list(w) + [EOW]
+            for a, b, _ in ref_merges:
+                syms = _ref_merge_word(syms, a, b)
+            expect.extend(syms)
+        assert list(r.bpe_tokens) == expect
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_bpe_train_randomized_parity(spark, seed):
+    rng = np.random.default_rng(seed)
+    vocab = ["ab", "abc", "bca", "aa", "cab", "bb", "abab", "ca"]
+    texts = [
+        " ".join(rng.choice(vocab, size=rng.integers(3, 9)))
+        for _ in range(12)
+    ]
+    docs = spark.createDataFrame([Row(doc_id=i, text=t) for i, t in enumerate(texts)])
+    merges, _ = bpe_train(docs, num_merges=6)
+    ref_merges, _ = _ref_bpe_train(texts, 6)
+    assert merges == ref_merges
+
+
+def test_bpe_batched_batch1_is_exact_sequential(spark):
+    """batch=1 must reproduce the sequential trainer exactly (same
+    argmax, same tiebreak) — the parity anchor for the batched path."""
+    docs = spark.createDataFrame(
+        [Row(doc_id=i, text=t) for i, t in enumerate(TEXTS)]
+    )
+    seq_merges, _ = bpe_train(docs, num_merges=10)
+    bat_merges, _, rounds = bpe_train_batched(docs, num_merges=10, batch=1)
+    assert bat_merges == seq_merges
+    assert rounds == len(seq_merges)
+
+
+def test_bpe_batched_reduces_rounds(spark):
+    """The whole point: ~batch-fold fewer driver round-trips, and each
+    round's accepted pairs are pairwise symbol-disjoint."""
+    docs = spark.createDataFrame(
+        [Row(doc_id=i, text=t) for i, t in enumerate(TEXTS)]
+    )
+    merges, words, rounds = bpe_train_batched(docs, num_merges=12, batch=4)
+    assert len(merges) == 12
+    assert rounds <= (12 + 3) // 4 + 2  # ~12/4 rounds, conflict slack
+    assert rounds < 12  # strictly fewer jobs than sequential
+    # final symbol table is consistent: every word re-joins to itself
+    for r in words.collect():
+        assert "".join(s for s in r.syms if s != EOW).replace(EOW, "") \
+            == r.word.replace(EOW, "")
+
+
+def test_bpe_batched_same_vocabulary_on_separated_corpus(spark):
+    """Well-separated frequencies over disjoint alphabets: batched BPE
+    learns the SAME merge set as sequential (order differs — sequential
+    cascades each word's (token, EOW) merge immediately; batching
+    defers it one round because every EOW pair shares the EOW symbol)
+    in strictly fewer driver round-trips."""
+    texts = ["ab"] * 40 + ["cd"] * 30 + ["ef"] * 20 + ["gh"] * 10
+    docs = spark.createDataFrame([Row(doc_id=0, text=" ".join(texts))])
+    seq_merges, _ = bpe_train(docs, num_merges=8)
+    bat_merges, _, rounds = bpe_train_batched(docs, num_merges=8, batch=8)
+    assert sorted(bat_merges) == sorted(seq_merges)
+    assert rounds < 8  # 5: chars round + one EOW merge per round

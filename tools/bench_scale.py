@@ -14,10 +14,19 @@ e.g.
     python tools/bench_scale.py BENCH_SCALE.json \
         /root/testdata/sf0.1 .localdata/sf1
 
-sf1 data comes from tools/gen_scale_data.py (same shape as the shipped
-testdata, 10x sf0.1; documented in BASELINE.md). Best-of-N (N=2) is
-used because run-to-run noise on this host is +-15-25%; a growth ratio
-read from best-of-N is robust for the >=2x calls that matter here.
+Each SF leg runs bench.py's warm-up and timed passes (``bench.warm_up``,
+``bench.run_passes``) and keeps each query's best pass. Best-of-N
+(N=2) is used because run-to-run noise on this host is +-15-25%; a
+growth ratio read from best-of-N is robust for the >=2x calls that
+matter here. A query that fails in any pass is reported on stderr by
+name, pass and phase and left out of its leg.
+
+Data beyond the shipped testdata comes from perfbench's generator
+(same ten tables and scaling laws; BASELINE.md), e.g. sf1, from the
+repo root:
+
+    python -c "import sys; sys.path.insert(0, 'perfbench'); import datagen; \
+datagen.stage(datagen.build_tables(1), '.localdata/sf1', None)"
 """
 
 from __future__ import annotations
@@ -25,7 +34,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 # The sf10 legs run ~2 GB of localCheckpoint blocks + shuffle state +
 # legitimate broadcast builds inside ONE local-mode JVM that is driver
@@ -38,8 +46,9 @@ os.environ.setdefault("SPARK_DRIVER_MEMORY", "12g")
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from dissertation_data_pipeline_spark.plans.registry import QUERIES  # noqa: E402
-from dissertation_data_pipeline_spark.session import drop_blocks, get_spark  # noqa: E402
+from dissertation_data_pipeline_spark.session import get_spark  # noqa: E402
 
 #: trend set — every scale-sensitive family, plus linear-scan controls
 TREND = [
@@ -124,44 +133,30 @@ def main() -> None:
     if only is not None:
         names = [n for n in names if n in only]
     # Warmup on the smallest shipped SF: JVM, codegen, Python workers.
-    for n in names:
-        try:
-            QUERIES[n].fn(spark, "/root/testdata/sf0.001").count()
-        except Exception:
-            pass
-
-    def clear_persisted() -> None:
-        # shared harness hygiene (session.drop_blocks): caches,
-        # localCheckpoint blocks, AND memory-sink temp views — the
-        # sinks hold their rows in the driver heap and were the
-        # round-8 "Not enough memory to build and broadcast" culprit.
-        drop_blocks(spark)
+    bench.warm_up(spark, names, "/root/testdata/sf0.001")
 
     result: dict[str, dict[str, float]] = {}
     for sf_dir in sf_dirs:
         tag = os.path.basename(sf_dir.rstrip("/"))
-        timings: dict[str, float] = {}
+        skipped = skip_at.get(tag, set())
         for n in names:
-            if n in skip_at.get(tag, ()):
+            if n in skipped:
                 print(f"{tag} {n}: skipped (quadratic yardstick)", flush=True)
-                continue
-            best = float("inf")
-            try:
-                for _ in range(REPS):
-                    clear_persisted()
-                    t0 = time.perf_counter()
-                    QUERIES[n].fn(spark, sf_dir).count()
-                    best = min(best, time.perf_counter() - t0)
-            except Exception as e:  # noqa: BLE001
-                # one failing query must not void the whole SF leg —
-                # record the failure visibly and keep measuring (the
-                # sf10 legs run for an hour; losing them to the first
-                # error made round-8's first refresh attempt silent)
-                print(f"{tag} {n}: ERROR {type(e).__name__}: {str(e)[:200]}",
-                      flush=True)
-                continue
-            timings[n] = round(best, 3)
-            print(f"{tag} {n}: {timings[n]}s", flush=True)
+        # a failing query is recorded by run_passes and left out; the
+        # rest of the leg is still measured (the sf10 legs run for an
+        # hour; losing them to the first error made round-8's first
+        # refresh attempt silent)
+        passes, _, _, failures = bench.run_passes(
+            spark, [n for n in names if n not in skipped], sf_dir, REPS
+        )
+        failed = {f["name"] for f in failures}
+        timings = {
+            n: min(p[n] for p in passes)
+            for n in passes[0]
+            if n not in failed
+        }
+        for n, t in timings.items():
+            print(f"{tag} {n}: {t}s", flush=True)
         result[tag] = timings
 
     extra = {}

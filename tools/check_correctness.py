@@ -38,7 +38,6 @@ import sys
 import time
 from decimal import Decimal
 
-import duckdb
 import numpy as np
 import pandas as pd
 
@@ -46,6 +45,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dissertation_data_pipeline_spark.canon import (  # noqa: E402
     canon_lines,
+    oracle_connection,
     table_fingerprint,
 )
 
@@ -113,13 +113,7 @@ def main():
     from dissertation_data_pipeline_spark.session import drop_blocks, get_spark
 
     spark = get_spark("correctness-check")
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = oracle_connection(SF_DIR)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

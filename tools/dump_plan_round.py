@@ -36,7 +36,7 @@ def main(argv: list[str]) -> None:
     rnd, tag, names = argv[0], argv[1], argv[2:]
 
     from dissertation_data_pipeline_spark.plans.registry import QUERIES
-    from dissertation_data_pipeline_spark.session import drop_blocks, get_spark
+    from dissertation_data_pipeline_spark.session import drop_blocks, get_spark, plan_text
 
     spark = get_spark(f"ddp-dump-plan-{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
@@ -49,9 +49,7 @@ def main(argv: list[str]) -> None:
             print(f"unknown query {name!r}")
             continue
         df = QUERIES[name].fn(spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = plan_text(df)
         path = os.path.join(outdir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(f"# {name} — {tag} (sf_dir={SF_DIR})\n\n")

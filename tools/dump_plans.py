@@ -224,7 +224,7 @@ MARKERS = [
 
 def main() -> None:
     from dissertation_data_pipeline_spark.plans import QUERIES
-    from dissertation_data_pipeline_spark.session import get_spark
+    from dissertation_data_pipeline_spark.session import get_spark, plan_text
 
     spark = get_spark("plan-audit")
     out = [
@@ -238,9 +238,7 @@ def main() -> None:
     ]
     for name, why in HEADLINERS.items():
         df = QUERIES[name].fn(spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = plan_text(df)
         # keep the operator tree; drop the verbose per-node detail dump
         tree = plan.split("\n\n")[0]
         hits = sorted({m for m in MARKERS if m in plan})

@@ -29,12 +29,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def plan_text(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def count_exchanges(plan: str) -> tuple[int, int]:
     shuffles = len(re.findall(r"\bExchange (hash|range|single)", plan, re.I))
     if shuffles == 0:
@@ -50,7 +44,7 @@ def count_exchanges(plan: str) -> tuple[int, int]:
 
 def main() -> None:
     from dissertation_data_pipeline_spark.plans.registry import QUERIES
-    from dissertation_data_pipeline_spark.session import get_spark
+    from dissertation_data_pipeline_spark.session import get_spark, plan_text
 
     spark = get_spark("ddp-plan-stats")
     spark.sparkContext.setLogLevel("ERROR")

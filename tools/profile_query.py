@@ -1,111 +1,91 @@
-"""Per-query profile: wall time vs where it went (jobs, stages, tasks).
+"""Per-query profile: where one registry query's wall time went, by layer.
 
-Runs one registry query exactly the way bench.py times it (``.count()``
-after an sf0.001 warmup pass) and then reads the UI REST API to break
-the wall clock into per-stage executor time — the empirical loop of
-guide §1.1 without leaving the terminal.
+Builds and runs each named query the way perfbench times it
+(``fn(spark, sf_dir)``, then ``groupBy().count().collect()``) after
+bench.py's sf0.001 warm-up, and prints perfbench's per-layer record of
+it (``perfbench/tracing.py``): build time and the jobs the build
+started, Catalyst phases, jobs/stages/tasks, executor and shuffle
+totals, Python-worker and streaming figures, and the wall time no
+layer accounts for.
 
 Usage:
-    python tools/profile_query.py <name> [<name> ...] [--sf DIR] [--noop]
+    python tools/profile_query.py <name> [<name> ...] [--sf DIR]
 
     --sf DIR   data directory (default /root/testdata/sf0.1)
-    --noop     time a noop-sink write instead of count() (computes every
-               column; count() is the bench's action and the default)
 
-Prints per query: wall seconds, job count, stage count, task count,
-total executor run time, and the top stages by executor time with
-their names — so "0.9 s wall, 0.1 s executor" reads as scheduling /
-planning overhead, not compute.
+Prints one JSON object: {name: {rows, wall_s, layers}}.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
 import time
-import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+
+from tracing import Tracer  # noqa: E402
+
+import bench  # noqa: E402
+from dissertation_data_pipeline_spark.plans.registry import QUERIES  # noqa: E402
+from dissertation_data_pipeline_spark.session import drop_blocks, get_spark  # noqa: E402
 
 
-def _api(spark, path: str):
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{base}/api/v1/applications/{app}/{path}", timeout=10) as r:
-        return json.load(r)
+def profile(spark, name: str, sf_dir: str) -> dict:
+    """One traced build + action of ``name``: the tracer's record, with
+    the per-layer numbers under ``layers``."""
+    tracer = Tracer(spark)
+    tracer.begin()
+    try:
+        rec = {"name": name, "j0": tracer.next_job(), "t0": time.time()}
+        t0 = time.perf_counter()
+        df = QUERIES[name].fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        rec["j1"], rec["t1"] = tracer.next_job(), time.time()
+        cdf = df.groupBy().count()
+        rows = cdf.collect()[0][0]
+        t2 = time.perf_counter()
+        rec["j2"], rec["t2"] = tracer.next_job(), time.time()
+        rec["catalyst"], rec["catalyst_spans"] = tracer.catalyst(cdf)
+        rec.update(build_s=t1 - t0, wall_s=t2 - t0, rows=rows)
+        tracer.attribute([rec])
+    finally:
+        tracer.close()
+        drop_blocks(spark)
+    return rec
 
 
 def main() -> None:
-    import argparse
-
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("names", nargs="+", help="registry query names")
     ap.add_argument("--sf", default="/root/testdata/sf0.1", help="data dir")
-    ap.add_argument(
-        "--noop", action="store_true",
-        help="time a noop-sink write instead of count()",
-    )
     args = ap.parse_args()
-    names, sf_dir, use_noop = args.names, args.sf, args.noop
-
-    from dissertation_data_pipeline_spark.plans.registry import QUERIES
-    from dissertation_data_pipeline_spark.session import drop_blocks, get_spark
+    unknown = [n for n in args.names if n not in QUERIES]
+    if unknown:
+        sys.exit(f"unknown queries: {' '.join(unknown)}")
 
     spark = get_spark("ddp-profile")
     spark.sparkContext.setLogLevel("ERROR")
+    bench.warm_up(spark, args.names, "/root/testdata/sf0.001")
+    drop_blocks(spark)
 
-    for name in names:
-        if name not in QUERIES:
-            print(f"unknown query {name!r}")
-            continue
-        # warmup (bench parity: JIT, codegen, Python workers)
+    out = {}
+    for name in args.names:
         try:
-            QUERIES[name].fn(spark, "/root/testdata/sf0.001").count()
-        except Exception as e:
-            print(f"{name}: warmup failed: {e}")
-        drop_blocks(spark)
-
-        jobs_before = {j["jobId"] for j in _api(spark, "jobs")}
-        stages_before = {s["stageId"] for s in _api(spark, "stages")}
-        spark.sparkContext.setJobDescription(f"profile:{name}")
-        t0 = time.perf_counter()
-        df = QUERIES[name].fn(spark, sf_dir)
-        t_build = time.perf_counter() - t0
-        if use_noop:
-            df.write.format("noop").mode("overwrite").save()
-        else:
-            df.count()
-        wall = time.perf_counter() - t0
-        spark.sparkContext.setJobDescription(None)
-
-        jobs = [j for j in _api(spark, "jobs") if j["jobId"] not in jobs_before]
-        stages = [
-            s for s in _api(spark, "stages") if s["stageId"] not in stages_before
-        ]
-        n_tasks = sum(s.get("numCompleteTasks", 0) for s in stages)
-        exec_ms = sum(s.get("executorRunTime", 0) for s in stages)
-        cpu_ms = sum(s.get("executorCpuTime", 0) for s in stages) / 1e6
-        fetch_ms = sum(s.get("shuffleFetchWaitTime", 0) for s in stages)
-        sread = sum(s.get("shuffleReadBytes", 0) for s in stages)
-        swrite = sum(s.get("shuffleWriteBytes", 0) for s in stages)
-        print(
-            f"\n=== {name}  wall={wall:.3f}s (build {t_build:.3f}s)  "
-            f"jobs={len(jobs)} stages={len(stages)} tasks={n_tasks}  "
-            f"execRun={exec_ms/1000:.2f}s cpu={cpu_ms/1000:.2f}s "
-            f"fetchWait={fetch_ms/1000:.2f}s  "
-            f"shuffle r/w={sread>>10}K/{swrite>>10}K"
-        )
-        top = sorted(stages, key=lambda s: -s.get("executorRunTime", 0))[:8]
-        for s in top:
-            nm = (s.get("description") or s.get("name", ""))[:90]
-            print(
-                f"  stage {s['stageId']:>5} run={s.get('executorRunTime',0)/1000:6.2f}s "
-                f"tasks={s.get('numCompleteTasks',0):>3} "
-                f"in={s.get('inputBytes',0)>>10}K sr={s.get('shuffleReadBytes',0)>>10}K "
-                f"sw={s.get('shuffleWriteBytes',0)>>10}K  {nm}"
-            )
-        drop_blocks(spark)
+            rec = profile(spark, name, args.sf)
+        except Exception as e:  # reported by name; the rest still run
+            out[name] = {"error": bench.error_text(e)}
+            continue
+        out[name] = {
+            "rows": rec["rows"],
+            "wall_s": round(rec["wall_s"], 4),
+            "layers": {k: round(v, 4) for k, v in rec["layers"].items()},
+        }
+    print(json.dumps(out, indent=1))
 
 
 if __name__ == "__main__":

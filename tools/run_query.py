@@ -33,7 +33,7 @@ def main() -> None:
     sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.01"
 
     from dissertation_data_pipeline_spark.plans.registry import QUERIES
-    from dissertation_data_pipeline_spark.session import get_spark
+    from dissertation_data_pipeline_spark.session import get_spark, plan_text
 
     if name not in QUERIES:
         sys.exit(f"unknown query {name!r}; run with no args to list")
@@ -48,27 +48,16 @@ def main() -> None:
     df.show(20, truncate=60)
 
     if "--plan" in flags:
-        print(df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            df._jdf.queryExecution(), "formatted"
-        ))
+        print(plan_text(df))
 
     if "--oracle" in flags:
         sql = QUERIES[name].sql
         if sql is None:
             print("-- no oracle registered (rows-only query)")
         else:
-            import duckdb
+            from dissertation_data_pipeline_spark.canon import oracle_connection
 
-            con = duckdb.connect()
-            for t in (
-                "region nation customer supplier part orders lineitem "
-                "events documents embeddings"
-            ).split():
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"'{os.path.join(sf_dir, t)}.parquet'"
-                )
-            orc = con.execute(sql).df()
+            orc = oracle_connection(sf_dir).execute(sql).df()
             print(f"-- oracle: {len(orc)} rows ({'MATCH' if len(orc) == n else 'MISMATCH'})")
             print(orc.head(5).to_string())
 
